@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at
   * $SPARK_GRAFT_SF_DIR, emits ONE JSON line. A short warmup (scan + tiny
@@ -42,7 +41,10 @@ import org.apache.spark.sql.SparkSession
   * but can never relax the baseline it is judged against.
   */
 object Bench {
-  private def jsonEscape(s: String): String =
+  /** JSON string-body escape: backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in a message or in builder-authored SQL
+    * (Verify's oracle_sql.json) would otherwise break the reader's parse. */
+  private[graft] def jsonEscape(s: String): String =
     s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -88,16 +90,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = Session.defaultCores
+    val spark = Session(cores)
     // Silence WindowExec's "No Partition Defined" WARN for THIS runner
     // only: the registered suite's unpartitioned windows are exactly the
     // deliberate, limit-bounded SmallRank.afterLimit sites, and the real
@@ -117,23 +111,7 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
-    // Warmup: `events` needs its dedicated loader (TIMESTAMP(NANOS) parquet
-    // is rejected by the vectorized reader; Tables.events reads nanos-as-long).
-    // The warm pass hashes every column of every table (`count()` alone
-    // would read only parquet footers), so the first timed query doesn't
-    // absorb page-cache faults and column-decode cold start on top of its
-    // own plan cost.
-    graft.model.Tables.names.foreach { t =>
-      try {
-        val df =
-          if (t == "events") graft.model.Tables.events(spark, sfDir)
-          else graft.model.Tables.load(spark, sfDir, t)
-        df.selectExpr("min(xxhash64(struct(*)))").count()
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] warmup failed for $t: ${e.getMessage}")
-      }
-    }
+    QTime.warmUp(spark, sfDir)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // TARGETED CLEANUP, not a periodic-GC tick: 289 queries × 2 passes
     // leave shuffle files, broadcast blocks and localCheckpoint RDDs
@@ -149,22 +127,6 @@ object Bench {
     // region (after the timing is taken), so the cleaner's reference
     // queue drains on schedule without taxing any query's measurement.
     val GC_EVERY = 24
-    def postQueryCleanup(idx: Int): Unit = {
-      // Checkpoint/cached RDD blocks are pinned until unpersisted;
-      // across a 289-query suite the accumulated blocks squeeze later
-      // queries' memory (q116 measured 2.3x slower in-suite than
-      // isolated before this). Dropped AFTER the timing so each
-      // query's measurement is independent of its own cleanup cost.
-      // StageCache-pinned ids (the q267/q276/q280 shared knn stages —
-      // bounded, metadata-scale relations) survive the sweep so the
-      // share holds across the pass; the retry loop below invalidates
-      // them so a re-measured query pays its full standalone cost.
-      val pinned = graft.ext.StageCache.pinnedRddIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!pinned.contains(id)) rdd.unpersist(blocking = false)
-      }
-      if (idx % GC_EVERY == GC_EVERY - 1) System.gc()
-    }
     // A query that throws gets a null timing (not its partial elapsed time),
     // so a fast-failing query can't deflate the total relative to a run
     // where it succeeds.
@@ -176,18 +138,24 @@ object Bench {
       SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map {
         case ((name, fn), idx) =>
         graft.ext.StageCache.resetTouched()
-        val t0 = System.nanoTime()
-        val res = try {
-          fn(spark, sfDir).count()
-          name -> Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
+        // Checkpoint/cached RDD blocks are pinned until unpersisted;
+        // across a 289-query suite the accumulated blocks squeeze later
+        // queries' memory (q116 measured 2.3x slower in-suite than
+        // isolated before this), so QTime.time sweeps them AFTER the
+        // timing. StageCache-pinned ids (the q267/q276/q280 shared knn
+        // stages — bounded, metadata-scale relations) survive the sweep
+        // so the share holds across the pass; the retry loop below
+        // invalidates them so a re-measured query pays its full
+        // standalone cost.
+        val res = name -> (QTime.time(spark, sfDir, fn) match {
+          case Right(t) => Some(t)
+          case Left(e) =>
             errors.getOrElseUpdate(name,
               Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-            name -> None
-        }
+            None
+        })
         if (graft.ext.StageCache.wasTouched) cacheInvolved += name
-        postQueryCleanup(idx)
+        if (idx % GC_EVERY == GC_EVERY - 1) System.gc()
         res
       }
     // Two full passes (default), per-query MINIMUM reported: steady-state
@@ -313,15 +281,7 @@ object Bench {
         // against warm history minima: a permanent false "regression"
         // for any cache-sharing query.
         graft.ext.StageCache.invalidateAll()
-        val times = (1 to 2).flatMap { _ =>
-          try {
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).count()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
-          finally spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
+        val times = (1 to 2).flatMap(_ => QTime.time(spark, sfDir, fn).toOption)
         if (times.isEmpty) None else Some(name -> times.min)
       }
     }.toMap
@@ -369,19 +329,11 @@ object Bench {
     // the canonical sf0.1 (at sf1 the loop would re-pay ~20 heavy
     // staging pipelines for no gate benefit).
     val standalone: Map[String, Double] =
-      if (!sfDir.endsWith("sf0.1") ||
-          sys.env.get("SPARK_GRAFT_STANDALONE").contains("0")) Map.empty
+      if (!sfDir.endsWith("sf0.1")) Map.empty
       else cacheInvolved.toSeq.flatMap { name =>
         SparkEntry.queries.get(name).flatMap { fn =>
           graft.ext.StageCache.invalidateAll()
-          val t = try {
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).count()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
-          finally spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          t.map(name -> _)
+          QTime.time(spark, sfDir, fn).toOption.map(name -> _)
         }
       }.toMap
     // LOAD GATE: a loaded bench machine inflates every query uniformly,
@@ -520,7 +472,7 @@ object Bench {
     // run) — it goes to the QUARANTINE file instead, with its ratio, so
     // repeated suspect runs remain visible and escalatable.
     val histLine =
-      s"""{"ts":${System.currentTimeMillis()},"cpus":"${jsonEscape(cpus)}","sf":"${jsonEscape(sfDir)}","queries":${
+      s"""{"ts":${System.currentTimeMillis()},"cpus":"$cores","sf":"${jsonEscape(sfDir)}","queries":${
         adjusted.collect { case (k, Some(v)) => "\"" + k + "\":" + v }
           .mkString("{", ",", "}")}}"""
     if (!loadSuspect) try {

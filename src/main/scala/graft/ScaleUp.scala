@@ -21,7 +21,7 @@
  * seeds) keep their size: only copy 0 falls below the thresholds. */
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 object ScaleUp {
@@ -32,12 +32,7 @@ object ScaleUp {
     val out = args.lift(1).getOrElse("/tmp/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     require(factor >= 1 && factor <= 100, s"factor out of [1,100]: $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     val copies = spark.range(factor).select(col("id").as("_c"))
 

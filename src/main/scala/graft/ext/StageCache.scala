@@ -31,11 +31,10 @@ import org.apache.spark.storage.StorageLevel
   * NOT — suppCustEdges, the quantity-ratings rollup, the per-doc NLL
   * relation and Baskets.items all grow ∝ input — so an entry-count cap
   * alone no longer bounds pinned storage (the r16 verdict's §5 memory-
-  * budget finding). The byte budget is scale-parameterised
-  * (`SPARK_GRAFT_STAGE_CACHE_MB`; default a quarter of the driver
-  * heap — comfortable at the bench SFs where the full staged
-  * population measures well under it, and an explicit dial for bigger
-  * corpora); when exceeded, the
+  * budget finding). The byte budget scales with the heap: a quarter of
+  * the driver heap, at least 512 MB — comfortable at the bench SFs
+  * where the full staged population measures well under it, and grown
+  * for bigger corpora by raising `SPARK_DRIVER_MEM`; when exceeded, the
   * least-recently-used entries are FORGOTTEN (never force-unpersisted —
   * see the eviction note below), so at worst sharing degrades to
   * re-staging, exactly the cold behaviour.
@@ -57,11 +56,11 @@ object StageCache {
   // point by Bench's per-query sweep (an evicted id is no longer
   // pinned) or by the ContextCleaner once the DataFrame is GC'd.
   private val MaxEntries = 96
-  // Byte budget over the sum of measured block sizes of live entries.
-  // Parameterised (env); the default is SCALE-ADAPTIVE — a quarter of
-  // the driver's max heap — because a flat cap fails in one direction
-  // or the other: the r17 sf1 gate run measured 5.04 GB of pinned
-  // staged blocks on an 8 GB heap (storage pool ~4.6 GB) and the q268
+  // Byte budget over the sum of measured block sizes of live entries,
+  // SCALE-ADAPTIVE — a quarter of the driver's max heap — because a
+  // flat cap fails in one direction or the other: the r17 sf1 gate run
+  // measured 5.04 GB of pinned staged blocks on an 8 GB heap (storage
+  // pool ~4.6 GB) and the q268
   // task allocations then OOM'd the whole context. heap/4 leaves the
   // unified memory manager real execution headroom at any heap size;
   // at the bench sf0.1 the full staged population peaks ~0.7 GB, well
@@ -73,12 +72,7 @@ object StageCache {
   // which only makes eviction earlier, never lets pinned storage
   // exceed the budget unnoticed.
   private val MaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_STAGE_CACHE_MB")
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .filter(_ > 0)
-      .map(_ * 1024L * 1024L)
-      .getOrElse(math.max(512L * 1024L * 1024L,
-        Runtime.getRuntime.maxMemory / 4))
+    math.max(512L * 1024L * 1024L, Runtime.getRuntime.maxMemory / 4)
   @volatile private var totalBytes = 0L
   // High-water mark of totalBytes: the number the budget is actually
   // judged against (end-of-run totals understate it — Bench's retry
@@ -187,7 +181,8 @@ object StageCache {
   /** Whether any getOrStage ran since [[resetTouched]]. */
   def wasTouched: Boolean = touchedFlag
 
-  /** Live pinned RDD ids — `Bench`'s per-query cleanup skips these. */
+  /** Live pinned RDD ids — the post-query sweep (`QTime.sweep`, run by
+    * Bench and QTime) skips these. */
   def pinnedRddIds: Set[Int] = synchronized {
     import scala.jdk.CollectionConverters._
     cache.values.asScala.filter(alive).map(_.rdd.id).toSet

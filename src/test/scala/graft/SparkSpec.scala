@@ -5,8 +5,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession fixture for all specs. One session per JVM
-  * (sbt forks a single test JVM), small parallelism, UTC — mirrors the
-  * Verify/Bench session configuration.
+  * (sbt forks a single test JVM), built by the runners' own
+  * [[graft.Session]] factory at small parallelism.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -15,19 +15,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  val Cores = 4
+
   lazy val session: SparkSession = {
     // Keep catalog artifacts (derby metastore, warehouse) out of the repo.
     val scratch = java.nio.file.Files.createTempDirectory("graft_spark").toString
     System.setProperty("derby.system.home", scratch)
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"$scratch/warehouse")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    System.setProperty("spark.sql.warehouse.dir", s"$scratch/warehouse")
+    Session(Cores)
   }
 }
