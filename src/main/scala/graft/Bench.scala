@@ -1,59 +1,43 @@
 package graft
 
-/** Driver-run benchmark: times every SparkEntry query at
-  * $SPARK_GRAFT_SF_DIR, emits ONE JSON line. A short warmup (scan + tiny
-  * agg per table) is run untimed first so the first timed query doesn't
-  * absorb JVM/codegen/scan cold-start; queries run in sorted name order so
-  * per-round numbers are comparable. Each query is timed over TWO full
-  * passes and reported as the per-query minimum (steady-state latency);
-  * the JSON carries `method` and both raw `pass_totals` so the
-  * measurement is self-describing.
+import graft.ext.StageCache
+import java.nio.file.{Files, Paths, StandardOpenOption => Open}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse}
+
+/** Suite benchmark: times every SparkEntry query at
+  * $SPARK_GRAFT_SF_DIR in sorted name order over `SPARK_GRAFT_PASSES`
+  * full passes (default 2), after an untimed table warm-up, and reports
+  * each query's minimum: the steady-state latency, robust to transient
+  * load on a shared machine. A query that fails in every pass gets a
+  * null time and an `errors` entry, so a fast failure cannot deflate the
+  * total.
   *
-  * Two JSON artifacts: `bench_out.json` in the working directory carries
-  * the FULL per-query map plus both pass totals; stdout gets only a
-  * COMPACT summary line (total, method, n_queries, errors, sf). The
-  * driver captures just the tail of stdout (~4 KB) — the 82-query map is
-  * ~5.5 KB and overflowed it in round 4 (`BENCH_r04.json parsed: null`),
-  * so the per-query detail must never ride on stdout. A query that
-  * throws is reported in an `errors` map (name -> message) instead of
-  * being silently timed.
+  * One JSON object is written twice: whole to `bench_out.json` in the
+  * working directory, and to stdout without its per-query maps, so the
+  * stdout line stays under 4 KB for a reader that keeps only the tail.
   *
-  * Regression gate — CROSS-ROUND: every run appends its per-query
-  * minima (plus sf, cpu count, timestamp) as one line to
-  * `bench_history.jsonl`, and the gate compares the current run against
-  * the SECOND-smallest prior value per query across ALL history lines
-  * with the same sf (the single smallest when only one exists) — not
-  * just the immediately preceding run, which the round-6 gate did and
-  * so was blind to multi-round drift (q07 doubled between rounds 5 and
-  * 6 with an empty `regressions` map); and not the raw historical
-  * minimum either, which one lucky outlier run can set so low that
-  * every later idle run reads as a 2× regression (q144's fate for a
-  * round). Any query slower than 2× that baseline (and by more than
-  * 0.5s absolute, so sub-second noise can't trip it) is RE-RUN up to
-  * twice in the same JVM after the suite and re-judged on the min over
-  * all passes (the in-process analogue of graft.QTime isolation); only
-  * flags that survive re-measurement land in the `regressions` map
-  * (name → ratio) on BOTH json lines — refuted flags are preserved in
-  * `suspect_regressions`, never asserted. The history
-  * file is seeded with the round-6 driver run; repeated idle runs
-  * tighten the baseline toward the true steady-state floor, which is
-  * the right direction — a loaded driver machine can inflate a run,
-  * but can never relax the baseline it is judged against.
+  * Regression gates: one rule ([[over]]) against two baselines, the
+  * per-query history in `bench_history.jsonl` and the QTime floors in
+  * BASELINE.md. A flagged query is re-run after the suite and judged on
+  * its minimum over all runs ([[adjudicate]]); only flags that survive
+  * are asserted, refuted ones are recorded but not asserted. A run that
+  * the load gate marks suspect never becomes a baseline: a loaded
+  * machine can inflate a run but never relax what later runs are judged
+  * against.
   */
 object Bench {
-  /** JSON string-body escape: backslash, quote, and ALL control chars
-    * (<0x20) — a tab or CR in a message or in builder-authored SQL
-    * (Verify's oracle_sql.json) would otherwise break the reader's parse. */
-  private[graft] def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  type Times = Seq[(String, Option[Double])]
+  type Ratios = Seq[(String, Double)]
+  type Run = Map[String, Double]
+
+  private val HistoryFile = "bench_history.jsonl"
+  private val QuarantineFile = "bench_quarantine.jsonl"
+
+  /** The canonical sf of a data dir is its basename: a trailing slash is
+    * ignored, and `/data/xsf0.1` is not sf0.1. */
+  private[graft] def sfName(sfDir: String): String =
+    new java.io.File(sfDir).getName
 
   /** QTime-floor rows parsed from BASELINE.md text, SF-SCOPED: the main
     * tables are measured at sf0.1; the sf1 table lives between explicit
@@ -63,430 +47,298 @@ object Bench {
     * sf1 block is excised before parsing; at an sf1 dir ONLY the block
     * is parsed (absent block → empty map → gate inactive); at any other
     * sf the gate is declared inactive. */
-  private[graft] def parseFloors(text: String,
-                                 sfDir: String): Map[String, Double] = {
+  private[graft] def parseFloors(text: String, sfDir: String): Run = {
     val pat = """\|\s*(q\w+)\s*\|\s*([0-9.]+)s\s*\|""".r
-    // exact-basename compare: a trailing slash or a dir merely ENDING
-    // in "sf1" (e.g. /data/xsf1) must not enable or mis-scope the gate
-    val base = new java.io.File(sfDir).getName
-    val isSf01 = base == "sf0.1"
-    val isSf1 = base == "sf1"
-    if (!isSf01 && !isSf1) Map.empty
-    else {
-      val begin = "<!-- SF1-FLOORS-BEGIN -->"
-      val end = "<!-- SF1-FLOORS-END -->"
-      val b = text.indexOf(begin)
-      val e = text.indexOf(end)
-      val scope =
-        if (isSf1) {
-          if (b >= 0 && e > b) text.substring(b + begin.length, e) else ""
-        } else if (b >= 0 && e > b)
-          text.substring(0, b) + text.substring(e + end.length)
-        else text
-      pat.findAllMatchIn(scope)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    val begin = "<!-- SF1-FLOORS-BEGIN -->"
+    val end = "<!-- SF1-FLOORS-END -->"
+    val b = text.indexOf(begin)
+    val e = text.indexOf(end)
+    val marked = b >= 0 && e > b
+    val scope = sfName(sfDir) match {
+      case "sf1" => if (marked) text.substring(b + begin.length, e) else ""
+      case "sf0.1" =>
+        if (marked) text.substring(0, b) + text.substring(e + end.length) else text
+      case _ => ""
+    }
+    pat.findAllMatchIn(scope).map(m => m.group(1) -> m.group(2).toDouble).toMap
+  }
+
+  /** Per-query times of a history (or quarantine) line recorded at `sf`;
+    * None for another sf or a corrupt line, which never poisons the
+    * rest. */
+  private[graft] def runAt(line: String, sf: String): Option[Run] =
+    try {
+      val j = parse(line)
+      (j \ "sf", j \ "queries") match {
+        case (JString(s), JObject(fields)) if sfName(s) == sf =>
+          Some(fields.collect { case (k, JDouble(v)) => k -> v }.toMap)
+        case _ => None
+      }
+    } catch { case _: Throwable => None }
+
+  /** StageCache calls so far: every getOrStage adds one build or one hit,
+    * so a change tells that a query staged or reused an entry. */
+  private[graft] def stageCalls: Long =
+    StageCache.stats match { case (_, builds, hits, _, _, _, _) => builds + hits }
+
+  /** The flag rule of both gates: slower than twice the baseline AND by
+    * more than 0.5 s. Sub-second queries swing 1.5–3× with in-suite
+    * JVM/GC state, and every flag with a smaller delta has isolated back
+    * to its floor in a fresh JVM; a regression that matters at scale
+    * clears half a second. */
+  private[graft] def over(base: Run)(name: String, t: Double): Boolean =
+    base.get(name).exists(b => b > 0 && t > 2 * b && t - b > 0.5)
+
+  /** Per-query history baseline: the second-smallest prior time, so one
+    * lucky outlier run cannot make every later run read as a
+    * regression; the only prior time when there is one. */
+  private[graft] def baseline(history: Seq[Run]): Run =
+    history.flatten.groupBy(_._1).map { case (k, vs) =>
+      val sorted = vs.map(_._2).sorted
+      k -> (if (sorted.size >= 2) sorted(1) else sorted.head)
+    }
+
+  /** Queries that either gate flags; they are re-run before
+    * [[adjudicate]]. */
+  private[graft] def flagged(minima: Times, history: Seq[Run],
+                             floors: Run): Seq[String] = {
+    val prior = baseline(history)
+    minima.collect {
+      case (name, Some(t)) if over(prior)(name, t) || over(floors)(name, t) => name
     }
   }
 
+  final case class Verdict(times: Times, regressions: Ratios,
+                           suspectRegressions: Ratios, floorViolations: Ratios,
+                           floorRefuted: Ratios, retried: Seq[String],
+                           loadRatio: Option[Double], loadStreak: Int) {
+    def loadSuspect: Boolean = loadStreak > 0
+  }
+
+  /** Judge the suite minima against both baselines, after the flagged
+    * queries' re-runs (`retryMin`: each one's minimum over its re-runs).
+    *
+    * A flag survives when the minimum over all runs still clears
+    * [[over]], and is reported as its ratio to the baseline. A history
+    * flag the re-runs refute becomes a suspect regression; a refuted
+    * floor flag lands in `floorRefuted` unless history already refuted
+    * it, so no flag is counted twice.
+    *
+    * Load gate: against each of the last 10 history runs that shares at
+    * least 50 queries with this one, compare the totals over the shared
+    * queries (suite composition changes, so whole totals don't compare).
+    * A median ratio above 1.5 means the whole suite slowed, which no
+    * single-query change does: the history survivors become suspect, and
+    * the run extends the streak of `priorStreak` quarantined runs. Floor
+    * violations stand either way. */
+  private[graft] def adjudicate(minima: Times, retryMin: Run,
+                                history: Seq[Run], floors: Run,
+                                priorStreak: Int): Verdict = {
+    val prior = baseline(history)
+    val retryFlagged = flagged(minima, history, floors)
+    val times = minima.map { case (name, t) =>
+      name -> (t ++ retryMin.get(name)).minOption
+    }
+    val current = times.collect { case (name, Some(t)) => name -> t }.toMap
+    // (survivors, refuted) of one baseline; `judged` names are left out
+    // of the refuted side.
+    def judge(base: Run, judged: Set[String]): (Ratios, Ratios) = {
+      def ratio(name: String) = name -> current(name) / base(name)
+      val survivors = times.collect {
+        case (name, Some(t)) if over(base)(name, t) => ratio(name)
+      }
+      val refuted = retryFlagged
+        .filterNot(n => judged(n) || survivors.exists(_._1 == n))
+        .filter(base.contains).map(ratio)
+      (survivors, refuted)
+    }
+    val (raw, historyRefuted) = judge(prior, Set.empty)
+    val (floorViolations, floorRefuted) =
+      judge(floors, historyRefuted.map(_._1).toSet)
+    val loadRatio = {
+      val ratios = history.takeRight(10).flatMap { run =>
+        val shared = run.keySet.intersect(current.keySet).toSeq
+        val historyTotal = shared.map(run).sum
+        if (shared.size < 50 || historyTotal <= 0) None
+        else Some(shared.map(current).sum / historyTotal)
+      }.sorted
+      ratios.lift(ratios.size / 2)
+    }
+    val loadSuspect = loadRatio.exists(_ > 1.5)
+    Verdict(times,
+      regressions = if (loadSuspect) Nil else raw,
+      suspectRegressions = (if (loadSuspect) raw else Nil) ++ historyRefuted,
+      floorViolations, floorRefuted, retryMin.keys.toSeq.sorted, loadRatio,
+      loadStreak = if (loadSuspect) priorStreak + 1 else 0)
+  }
+
+  private def round2(v: Double): JValue =
+    JDouble(BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)
+
+  private def ratios(m: Ratios): JObject =
+    JObject(m.map { case (k, v) => k -> round2(v) }.toList)
+
+  /** A JSON object of the fields that have a value (not JNothing). */
+  private def obj(fields: List[JField]): JObject =
+    JObject(fields.filter(_._2 != JNothing))
+
+  /** An empty object or array as JNothing, so [[obj]] leaves it out. */
+  private def unlessEmpty(j: JValue): JValue =
+    if (j.children.isEmpty) JNothing else j
+
+  /** Seconds per query, null for a query that failed. */
+  private def timesJson(ts: Times): JObject =
+    JObject(ts.map { case (k, t) => k -> t.fold[JValue](JNull)(JDouble(_)) }.toList)
+
+  /** The verdict's fields, in line order; empty maps and the load fields
+    * of a run that is not load-suspect are left out. A streak of load
+    * suspects is how a real change to shared infrastructure that slows
+    * the whole suite would look, so it is escalated instead of being
+    * filed as load forever. */
+  private[graft] def verdictFields(v: Verdict,
+                                   floorGateActive: Boolean): List[JField] =
+    obj(List(
+      "regressions" -> ratios(v.regressions),
+      "retried" -> unlessEmpty(JArray(v.retried.map(JString(_)).toList)),
+      "suspect_regressions" -> unlessEmpty(ratios(v.suspectRegressions)),
+      "floor_gate_active" -> JBool(floorGateActive),
+      "floor_violations" -> unlessEmpty(ratios(v.floorViolations)),
+      "floor_refuted" -> unlessEmpty(ratios(v.floorRefuted))) ++
+      (if (!v.loadSuspect) Nil
+       else List(
+         "load_suspect" -> JBool(true),
+         "load_ratio_vs_history" -> round2(v.loadRatio.get),
+         "load_suspect_streak" -> JInt(v.loadStreak),
+         "global_slowdown_suspect" ->
+           (if (v.loadStreak >= 2) JBool(true) else JNothing)))).obj
+
+  /** The stdout line: the full object without its per-query detail,
+    * which only the file carries. */
+  private[graft] def compactOf(full: JObject): JObject =
+    JObject(full.obj.filterNot { case (k, _) => Set("queries", "standalone", "stage_cache")(k) })
+
+  /** The UTF-8 lines of `file`; none when it is absent or unreadable. */
+  private def readLines(file: String): List[String] =
+    scala.util.Using(scala.io.Source.fromFile(file)(scala.io.Codec.UTF8))(_.getLines().toList)
+      .getOrElse(Nil)
+
+  /** Write `json` as one line; a failed write never fails the run. */
+  private def writeLine(file: String, json: JValue, append: Boolean): Unit =
+    try Files.writeString(Paths.get(file), compact(json) + "\n", Open.CREATE,
+      if (append) Open.APPEND else Open.TRUNCATE_EXISTING)
+    catch { case _: Throwable => () }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sf = sfName(sfDir)
     val cores = Session.defaultCores
     val spark = Session(cores)
-    // Silence WindowExec's "No Partition Defined" WARN for THIS runner
-    // only: the registered suite's unpartitioned windows are exactly the
-    // deliberate, limit-bounded SmallRank.afterLimit sites, and the real
-    // gate is PlanSpec's suite-wide window audit — but ~40 repeats of the
-    // same warning bury the bench tail (and any FUTURE real warning from
-    // a different logger) under noise. Verify/tests keep the default
-    // level, so an accidental unpartitioned window still surfaces there.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // Likewise the iterative graph operators' per-round localCheckpoint
-    // emits one "RDD N was locally checkpointed, its lineage has been
-    // truncated" WARN per unpersist — dozens per suite run, burying the
-    // bench tail (the round-8 record's stdout tail was 90% this line).
-    // The truncation is deliberate (lineage cuts are the point of the
-    // checkpoint); bench runner only, Verify/tests keep the default.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
+    // Two warnings repeat dozens of times per suite and bury the tail of
+    // the output: WindowExec's "No Partition Defined" for the suite's
+    // deliberate, limit-bounded unpartitioned windows (PlanSpec's window
+    // audit is the real gate), and the lineage-truncated notice on every
+    // unpersist of a per-round localCheckpoint, where the cut is the
+    // point. This runner only: Verify and the specs keep the defaults.
+    Seq("org.apache.spark.sql.execution.window.WindowExec",
+      "org.apache.spark.rdd.MapPartitionsRDD").foreach(
+      org.apache.logging.log4j.core.config.Configurator.setLevel(_,
+        org.apache.logging.log4j.Level.ERROR))
     QTime.warmUp(spark, sfDir)
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // TARGETED CLEANUP, not a periodic-GC tick: 289 queries × 2 passes
-    // leave shuffle files, broadcast blocks and localCheckpoint RDDs
-    // whose cleanup rides ContextCleaner WEAK REFERENCES — reclaimed
-    // only after a GC notices them. With an 8g heap and mostly-short
-    // queries, full GCs were rare enough that the round-12 suite OOM'd
-    // mid-pass-2 on accumulated state. Round 12's fix was
-    // spark.cleaner.periodicGC.interval=45s, which bounded the backlog
-    // but landed full-GC pauses INSIDE timed query passes — the
-    // round-12 suite ran 1.21× its round-11 shared-query total with no
-    // per-query plan change. This replaces the tick: an explicit
-    // System.gc() every GC_EVERY queries, issued OUTSIDE the timed
-    // region (after the timing is taken), so the cleaner's reference
-    // queue drains on schedule without taxing any query's measurement.
-    val GC_EVERY = 24
-    // A query that throws gets a null timing (not its partial elapsed time),
-    // so a fast-failing query can't deflate the total relative to a run
-    // where it succeeds.
-    // Queries whose plan construction hit StageCache (as builder OR
-    // rider) — collected during the suite so the standalone loop below
-    // knows which suite minima are warm numbers.
+    // Cleanup of shuffle files, broadcasts and checkpoint RDDs rides the
+    // ContextCleaner's weak references, so it waits for a GC; without one
+    // the backlog OOMs a long suite, and a periodic-GC interval lands its
+    // pauses inside timed queries. An explicit GC every GcEvery queries,
+    // outside any timing, drains it on schedule.
+    val GcEvery = 24
+    // Queries that staged or reused a StageCache entry: their suite
+    // minima are warm numbers.
     val cacheInvolved = scala.collection.mutable.TreeSet.empty[String]
-    def onePass(): Seq[(String, Option[Double])] =
+    def onePass(): Seq[(String, Either[Throwable, Double])] =
       SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map {
         case ((name, fn), idx) =>
-        graft.ext.StageCache.resetTouched()
-        // Checkpoint/cached RDD blocks are pinned until unpersisted;
-        // across a 289-query suite the accumulated blocks squeeze later
-        // queries' memory (q116 measured 2.3x slower in-suite than
-        // isolated before this), so QTime.time sweeps them AFTER the
-        // timing. StageCache-pinned ids (the q267/q276/q280 shared knn
-        // stages — bounded, metadata-scale relations) survive the sweep
-        // so the share holds across the pass; the retry loop below
-        // invalidates them so a re-measured query pays its full
-        // standalone cost.
-        val res = name -> (QTime.time(spark, sfDir, fn) match {
-          case Right(t) => Some(t)
-          case Left(e) =>
-            errors.getOrElseUpdate(name,
-              Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-            None
-        })
-        if (graft.ext.StageCache.wasTouched) cacheInvolved += name
-        if (idx % GC_EVERY == GC_EVERY - 1) System.gc()
-        res
+          val calls = stageCalls
+          val t = QTime.time(spark, sfDir, fn)
+          if (stageCalls != calls) cacheInvolved += name
+          if (idx % GcEvery == GcEvery - 1) System.gc()
+          name -> t
       }
-    // Two full passes (default), per-query MINIMUM reported: steady-state
-    // latency, the number a resident engine (the reference's always-on
-    // ClickHouse) is measured by — and robust to transient load spikes on
-    // a shared bench machine, which single-shot timings conflate with
-    // plan cost. Methodology is declared in the JSON (`method`, plus the
-    // raw pass totals) so round-over-round comparisons stay
-    // interpretable. SPARK_GRAFT_PASSES overrides the pass count (used
-    // for the one-shot sf1 scaling run, where a second 10×-data pass
-    // buys no extra signal at twice the wall-clock).
-    val nPasses = sys.env.get("SPARK_GRAFT_PASSES")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1)
-      .getOrElse(2)
-    val passes: Seq[Seq[(String, Option[Double])]] =
-      (1 to nPasses).map(_ => onePass())
-    val results: Seq[(String, Option[Double])] =
-      passes.head.indices.map { i =>
-        val name = passes.head(i)._1
-        name -> passes.flatMap(p => p(i)._2).reduceOption[Double](math.min)
-      }
-    // A query stays in `errors` only if BOTH passes failed — one good
-    // timing means the query ran; a transient single-pass failure must
-    // not make a fully-timed run read as failed.
-    results.foreach { case (name, t) => if (t.isDefined) errors.remove(name) }
-    // Baseline per query across ALL history runs at this sf: the
-    // SECOND-smallest prior value when two or more samples exist (one
-    // lucky outlier run must not poison the gate for every later run —
-    // q144 spent a round flagged at 2x against a single fast sample
-    // that no later idle run could reproduce), else the single prior.
-    // Absent / corrupt file or lines -> no baseline, no flags; a
-    // corrupt line never poisons the rest.
-    val historyFile = "bench_history.jsonl"
-    // Each prior run at this sf as its own per-query map (per-LINE maps
-    // are needed twice: flattened for the per-query baseline, and kept
-    // whole for the load gate's shared-query totals).
-    val historyRuns: List[Map[String, Double]] = {
-      import org.json4s._
-      val lines = try {
-        val src = scala.io.Source.fromFile(historyFile)
-        try src.getLines().toList finally src.close()
-      } catch { case _: Throwable => Nil }
-      lines.flatMap { line =>
-        try {
-          val j = org.json4s.jackson.JsonMethods.parse(line)
-          (j \ "sf", j \ "queries") match {
-            case (JString(s), JObject(fields)) if s == sfDir =>
-              Some(fields.collect { case (k, JDouble(v)) => k -> v }.toMap)
-            case _ => None
-          }
-        } catch { case _: Throwable => None }
-      }
+    val nPasses = QTime.passes(default = 2)
+    val passes = (1 to nPasses).map(_ => onePass())
+    val perQuery = passes.transpose
+    val minima: Times =
+      perQuery.map(runs => runs.head._1 -> runs.flatMap(_._2.toOption).minOption)
+    // A query is an error only when every pass failed: one good timing
+    // means it ran.
+    val errors = perQuery.collect {
+      case runs @ (name, Left(e)) +: _ if runs.forall(_._2.isLeft) =>
+        name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
     }
-    val prior: Map[String, Double] =
-      historyRuns.flatten.groupBy(_._1).map { case (k, vs) =>
-        val sorted = vs.map(_._2).sorted
-        k -> (if (sorted.size >= 2) sorted(1) else sorted.head)
-      }
-    // Absolute-delta noise floor 0.5s: across 30+ history runs, EVERY
-    // flag whose delta was under half a second (q48 0.25→0.65, q110,
-    // q111, q145, q149, q76, …) isolated back to its floor in a fresh
-    // JVM (graft.QTime) — sub-second queries swing 1.5–3× with in-suite
-    // JVM/GC state, so a 2×-with-0.2s-delta gate produced only false
-    // positives. A real regression on any query whose cost matters at
-    // scale clears 0.5s; smaller drifts are still visible in
-    // bench_history for cross-round reading.
-    def flagged(name: String, t: Double): Boolean =
-      prior.get(name).exists(p => p > 0 && t > 2 * p && t - p > 0.5)
-    // FLOOR RULE (round-10 blind spot): the history gate compares
-    // against prior SUITE readings, which carry the same 1.3–1.7× suite
-    // pressure — so a heavy query can ship at 2.3× its fresh-JVM floor
-    // while staying under 2× of history (q227 at 10.04s in BENCH_r10,
-    // never retried; isolation measured 3.32s). BASELINE.md's
-    // isolation-floors table is the credibility rule's source of truth;
-    // parse it here (| qNNN_name | X.XXs | rows) so a suite reading
-    // exceeding 2× a query's floor is ALSO auto-retried, and one that
-    // survives retry is stamped into `floor_violations` — the official
-    // artifact never carries an unadjudicated floor violation again.
-    val floors: Map[String, Double] =
-      try {
-        // Explicit UTF-8: BASELINE.md carries non-ASCII prose (em dashes),
-        // and under a POSIX-locale JVM the default-charset decoder throws
-        // MalformedInputException — which the catch below would silently
-        // turn into a disabled gate (exactly how the round-12 local bench
-        // ran with floor_gate_active:false).
-        val src = scala.io.Source.fromFile("BASELINE.md")(scala.io.Codec.UTF8)
-        val text = try src.mkString finally src.close()
-        Bench.parseFloors(text, sfDir)
-      } catch { case _: Throwable => Map.empty[String, Double] }
-    // A silently-empty floors map would disable the credibility gate with
-    // no trace (BASELINE.md renamed, cwd drift, table format change) — so
-    // the gate's liveness is stamped into the artifact and warned on
-    // stderr, never inferred.
-    val floorGateActive = floors.nonEmpty
-    if (!floorGateActive)
+    val history = readLines(HistoryFile).flatMap(runAt(_, sf))
+    // BASELINE.md carries non-ASCII prose: read as anything but UTF-8,
+    // a decode failure would silently disable the gate.
+    val floors = parseFloors(readLines("BASELINE.md").mkString("\n"), sfDir)
+    if (floors.isEmpty)
       System.err.println(
         "WARN graft.Bench: no QTime floors parsed from BASELINE.md — " +
           "the floor credibility gate is INACTIVE for this run")
-    def floorFlagged(name: String, t: Double): Boolean =
-      floors.get(name).exists(f => f > 0 && t > 2 * f && t - f > 0.5)
-    // AUTO-ADJUDICATION of per-query flags (the rounds-8/9 blind spot:
-    // the official record twice shipped flags — q181 2.81x, q222 4.22x —
-    // that isolation runs later disproved; a transient load spike can
-    // straddle BOTH timed passes of one query while the run-total load
-    // gate below still passes). Any query whose min-of-2 clears the flag
-    // gate is re-run up to two more times in this same JVM, after the
-    // full suite (the in-process analogue of the graft.QTime isolation
-    // check), and its reported time becomes the min over ALL passes. A
-    // flag the re-runs refute is recorded in `suspect_regressions`
-    // (with its refuted ratio) instead of `regressions` — only flags
-    // that SURVIVE re-measurement are asserted.
-    val retryFlagged: Seq[String] = results.collect {
-      case (name, Some(t)) if flagged(name, t) || floorFlagged(name, t) => name
+    // The minimum of `runs` timings of `name` after dropping StageCache.
+    def afterInvalidate(name: String, runs: Int): Option[Double] = {
+      StageCache.invalidateAll()
+      (1 to runs).flatMap(_ => QTime.time(spark, sfDir, SparkEntry.queries(name)).toOption)
+        .minOption
     }
-    val retryMin: Map[String, Double] = retryFlagged.flatMap { name =>
-      SparkEntry.queries.get(name).flatMap { fn =>
-        // Drop the StageCache ONCE before the attempts: attempt 1 pays
-        // the full standalone staging cost (no riding blocks a suite
-        // pass left warm), attempt 2 rides what attempt 1 re-staged —
-        // so retryMin lands on the same warm steady state the suite
-        // and the history baseline measure. Invalidating before EVERY
-        // attempt would make retryMin a standalone reading compared
-        // against warm history minima: a permanent false "regression"
-        // for any cache-sharing query.
-        graft.ext.StageCache.invalidateAll()
-        val times = (1 to 2).flatMap(_ => QTime.time(spark, sfDir, fn).toOption)
-        if (times.isEmpty) None else Some(name -> times.min)
-      }
-    }.toMap
-    val adjusted: Seq[(String, Option[Double])] = results.map {
-      case (name, Some(t)) if retryMin.contains(name) =>
-        name -> Some(math.min(t, retryMin(name)))
-      case other => other
-    }
-    val rawRegressions = adjusted.collect {
-      case (name, Some(t)) if flagged(name, t) => name -> t / prior(name)
-    }
-    // Flags the retry refuted: preserved as suspect, never asserted.
-    val retryRefuted = retryFlagged.filterNot(rawRegressions.map(_._1).contains)
-      .flatMap(n => adjusted.collectFirst {
-        case (`n`, Some(t)) if prior.contains(n) => n -> t / prior(n) })
-    // Floor violations that SURVIVED the retry: the final min-over-all-
-    // passes still exceeds 2× the BASELINE.md isolation floor. Stamped
-    // (name → ratio vs floor) so the record is self-adjudicating.
-    val floorViolations = adjusted.collect {
-      case (name, Some(t)) if floorFlagged(name, t) => name -> t / floors(name)
-    }
-    // Floor-only flags the retry refuted (post-retry min back under 2×
-    // floor). Without this, a brand-new floor-listed query with no bench
-    // history that flags and is refuted would appear in `retried` but in
-    // neither `suspect_regressions` (needs history) nor
-    // `floor_violations` — an unadjudicated retry. Recorded as
-    // name → post-retry ratio vs floor. Names already adjudicated via
-    // `retryRefuted` (the history-gate side) are EXCLUDED here — a query
-    // flagged by both gates and refuted once must not be double-counted
-    // by artifact consumers tallying adjudicated flags.
-    val floorRefuted = retryFlagged
-      .filterNot(floorViolations.map(_._1).contains)
-      .filterNot(retryRefuted.map(_._1).contains)
-      .flatMap(n => adjusted.collectFirst {
-        case (`n`, Some(t)) if floors.contains(n) => n -> t / floors(n) })
-    // STANDALONE readings for cache-sharing queries (round-13 verdict
-    // ask): a StageCache-riding query's suite min-of-2 is a WARM number
-    // (q280 reads 0.31s against its 4.02s standalone floor) and
-    // cross-round diff tools read bench_out.json — so every
-    // cache-involved query is re-timed ONCE, cold, after
-    // invalidateAll(), and the map is emitted beside `queries` in the
-    // file artifact. The headline total, the flags and bench_history
-    // all keep the suite (warm) semantics unchanged; floors in
-    // BASELINE.md correspond to THESE standalone readings. Runs only at
-    // the canonical sf0.1 (at sf1 the loop would re-pay ~20 heavy
-    // staging pipelines for no gate benefit).
-    val standalone: Map[String, Double] =
-      if (!sfDir.endsWith("sf0.1")) Map.empty
-      else cacheInvolved.toSeq.flatMap { name =>
-        SparkEntry.queries.get(name).flatMap { fn =>
-          graft.ext.StageCache.invalidateAll()
-          QTime.time(spark, sfDir, fn).toOption.map(name -> _)
-        }
-      }.toMap
-    // LOAD GATE: a loaded bench machine inflates every query uniformly,
-    // which the per-query 2x gate misreads as a wall of regressions (the
-    // round-8 driver record carried 15 spurious >2x entries while the
-    // identical suite ran at its round-7 times three hours later on an
-    // idle box). Detector: against each recent history run, compare this
-    // run's total over the SHARED query set (suite composition changes
-    // across rounds, so whole-suite totals are not comparable) with that
-    // run's total over the same set; take the MEDIAN ratio over the
-    // comparable runs (>=50 shared queries each) among the last 10
-    // history lines — fewer than 10 ratios when some of those lines
-    // share too few queries. A median ratio
-    // > 1.5 means the whole suite — not any one query — slowed, which no
-    // single-query code change does: the run is load-suspect. Then:
-    // per-query flags move to `suspect_regressions` (preserved, not
-    // asserted), `load_suspect`:true + the ratio are stamped on both
-    // JSON lines, and the run is NOT appended to bench_history (an
-    // inflated run must never become a future baseline — the converse of
-    // the "idle runs tighten the baseline" rule above).
-    val currentByName: Map[String, Double] =
-      adjusted.collect { case (k, Some(v)) => k -> v }.toMap
-    val loadRatio: Option[Double] = {
-      val ratios = historyRuns.takeRight(10).flatMap { run =>
-        val shared = run.keySet.intersect(currentByName.keySet)
-        if (shared.size < 50) None
-        else {
-          val histTot = shared.toSeq.map(run).sum
-          val curTot = shared.toSeq.map(currentByName).sum
-          if (histTot > 0) Some(curTot / histTot) else None
-        }
-      }.sorted
-      if (ratios.isEmpty) None else Some(ratios(ratios.size / 2))
-    }
-    val loadSuspect = loadRatio.exists(_ > 1.5)
-    val regressions = if (loadSuspect) Nil else rawRegressions
-    val suspectRegressions =
-      (if (loadSuspect) rawRegressions else Nil) ++ retryRefuted
-    // Locale.ROOT: a comma-decimal default locale would print "2,13"
-    // and corrupt both JSON lines.
-    def ratioMapJson(m: Seq[(String, Double)]): String = m
-      .map { case (k, v) =>
-        "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.2f",
-          Double.box(v))
-      }
-      .mkString("{", ",", "}")
-    val regJson = ratioMapJson(regressions)
-    // Quarantined-run streak: consecutive trailing load-suspect runs at
-    // this sf (counting this one). One suspect run is machine load; a
-    // STREAK of >1.5x ratios across runs is how a real change to shared
-    // infrastructure (Tables.fanOut, session config, checkpoint posture)
-    // that slows the whole suite would present — the quarantine file
-    // preserves those runs (excluded from baselines) and the streak
-    // count is stamped into the official record so it gets escalated as
-    // a possible global regression instead of being permanently misfiled
-    // as load.
-    val quarantineFile = "bench_quarantine.jsonl"
-    val loadStreak: Int =
-      if (!loadSuspect) 0
-      else {
-        val priorStreak = try {
-          val src = scala.io.Source.fromFile(quarantineFile)
-          val lines = try src.getLines().toList finally src.close()
-          lines.reverse.takeWhile(_.contains("\"sf\":\"" + sfDir + "\"")).size
-        } catch { case _: Throwable => 0 }
-        priorStreak + 1
-      }
-    val loadJson = {
-      val retriedPart =
-        if (retryMin.nonEmpty)
-          retryMin.keys.toSeq.sorted
-            .map("\"" + _ + "\"").mkString(""","retried":[""", ",", "]")
-        else ""
-      val suspectPart =
-        if (suspectRegressions.nonEmpty)
-          s""","suspect_regressions":${ratioMapJson(suspectRegressions)}"""
-        else ""
-      val floorPart =
-        s""","floor_gate_active":$floorGateActive""" +
-          (if (floorViolations.nonEmpty)
-            s""","floor_violations":${ratioMapJson(floorViolations)}"""
-          else "") +
-          (if (floorRefuted.nonEmpty)
-            s""","floor_refuted":${ratioMapJson(floorRefuted)}"""
-          else "")
-      val loadPart =
-        if (loadSuspect)
-          s""","load_suspect":true,"load_ratio_vs_history":${
-            String.format(java.util.Locale.ROOT, "%.2f",
-              Double.box(loadRatio.get))},"load_suspect_streak":$loadStreak""" +
-            (if (loadStreak >= 2) s""","global_slowdown_suspect":true""" else "")
-        else ""
-      retriedPart + suspectPart + floorPart + loadPart
-    }
-    val qs = adjusted.map { case (k, v) => "\"" + k + "\":" + v.fold("null")(_.toString) }
-      .mkString("{", ",", "}")
-    val standaloneJson =
-      if (standalone.isEmpty) ""
-      else standalone.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString(""","standalone":{""", ",", "}")
-    // StageCache honesty counters: evictions > 0 in a suite run means
-    // the LRU is undersized for the live key population (a warm reading
-    // silently became a rebuild — the r15 q34 swing's hypothesized
-    // mechanism); dead_rebuilds > 0 means pinned blocks were dropped
-    // under a live memo. Stamped so the adjudication is per-run data.
-    val stageCacheJson = {
-      val (scSize, scBuilds, scHits, scEvict, scDead, scBytes, scPeak) =
-        graft.ext.StageCache.stats
-      s""","stage_cache":{"entries":$scSize,"builds":$scBuilds,""" +
-        s""""hits":$scHits,"evictions":$scEvict,"dead_rebuilds":$scDead,""" +
-        s""""bytes":$scBytes,"peak_bytes":$scPeak}"""
-    }
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + jsonEscape(v) + "\"" }
-      .mkString("{", ",", "}")
-    val total = adjusted.flatMap(_._2).sum
-    val passTotals = passes
-      .map(p => p.flatMap(_._2).sum).mkString("[", ",", "]")
-    val nQueries = adjusted.size
-    val method = s"min-of-$nPasses"
-    // Full detail (per-query map + pass totals) only in the file; the
-    // stdout line must stay well under the driver's ~4 KB tail capture.
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","method":"$method","n_queries":$nQueries,"pass_totals":$passTotals,"queries":$qs$standaloneJson$stageCacheJson,"errors":$errJson,"regressions":$regJson$loadJson,"sf":"${jsonEscape(sfDir)}"}"""
-    val compactLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","method":"$method","n_queries":$nQueries,"pass_totals":$passTotals,"errors":$errJson,"regressions":$regJson$loadJson,"sf":"${jsonEscape(sfDir)}"}"""
-    try {
-      val w = new java.io.PrintWriter("bench_out.json")
-      try w.println(fullLine) finally w.close()
-    } catch { case _: Throwable => () }
-    // Append this run's minima to the cross-round history (queries with
-    // both passes failed are omitted — a null can't become a baseline).
-    // A load-suspect run is NOT appended to the baseline history (an
-    // inflated sample would both loosen future per-query baselines and
-    // skew the load gate's own median toward accepting the next loaded
-    // run) — it goes to the QUARANTINE file instead, with its ratio, so
-    // repeated suspect runs remain visible and escalatable.
-    val histLine =
-      s"""{"ts":${System.currentTimeMillis()},"cpus":"$cores","sf":"${jsonEscape(sfDir)}","queries":${
-        adjusted.collect { case (k, Some(v)) => "\"" + k + "\":" + v }
-          .mkString("{", ",", "}")}}"""
-    if (!loadSuspect) try {
-      val w = new java.io.FileWriter(historyFile, true)
-      try w.write(histLine + "\n") finally w.close()
-    } catch { case _: Throwable => () }
-    else try {
-      val qLine = histLine.dropRight(1) +
-        s""","load_ratio_vs_history":${String.format(java.util.Locale.ROOT,
-          "%.2f", Double.box(loadRatio.get))}}"""
-      val w = new java.io.FileWriter(quarantineFile, true)
-      try w.write(qLine + "\n") finally w.close()
-    } catch { case _: Throwable => () }
+    // A load spike can straddle both passes of one query while the
+    // run-level load gate passes, so each flag is re-measured: two more
+    // runs in this JVM after the suite. StageCache is dropped once, before
+    // them: the first pays full staging, the second rides what the first
+    // re-staged, the same warm state the suite and history measure.
+    // Dropping it before every run would judge a standalone time against
+    // warm history, a permanent false flag for any cache-sharing query.
+    val retryMin: Run = flagged(minima, history, floors)
+      .flatMap(name => afterInvalidate(name, runs = 2).map(name -> _)).toMap
+    // A cache-sharing query's suite minimum is warm; BASELINE.md's floors
+    // are standalone, so each one is re-timed once, cold, for the file.
+    // Only at sf0.1: at sf1 it would re-pay every heavy staging pipeline
+    // for no gate.
+    val standalone: Times =
+      if (sf != "sf0.1") Nil
+      else cacheInvolved.toSeq.map(name => name -> afterInvalidate(name, runs = 1))
+    val priorStreak =
+      readLines(QuarantineFile).reverse.takeWhile(runAt(_, sf).nonEmpty).size
+    val v = adjudicate(minima, retryMin, history, floors, priorStreak)
+    val (entries, builds, hits, evictions, deadRebuilds, bytes, peakBytes) =
+      StageCache.stats
+    val full = obj(List(
+      "metric" -> JString("total"),
+      "value" -> JDouble(v.times.flatMap(_._2).sum),
+      "unit" -> JString("sec"),
+      "method" -> JString(s"min-of-$nPasses"),
+      "n_queries" -> JInt(v.times.size),
+      "pass_totals" -> JArray(passes.map(p => JDouble(p.flatMap(_._2.toOption).sum)).toList),
+      "queries" -> timesJson(v.times),
+      "standalone" -> unlessEmpty(timesJson(standalone.filter(_._2.isDefined))),
+      // evictions > 0 means the LRU is undersized for the live key
+      // population (a warm reading silently became a rebuild);
+      // dead_rebuilds > 0 means pinned blocks were dropped under a live
+      // memo.
+      "stage_cache" -> JObject("entries" -> JInt(entries), "builds" -> JInt(builds),
+        "hits" -> JInt(hits), "evictions" -> JInt(evictions),
+        "dead_rebuilds" -> JInt(deadRebuilds), "bytes" -> JInt(bytes),
+        "peak_bytes" -> JInt(peakBytes)),
+      "errors" -> JObject(errors.map { case (k, e) => k -> JString(e) }.toList)) ++
+      verdictFields(v, floors.nonEmpty) :+ ("sf" -> JString(sfDir)))
+    writeLine("bench_out.json", full, append = false)
+    // Queries that failed in every pass are left out: a null can't be a
+    // baseline. A load-suspect run is quarantined instead of appended: it
+    // would loosen later baselines and pull the load gate's own median
+    // toward accepting the next loaded run.
+    val run = obj(List("ts" -> JInt(System.currentTimeMillis()),
+      "cpus" -> JString(cores.toString), "sf" -> JString(sfDir),
+      "queries" -> timesJson(v.times.filter(_._2.isDefined)),
+      "load_ratio_vs_history" ->
+        (if (v.loadSuspect) round2(v.loadRatio.get) else JNothing)))
+    writeLine(if (v.loadSuspect) QuarantineFile else HistoryFile, run, append = true)
     spark.stop()
-    println(compactLine)
+    println(compact(compactOf(full)))
   }
 }

@@ -58,6 +58,12 @@ object QTime {
     }
   }
 
+  /** Timed passes per query: `SPARK_GRAFT_PASSES` when it is a positive
+    * integer, else `default`. */
+  def passes(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_PASSES").flatMap(_.toIntOption).filter(_ >= 1)
+      .getOrElse(default)
+
   /** Seconds for `fn(spark, sfDir).count()`, or what it threw; the sweep
     * runs after the clock stops, so cleanup never lands in a timing. */
   def time(spark: SparkSession, sfDir: String,
@@ -73,13 +79,13 @@ object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val queries = select(SparkEntry.queries, args.drop(1).toSeq)
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "4").toInt
+    val nPasses = passes(default = 4)
     val explain = sys.env.get("GRAFT_EXPLAIN").contains("1")
     val spark = Session()
     spark.sparkContext.setLogLevel("ERROR")
     warmUp(spark, sfDir)
     queries.foreach { case (name, fn) =>
-      val times = (1 to passes).map(_ => time(spark, sfDir, fn).toTry.get)
+      val times = (1 to nPasses).map(_ => time(spark, sfDir, fn).toTry.get)
       println(f"TIMED $name%-28s min=${times.min}%.2f passes=${
         times.map(t => f"$t%.2f").mkString(",")}")
       if (explain) {

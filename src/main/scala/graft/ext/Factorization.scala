@@ -1,6 +1,8 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 
 /** Rank-2 alternating least squares — the canonical distributed
@@ -51,35 +53,46 @@ object Factorization {
     (lit(1000L) + h1, lit(1000L) + h2)
   }
 
-  /** Stage `(u, i, r)` once per report: an alias-only projection over an
-    * already-staged (LogicalRDD-rooted) input — what BOTH registered
-    * callers pass, the [[StageCache]]'d quantity-ratings rollup — reads
-    * the staged blocks in place, so re-checkpointing it here (the
-    * pre-r17 shape) copied |ratings| rows per query per pass for
-    * nothing. An input with a real plan behind it still pays the
-    * checkpoint (it is read by every half-step and every eval). */
-  private def stagedRatings(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
-    def rddRooted(p: LogicalPlan): Boolean = p match {
-      case pr: Project => rddRooted(pr.child)
-      case other => other.getClass.getSimpleName == "LogicalRDD"
-    }
-    if (rddRooted(df.queryExecution.optimizedPlan)) df
-    else df.localCheckpoint()
+  /** Whether `p` is a staged (LogicalRDD) relation under at most a
+    * chain of attribute-only projections (a bare attribute or an alias
+    * of one), i.e. reading it re-evaluates no expression. */
+  private[ext] def rddRooted(p: LogicalPlan): Boolean = p match {
+    case pr: Project =>
+      pr.projectList.forall {
+        case _: Attribute | Alias(_: Attribute, _) => true
+        case _ => false
+      } && rddRooted(pr.child)
+    case other => other.getClass.getSimpleName == "LogicalRDD"
   }
 
-  /** The deterministic item-factor INIT relation — identical for the
-    * explicit (q294) and implicit (q305) reports over the same ratings,
-    * so it is [[StageCache]]-memoized on the ratings plan: the second
-    * report (and warm passes) ride one staged distinct instead of
-    * re-paying an |ratings|-scale distinct each. */
-  private def initFactors(r: DataFrame): DataFrame =
-    StageCache.getOrStage(StageCache.keyFor(r, "als-y0")) {
+  /** Stage `(u, i, r)` once per report: it is read by every half-step
+    * and every eval. An input that is already staged (what both
+    * registered callers pass: the [[StageCache]]'d quantity-ratings
+    * rollup) is read in place rather than copied again; anything with
+    * a real plan behind it, including an expensive projection over a
+    * staged base, pays the checkpoint. */
+  private def stagedRatings(df: DataFrame): DataFrame =
+    if (rddRooted(df.queryExecution.optimizedPlan)) df
+    else df.localCheckpoint()
+
+  /** Stage `ratings(u, i, r)` and the deterministic item-factor INIT
+    * relation. The init is identical for the explicit (q294) and
+    * implicit (q305) reports over the same ratings, so it is
+    * [[StageCache]]-memoized. The key is taken on the plan BEFORE
+    * staging: a raw-plan input staged here becomes a fresh LogicalRDD on
+    * every call, whose key could never hit and would leave one dead
+    * entry per call. */
+  private def stagedWithInit(ratings: DataFrame): (DataFrame, DataFrame) = {
+    val key = StageCache.keyFor(ratings, "als-y0")
+    val r = stagedRatings(ratings)
+    val y0 = StageCache.getOrStage(key) {
       val (y1, y2) = initY(col("i"))
       r.select(col("i")).distinct()
         .select(col("i"), y1.as("f1"), y2.as("f2"))
         .localCheckpoint()
     }
+    (r, y0)
+  }
 
   /** One ridge half-step: solve `solveKey`'s factors from the fixed
     * `fixedKey` side. `ratings` columns: (solveKey, fixedKey, r);
@@ -130,9 +143,9 @@ object Factorization {
     // lambda <= 0 a rank-deficient entity would solve to NaN and the
     // clamp would silently convert it to a clamped factor.
     require(lambda > 0, s"lambda must be strictly positive, got $lambda")
-    val r = stagedRatings(ratings.select(col(userCol).as("u"),
-      col(itemCol).as("i"), col("r"))) // read by every half-step + eval
-    var y = initFactors(r)
+    val (r, y0) = stagedWithInit(ratings.select(col(userCol).as("u"),
+      col(itemCol).as("i"), col("r")))
+    var y = y0
     val evals = (1 to rounds).map { rnd =>
       val x = halfStep(r, y, "u", "i", lambda).localCheckpoint()
       y = halfStep(r, x, "i", "u", lambda).localCheckpoint()
@@ -247,9 +260,9 @@ object Factorization {
     require(rounds >= 1 && rounds <= 4, s"rounds out of [1,4]: $rounds")
     require(alpha >= 1, s"alpha must be >= 1, got $alpha")
     require(lambda > 0, s"lambda must be strictly positive, got $lambda")
-    val r = stagedRatings(ratings.select(col(userCol).as("u"),
-      col(itemCol).as("i"), col("r"))) // read by every half-step + eval
-    var y = initFactors(r)
+    val (r, y0) = stagedWithInit(ratings.select(col(userCol).as("u"),
+      col(itemCol).as("i"), col("r")))
+    var y = y0
     val evals = (1 to rounds).map { rnd =>
       val x = implicitHalfStep(r, y, "u", "i", alpha, lambda)
         .localCheckpoint()

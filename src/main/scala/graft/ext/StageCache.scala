@@ -132,18 +132,11 @@ object StageCache {
     try e.rdd.getStorageLevel != StorageLevel.NONE
     catch { case _: Throwable => false }
 
-  // Did any getOrStage call (hit OR build) happen since the last reset?
-  // `Bench` brackets each query with reset/read to learn which
-  // registered queries are cache-involved, so it can emit their honest
-  // pass-1 standalone timings beside the warm suite minima.
-  @volatile private var touchedFlag = false
-
   /** Serve `key`'s staged relation if its blocks are still live, else
     * run `build` (which must end in `.localCheckpoint()`) and cache the
     * result. A build whose plan is not a LogicalRDD is returned uncached. */
   def getOrStage(key: String)(build: => DataFrame): DataFrame =
     synchronized {
-      touchedFlag = true
       val present = Option(cache.get(key))
       present.filter(alive) match {
         case Some(e) => hits += 1; e.df
@@ -165,21 +158,17 @@ object StageCache {
     }
 
   /** (live entries, builds, hits, evictions, dead-entry rebuilds,
-    * staged bytes) since process start — Bench stamps these on its JSON
-    * line so an LRU sized below the suite's live key population
-    * (evictions > 0), a block-liveness leak (deadRebuilds ≫ 0), or a
-    * pinned-storage footprint approaching the byte budget is visible
-    * per run, not a hypothesis. */
+    * staged bytes, peak staged bytes) since process start — Bench stamps
+    * these on its JSON line so an LRU sized below the suite's live key
+    * population (evictions > 0), a block-liveness leak (deadRebuilds ≫
+    * 0), or a pinned-storage footprint approaching the byte budget is
+    * visible per run, not a hypothesis. Every [[getOrStage]] call adds
+    * exactly one build or one hit, so a change in builds + hits tells
+    * whether any ran. */
   def stats: (Int, Long, Long, Long, Long, Long, Long) = synchronized {
     (cache.size(), builds, hits, evictions, deadRebuilds, totalBytes,
       peakBytes)
   }
-
-  /** Reset the involvement marker (called by `Bench` before a query). */
-  def resetTouched(): Unit = touchedFlag = false
-
-  /** Whether any getOrStage ran since [[resetTouched]]. */
-  def wasTouched: Boolean = touchedFlag
 
   /** Live pinned RDD ids — the post-query sweep (`QTime.sweep`, run by
     * Bench and QTime) skips these. */

@@ -192,13 +192,17 @@ object Graph {
     * and two semi joins keyed on node ids — no broadcast assumption, no
     * driver data; `localCheckpoint` after each round cuts the 3-stage
     * lineage growth (the ConnectedComponents posture). Returns the
-    * surviving nodes with their within-core degree. */
+    * surviving nodes with their within-core degree.
+    *
+    * Endpoints must be non-null: an edge with a null `u` or `v` names no
+    * node, so it is dropped before peeling (the anti-join peel below
+    * could never remove it, since null never equals a dropped node). */
   def kCorePeel(edgesIn: DataFrame, k: Long, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k>=1, rounds>=1; got $k, $rounds")
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-    var cur = edgesIn.localCheckpoint()
+    var cur = nonNullEdges(edgesIn).localCheckpoint()
     for (_ <- 1 to rounds) {
       // Peel by ANTI-joining the DROP set (deg < k) rather than
       // semi-joining the keep set: every endpoint of `cur` has a degree
@@ -216,13 +220,18 @@ object Graph {
     degrees(cur).select(col("node"), col("deg").cast("long").as("core_deg"))
   }
 
+  private def nonNullEdges(e: DataFrame): DataFrame =
+    e.filter(col("u").isNotNull && col("v").isNotNull)
+
   /** [[kCorePeel]] reported as its ROUND TRAJECTORY — one row per round
     * 0..`rounds` with surviving node/edge counts and the degree range —
     * the decomposition readout that stays meaningful (and provably
     * non-empty: round 0 always reports the input graph) even when the
     * chosen k collapses the core to nothing. Each round's statistics are
     * two small aggregations over that round's edge list; the rows unite
-    * into one result without any driver data movement. */
+    * into one result without any driver data movement. Same non-null
+    * endpoint contract as [[kCorePeel]]: null-endpoint edges are dropped
+    * before round 0. */
   def kCorePeelTrajectory(edgesIn: DataFrame, k: Long,
                           rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k>=1, rounds>=1; got $k, $rounds")
@@ -234,7 +243,7 @@ object Graph {
       e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
         .localCheckpoint()
-    var cur = edgesIn.localCheckpoint()
+    var cur = nonNullEdges(edgesIn).localCheckpoint()
     var deg = degrees(cur)
     // (An r16 Σdeg early-fixpoint cut — the q223 trick — was tried and
     // REVERTED here: the adaptive-k trajectory is still shrinking at

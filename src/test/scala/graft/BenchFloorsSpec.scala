@@ -45,6 +45,14 @@ class BenchFloorsSpec extends AnyFunSuite {
     assert(Bench.parseFloors(doc, "/tmp/sf2x").isEmpty)
   }
 
+  test("a trailing slash keeps the sf; a dir merely ending in sf0.1 does not") {
+    assert(Bench.parseFloors(doc, "/data/sf0.1/") ==
+      Bench.parseFloors(doc, "/data/sf0.1"))
+    assert(Bench.parseFloors(doc, "/tmp/sf1/").keySet == Set("q142_tri", "q267_knn"))
+    assert(Bench.parseFloors(doc, "/data/xsf0.1").isEmpty)
+    assert(Bench.parseFloors(doc, "/data/xsf1").isEmpty)
+  }
+
   test("a file without markers parses whole for sf0.1 (pre-r14 layout)") {
     val legacy = "| q142_tri | 5.80s |\n| q227_pq | 3.22s |\n"
     assert(Bench.parseFloors(legacy, "/root/testdata/sf0.1").size == 2)

@@ -131,4 +131,34 @@ class FactorizationSpec extends SparkSpec {
     assert(exp.toSet != imp.toSet,
       "implicit trajectory identical to explicit — confidence weighting inert")
   }
+
+  test("a raw-plan input's item init is staged once: the second call hits") {
+    // The init memo is keyed on the ratings plan before staging; keyed
+    // after, each call's freshly checkpointed ratings would miss and
+    // leave a dead entry behind.
+    val ratings = Seq((1L, 10L, 3L), (1L, 11L, 4L), (2L, 10L, 5L))
+      .toDF("u", "i", "r")
+    val segs = Seq((1L, "odd"), (2L, "even")).toDF("u", "seg")
+    val first = Factorization.alsRank2Report(ratings, "u", "i", segs, "seg")
+      .collect().toSeq
+    val before = StageCache.stats
+    val second = Factorization.alsRank2Report(ratings, "u", "i", segs, "seg")
+      .collect().toSeq
+    val after = StageCache.stats
+    assert(after._2 == before._2, "second call built a new als-y0 entry")
+    assert(after._3 == before._3 + 1, "second call did not hit the als-y0 entry")
+    assert(second == first)
+  }
+
+  test("only attribute projections over a staged relation count as staged") {
+    import org.apache.spark.sql.functions.col
+    val base = Seq((1L, 10L, 3L)).toDF("u", "i", "r").localCheckpoint()
+    def rooted(df: org.apache.spark.sql.DataFrame) =
+      Factorization.rddRooted(df.queryExecution.optimizedPlan)
+    assert(rooted(base))
+    assert(rooted(base.select(col("u").as("a"), col("i"), col("r").as("b"))))
+    assert(!rooted(base.select(col("u"), (col("r") * 2).as("r"))))
+    assert(!rooted(base.select(col("u"), col("i"), col("r")).filter(col("r") > 1)))
+    assert(!rooted(Seq((1L, 10L, 3L)).toDF("u", "i", "r")))
+  }
 }

@@ -73,6 +73,21 @@ class WarehouseMiningSpec extends SparkSpec {
       traj.last.getAs[Long]("min_deg") >= 3)
   }
 
+  test("k-core peel drops null-endpoint edges before peeling") {
+    import spark.implicits._
+    // A triangle plus one edge with a null endpoint: the null names no
+    // node, so the 2-core is the triangle and round 0 has 3 edges.
+    val edges = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (1L, 3L),
+      (2L, 3L), (1L, null)).toDF("u", "v")
+    val core = graft.operators.Graph.kCorePeel(edges, 2, 2).collect()
+      .map(r => Option(r.get(0)) -> r.getAs[Long]("core_deg")).toMap
+    assert(core == Map(Some(1L) -> 2L, Some(2L) -> 2L, Some(3L) -> 2L))
+    val traj = graft.operators.Graph.kCorePeelTrajectory(edges, 2, 2)
+      .collect().sortBy(_.getAs[Int]("round"))
+    assert(traj.forall(r => r.getAs[Long]("n_nodes") == 3 &&
+      r.getAs[Long]("n_edges") == 3 && r.getAs[Long]("min_deg") == 2))
+  }
+
   test("q202 trajectory converges on sf0.001 and is monotone") {
     val traj = GraphAnalytics.copurchaseKCore(spark, sf001).collect()
       .sortBy(_.getAs[Int]("round"))
