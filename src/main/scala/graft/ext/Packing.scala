@@ -90,52 +90,29 @@ object Packing {
 
   /** Grouped packing: independent bin sequences per `groupCol` value
     * (per-language / per-source training shards), each group packed in
-    * `keyCol` order exactly like [[packByBudget]]. NOT a per-group
-    * window: a dominant group (the 80%-English corpus) would drag its
-    * whole slice into one task. Instead ONE global two-pass prefix sum
-    * runs over the composite order (group index, key) — ranges split
-    * freely INSIDE a group because the composite key is distinct per
-    * row — and each group's bins are recovered by subtracting the
-    * group's first prefix value (its min, since the prefix is monotone
-    * along the order and groups are contiguous in it). The distinct
-    * group list is collected to build the dense index — metadata-scale
-    * (languages/sources, not documents), the same class as PrefixSum's
-    * per-range offset scan. Requires < 2²¹ groups and a non-negative
-    * `keyCol` < 2⁴², so the composite stays inside a long. */
+    * `keyCol` (numeric) order exactly like [[packByBudget]]. NOT a
+    * per-group window: a dominant group (the 80%-English corpus) would
+    * drag its whole slice into one task. Instead the grouped exclusive
+    * sum of [[graft.operators.GroupedPrefix]] splits ranges freely
+    * INSIDE a group and restarts the running count at each group, for
+    * any key value. The group index is metadata-scale (languages /
+    * sources, not documents): < 2²¹ groups and groups·ranges < 2²⁴. */
   def packByBudgetGrouped(docs: DataFrame, groupCol: String, keyCol: String,
                           textCol: String, budget: Int,
                           ranges: Int = 0): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    require(docs.schema(keyCol).dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"grouped packing orders by a numeric key; " +
-        s"got ${docs.schema(keyCol).dataType} for $keyCol")
-    val spark = docs.sparkSession
     val n = size(TextOps.tokens(TextOps.normText(col(textCol)))).cast("long")
-    // NULL groups have no defined shard — they drop out at the index
-    // join (plain equality), same reading as a partitioned write's
-    // null partition being separated; filtered here so the sort is
-    // total.
-    val groups = docs.select(col(groupCol).cast("string").as("g"))
-      .distinct().collect().map(_.getString(0)).filter(_ != null).sorted
-    require(groups.length < (1 << 21),
-      s"grouped packing supports < 2^21 groups, got ${groups.length}")
-    import spark.implicits._
-    val gidx = broadcast(groups.zipWithIndex.toSeq.toDF("g", "__gidx"))
+    // NULL groups have no defined shard — they drop out, the same
+    // reading as a partitioned write's null partition being separated.
     val base = docs
       .select(col(groupCol).cast("string").as("g"), col(keyCol),
         n.as("n_tokens"))
-      .join(gidx, Seq("g"))
-      .withColumn("__ck",
-        col("__gidx").cast("long") * lit(1L << 42) + col(keyCol).cast("long"))
-    val pre = graft.operators.PrefixSum.exclusive(base, "__ck",
-      descending = false, ties = Seq.empty, valueCol = "n_tokens",
-      outCol = "prefix", ranges = ranges)
-    val offs = broadcast(
-      pre.groupBy("g").agg(min("prefix").as("__goff")))
-    pre.join(offs, Seq("g"))
+      .filter(col("g").isNotNull)
+    graft.operators.GroupedPrefix.exclusiveMulti(base, "g", keyCol,
+        descending = false, ties = Seq.empty,
+        valueCols = Seq("n_tokens" -> "prefix"), ranges = ranges)
       .select(col("g").as(groupCol), col(keyCol), col("n_tokens"),
-        expr(s"(prefix - __goff) div $budget").as("bin"))
+        expr(s"prefix div $budget").as("bin"))
   }
 
   /** Per-(group, bin) rollup of [[packByBudgetGrouped]]. */

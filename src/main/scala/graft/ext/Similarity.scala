@@ -525,18 +525,15 @@ object Similarity {
     * vector as its argmin centroid. Returns (book(aid, m, j, ce6),
     * codes(neighbor_id, m, aid)). q292 feeds RESIDUAL subvectors
     * through the identical machinery — the training algebra is
-    * projection-agnostic. A non-empty `cacheKey` memoizes both outputs
-    * in [[StageCache]] (they depend only on the corpus-side projection,
+    * projection-agnostic. Both outputs are memoized in [[StageCache]]
+    * under `cacheKey` (they depend only on the corpus-side projection,
     * which the callers key by plan hash + params). */
   private def lloydBookAndCodes(vx: DataFrame, nCent: Int,
-                                cacheKey: String = ""): (DataFrame, DataFrame) = {
-    if (cacheKey.nonEmpty) {
-      val book = StageCache.getOrStage(s"$cacheKey:book")(
-        lloydBookAndCodesBuild(vx, nCent)._1)
-      val codes = StageCache.getOrStage(s"$cacheKey:codes")(
-        codesFor(vx, book).localCheckpoint())
-      (book, codes)
-    } else lloydBookAndCodesBuild(vx, nCent)
+                                cacheKey: String): (DataFrame, DataFrame) = {
+    val book = StageCache.getOrStage(s"$cacheKey:book")(lloydBook(vx, nCent))
+    val codes = StageCache.getOrStage(s"$cacheKey:codes")(
+      codesFor(vx, book).localCheckpoint())
+    (book, codes)
   }
 
   private def codesFor(vx: DataFrame, book: DataFrame): DataFrame = {
@@ -548,8 +545,7 @@ object Similarity {
       .agg(min_by(col("aid"), struct(col("d2"), col("aid"))).as("aid"))
   }
 
-  private def lloydBookAndCodesBuild(vx: DataFrame,
-                                     nCent: Int): (DataFrame, DataFrame) = {
+  private def lloydBook(vx: DataFrame, nCent: Int): DataFrame = {
     val seed = vx.filter(col("neighbor_id") < nCent)
       .select(col("neighbor_id").cast("int").as("aid"), col("m"), col("j"),
         col("xe6").as("ce6"))
@@ -561,14 +557,13 @@ object Similarity {
         .as("d2"))
     val a1 = d1.groupBy("neighbor_id", "m")
       .agg(min_by(col("aid"), struct(col("d2"), col("aid"))).as("aid"))
-    val book = a1.join(vx, Seq("neighbor_id", "m"))
+    a1.join(vx, Seq("neighbor_id", "m"))
       .groupBy(col("aid"), col("m"), col("j"))
       .agg(sum("xe6").as("sx"), count(lit(1)).as("n"))
       .select(col("aid"), col("m"), col("j"),
         when(col("sx") >= 0, expr("sx div n"))
           .otherwise(-expr("(-sx) div n")).as("ce6"))
       .localCheckpoint() // read 2x: coding join + the caller's LUT
-    (book, codesFor(vx, book))
   }
 
   private def pqCodesAndLut(corpus: DataFrame, queries: DataFrame,
@@ -1607,14 +1602,10 @@ object Similarity {
     * Candidates ⊇ g, so per-node hit sets vs the exact graph are
     * monotone non-decreasing across rounds — the q280 trajectory pin. */
   private[ext] def descentRound(c: DataFrame, g: DataFrame, k: Int,
-                                cacheKey: String = ""): DataFrame = {
-    // Empty key (the spec-level direct callers) = never memoized; the
-    // registered-query paths pass round-numbered keys so q267/q276 share
-    // round 1 with q280's trajectory.
-    if (cacheKey.nonEmpty)
-      StageCache.getOrStage(cacheKey)(descentRoundBuild(c, g, k))
-    else descentRoundBuild(c, g, k)
-  }
+                                cacheKey: String): DataFrame =
+    // Round-numbered keys let q267/q276 share round 1 with q280's
+    // trajectory.
+    StageCache.getOrStage(cacheKey)(descentRoundBuild(c, g, k))
 
   private def descentRoundBuild(c: DataFrame, g: DataFrame,
                                 k: Int): DataFrame = {

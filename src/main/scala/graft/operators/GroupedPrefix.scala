@@ -1,12 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.NumericType
 
 /** GROUPED distributed exclusive prefix sums and ranks — the
-  * [[PrefixSum]] two-pass range-bucketing scheme with a group
+  * [[PrefixSum]] two-pass range-bucketing engine with a group
   * dimension, replacing `Window.partitionBy(lowCardKey).orderBy(...)`
   * when the group column has FEW distinct values over data-scale rows
   * (per-source / per-segment ranks, ntiles, percentiles, running
@@ -20,34 +18,30 @@ import org.apache.spark.sql.types.NumericType
   *   1. the distinct group list is collected to build a dense index —
   *      metadata-scale by precondition (segments/sources/languages,
   *      < 2²¹ groups AND groups·ranges < 2²⁴ enforced — pass 1's
-  *      driver scan holds one row per (group, range)), the same class
-  *      as [[PrefixSum]]'s per-range offset scan; a NULL group is a
-  *      loud `require` failure (a partition-by window would rank NULL
+  *      driver scan holds one row per (group, range)); a NULL group is
+  *      a loud `require` failure (a partition-by window would rank NULL
   *      as its own partition — silently dropping those rows at the
   *      index join would be row loss, so callers with a nullable key
   *      must coalesce to a sentinel first);
   *   2. GLOBAL approximate quantiles of the ordering key split its
-  *      domain into contiguous buckets with a pure function of the key
-  *      (per-group distributions only affect balance, never values —
-  *      the result is invariant to where the boundaries fall, exactly
-  *      as PrefixSum's, pinned by GroupedPrefixSpec across range
-  *      counts);
-  *   3. pass 1 — per-(group, bucket) totals (map-side-combined, ≤
-  *      groups·ranges rows), exclusive-scanned on the DRIVER with a
-  *      reset at each group boundary (ranges are contiguous per group
-  *      by construction of the composite id);
+  *      domain into contiguous buckets (per-group distributions only
+  *      affect balance, never values);
+  *   3. pass 1 — per-(group, bucket) totals, exclusive-scanned on the
+  *      DRIVER with a reset at each group boundary;
   *   4. pass 2 — within-range prefix via a window PARTITIONED by the
   *      composite range id, plus the broadcast per-range offset.
   *
-  * Ties on the ordering key share a bucket (the boundary comparisons
-  * can't split equal keys) and are ordered by `ties` within it — the
-  * same contract as PrefixSum: the full (key, ties) order must be
-  * unique within a group for a deterministic result, and a
-  * pathologically hot single key value concentrates in one range
-  * (inherent to any exact tie-broken ranking; still never a whole
-  * group).
+  * A rank is the exclusive count along its order plus one: an ordering
+  * over a constant 1. Ties on the ordering key share a bucket (the
+  * boundary comparisons can't split equal keys) and are ordered by
+  * `ties` within it — the same contract as PrefixSum: the full (key,
+  * ties) order must be unique within a group for a deterministic
+  * result, and a pathologically hot single key value concentrates in
+  * one range (inherent to any exact tie-broken ranking; still never a
+  * whole group).
   */
 object GroupedPrefix {
+  import PrefixSum.Axis
 
   /** Adds each `valueCols` pair's `outCol` = exclusive running sum of
     * its LONG value column over the (`keyCol` asc/desc, `ties`...)
@@ -59,7 +53,9 @@ object GroupedPrefix {
                      descending: Boolean, ties: Seq[Column],
                      valueCols: Seq[(String, String)],
                      ranges: Int = 0): DataFrame =
-    run(df, groupCol, keyCol, descending, ties, valueCols, ranges)
+    PrefixSum.scan(df, Some(groupCol),
+      Seq(Axis(keyCol, descending, PrefixSum.values(valueCols))), ties,
+      None, ranges)
 
   /** Adds `rankCol` = row_number within `groupCol` over the
     * (`keyCol` asc/desc, `ties`...) total order — 1-based, identical
@@ -84,125 +80,11 @@ object GroupedPrefix {
   def ranksMulti(df: DataFrame, groupCol: String,
                  specs: Seq[(String, Boolean, String)], ties: Seq[Column],
                  nCol: Option[String] = None, ranges: Int = 0): DataFrame = {
-    require(specs.nonEmpty, "at least one rank spec required")
-    specs.foreach { case (kc, _, _) =>
-      require(df.schema(kc).dataType.isInstanceOf[NumericType],
-        s"grouped rank range-buckets on a numeric key; " +
-          s"got ${df.schema(kc).dataType} for $kc") }
-    val spark = df.sparkSession
-    val nRanges = (if (ranges > 0) ranges
-      else spark.sessionState.conf.numShufflePartitions).max(1)
-    val input = df.localCheckpoint()
-    val rawGroups = input.select(col(groupCol).cast("string").as("__g"))
-      .distinct().collect().map(_.getString(0))
-    // A partition-by window ranks NULL as its own partition; the index
-    // join here would silently DROP those rows instead. Refuse loudly
-    // (checked off the already-collected distinct list — no extra job);
-    // callers with a nullable key must coalesce to a sentinel first.
-    require(!rawGroups.contains(null),
-      s"grouped rank: NULL values in group column '$groupCol' — " +
-        "coalesce to a sentinel before ranking (NULL rows would be " +
-        "silently dropped by the group-index join)")
-    val groups = rawGroups.sorted
-    require(groups.length < (1 << 21),
-      s"grouped rank supports < 2^21 groups, got ${groups.length}")
-    // Pass 1 collects per-(group, range) totals and broadcasts the
-    // offset table — the driver holds ≤ groups·nRanges rows PER SPEC.
-    // Bound the PRODUCT, not just the group count: 2^21 groups ×
-    // cluster-scale shuffle partitions would be a multi-GB collect.
-    require(groups.length.toLong * nRanges < (1L << 24),
-      s"grouped rank driver scan holds groups*ranges rows; " +
-        s"${groups.length} groups * $nRanges ranges >= 2^24 — " +
-        "reduce `ranges` or pre-aggregate the group key")
-    import spark.implicits._
-    val gidx = broadcast(groups.zipWithIndex.toSeq.toDF("__g", "__gidx"))
-    // ONE quantile pass over every distinct ordering key
-    val keyCols = specs.map(_._1).distinct
-    val boundsByKey: Map[String, Array[Double]] =
-      if (nRanges == 1) keyCols.map(_ -> Array.empty[Double]).toMap
-      else keyCols.zip(input.stat.approxQuantile(keyCols.toArray,
-          (1 until nRanges).map(_.toDouble / nRanges).toArray, 0.01))
-        .map { case (kc, bs) => kc -> bs.distinct.sorted }.toMap
-    def rng(kc: String, descending: Boolean): Column = {
-      val bounds = boundsByKey(kc)
-      val k = col(kc).cast("double")
-      val bucketed =
-        if (bounds.isEmpty) lit(0)
-        else aggregate(array(bounds.map(lit(_)): _*), lit(0),
-          (acc, b) => acc + (if (descending) when(k < b, 1).otherwise(0)
-                             else when(k > b, 1).otherwise(0)))
-      val isFloating = df.schema(kc).dataType match {
-        case org.apache.spark.sql.types.DoubleType |
-             org.apache.spark.sql.types.FloatType => true
-        case _ => false
-      }
-      val b =
-        if (descending) when(col(kc).isNull, lit(bounds.length))
-          .otherwise(bucketed)
-        else if (isFloating) when(isnan(col(kc)), lit(bounds.length))
-          .otherwise(bucketed)
-        else bucketed
-      (col("__gidx").cast("long") * (bounds.length + 1) + b).cast("long")
-    }
-    val based = specs.zipWithIndex.foldLeft(
-        input.withColumn("__g", col(groupCol).cast("string"))
-          .join(gidx, Seq("__g"))
-          .withColumn("__one", lit(1L))) {
-      case (acc, ((kc, desc, _), i)) =>
-        acc.withColumn(s"__rng_$i", rng(kc, desc))
-    }
-    // per-spec range counts → driver-side per-group exclusive scan
-    var gTotals: Map[Long, Long] = Map.empty
-    val withRanks = specs.zipWithIndex.foldLeft(based) {
-      case (acc, ((kc, desc, rc), i)) =>
-        val nB = boundsByKey(kc).length + 1
-        val totals = based.groupBy(s"__rng_$i")
-          .agg(sum(col("__one")).as("__tot"))
-          .orderBy(s"__rng_$i").collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-        if (i == 0)
-          gTotals = totals.groupBy(_._1 / nB)
-            .map { case (g, ts) => g -> ts.map(_._2).sum }
-        val offRows = scala.collection.mutable.ArrayBuffer.empty[Row]
-        var curG = -1L
-        var off = 0L
-        totals.foreach { case (r, t) =>
-          val g = r / nB
-          if (g != curG) { curG = g; off = 0L }
-          offRows += Row(r, off)
-          off += t
-        }
-        val offSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(s"__rng_$i",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField(s"__offset_$i",
-            org.apache.spark.sql.types.LongType)))
-        val offsetDf = broadcast(spark.createDataFrame(
-          spark.sparkContext.parallelize(offRows.toSeq, 1), offSchema))
-        val ord = (if (desc) col(kc).desc else col(kc).asc) +: ties
-        val w = Window.partitionBy(s"__rng_$i").orderBy(ord: _*)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        acc.join(offsetDf, Seq(s"__rng_$i"))
-          .withColumn(rc, coalesce(sum(col("__one")).over(w), lit(0L))
-            + col(s"__offset_$i") + 1L)
-    }
-    val withN = nCol match {
-      case Some(nc) =>
-        val nDf = broadcast(spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            gTotals.toSeq.sorted.map { case (g, n) => Row(g, n) }, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__gidx2",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField(nc,
-              org.apache.spark.sql.types.LongType)))))
-        withRanks.join(nDf, col("__gidx").cast("long") === col("__gidx2"))
-          .drop("__gidx2")
-      case None => withRanks
-    }
-    val helperCols = Seq("__g", "__gidx", "__one") ++
-      specs.indices.flatMap(i => Seq(s"__rng_$i", s"__offset_$i"))
-    withN.drop(helperCols: _*)
+    val counted = PrefixSum.scan(df, Some(groupCol),
+      specs.map { case (kc, desc, rc) => Axis(kc, desc, Seq(lit(1L) -> rc)) },
+      ties, nCol, ranges)
+    specs.foldLeft(counted) { case (acc, (_, _, rc)) =>
+      acc.withColumn(rc, col(rc) + 1L) }
   }
 
   /** SQL-standard NTILE(b) recovered from a [[rankWithin]] (rank, n)
@@ -237,104 +119,4 @@ object GroupedPrefix {
     * ties it would be last-peer-rank/n; graft orders are total). */
   def cumeDistFromRank(rank: Column, n: Column): Column =
     rank.cast("double") / n.cast("double")
-
-  private def run(df: DataFrame, groupCol: String, keyCol: String,
-                  descending: Boolean, ties: Seq[Column],
-                  valueCols: Seq[(String, String)],
-                  ranges: Int): DataFrame = {
-    require(valueCols.nonEmpty, "need at least one value column")
-    require(df.schema(keyCol).dataType.isInstanceOf[NumericType],
-      s"grouped prefix range-buckets on a numeric key; " +
-        s"got ${df.schema(keyCol).dataType} for $keyCol")
-    val spark = df.sparkSession
-    val nRanges = (if (ranges > 0) ranges
-      else spark.sessionState.conf.numShufflePartitions).max(1)
-    // Three passes read the input (groups, quantiles, totals, final) —
-    // stage the caller's narrow projection once.
-    val input = df.localCheckpoint()
-    val rawGroups = input.select(col(groupCol).cast("string").as("__g"))
-      .distinct().collect().map(_.getString(0))
-    // Same NULL contract as ranksMulti: refuse loudly rather than
-    // silently dropping NULL-group rows at the index join.
-    require(!rawGroups.contains(null),
-      s"grouped prefix: NULL values in group column '$groupCol' — " +
-        "coalesce to a sentinel before the prefix sum (NULL rows would " +
-        "be silently dropped by the group-index join)")
-    val groups = rawGroups.sorted
-    require(groups.length < (1 << 21),
-      s"grouped prefix supports < 2^21 groups, got ${groups.length}")
-    require(groups.length.toLong * nRanges < (1L << 24),
-      s"grouped prefix driver scan holds groups*ranges rows; " +
-        s"${groups.length} groups * $nRanges ranges >= 2^24 — " +
-        "reduce `ranges` or pre-aggregate the group key")
-    import spark.implicits._
-    val gidx = broadcast(groups.zipWithIndex.toSeq.toDF("__g", "__gidx"))
-    val bounds =
-      if (nRanges == 1) Array.empty[Double]
-      else input.stat.approxQuantile(keyCol,
-        (1 until nRanges).map(_.toDouble / nRanges).toArray, 0.01)
-        .distinct.sorted
-    val nB = bounds.length + 1
-    val k = col(keyCol).cast("double")
-    val bucketed =
-      if (bounds.isEmpty) lit(0)
-      else aggregate(array(bounds.map(lit(_)): _*), lit(0),
-        (acc, b) => acc + (if (descending) when(k < b, 1).otherwise(0)
-                           else when(k > b, 1).otherwise(0)))
-    // NULL/NaN key placement mirrors PrefixSum: nulls sort FIRST asc
-    // (bucket 0 is right) and LAST desc; NaN sorts GREATER than all.
-    val isFloating = df.schema(keyCol).dataType match {
-      case org.apache.spark.sql.types.DoubleType |
-           org.apache.spark.sql.types.FloatType => true
-      case _ => false
-    }
-    val b =
-      if (descending) when(col(keyCol).isNull, lit(bounds.length))
-        .otherwise(bucketed)
-      else if (isFloating) when(isnan(col(keyCol)), lit(bounds.length))
-        .otherwise(bucketed)
-      else bucketed
-    val based = input.withColumn("__g", col(groupCol).cast("string"))
-      .join(gidx, Seq("__g"))
-      .withColumn("__rng", (col("__gidx").cast("long") * nB + b).cast("long"))
-    // Pass 1: per-range totals (all value columns in one aggregation)
-    // → driver-side exclusive scan with a reset at each group boundary
-    // (≤ groups·ranges rows cross the wire).
-    val totAggs = valueCols.zipWithIndex.map { case ((vc, _), i) =>
-      sum(coalesce(col(vc), lit(0L))).as(s"__tot_$i")
-    }
-    val totals = based.groupBy("__rng")
-      .agg(totAggs.head, totAggs.tail: _*)
-      .orderBy("__rng").collect()
-      .map(r => (r.getLong(0), valueCols.indices.map(i => r.getLong(i + 1))))
-    val zero = valueCols.indices.map(_ => 0L)
-    val offRows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    var curG = -1L
-    var acc = zero
-    totals.foreach { case (rng, ts) =>
-      val g = rng / nB
-      if (g != curG) { curG = g; acc = zero }
-      offRows += Row.fromSeq(rng +: acc)
-      acc = acc.zip(ts).map { case (a, t) => a + t }
-    }
-    val offSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__rng",
-        org.apache.spark.sql.types.LongType) +:
-        valueCols.indices.map(i => org.apache.spark.sql.types.StructField(
-          s"__offset_$i", org.apache.spark.sql.types.LongType)))
-    val offsetDf = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(offRows.toSeq, 1), offSchema))
-    val ord = (if (descending) col(keyCol).desc else col(keyCol).asc) +: ties
-    val w = Window.partitionBy("__rng").orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prefixed = valueCols.zipWithIndex
-      .foldLeft(based.join(offsetDf, Seq("__rng"))) {
-        case (acc0, ((vc, oc), i)) =>
-          acc0.withColumn(oc,
-            coalesce(sum(col(vc)).over(w), lit(0L)) + col(s"__offset_$i"))
-      }
-    val helperCols = Seq("__g", "__gidx", "__rng") ++
-      valueCols.indices.map(i => s"__offset_$i")
-    prefixed.drop(helperCols: _*)
-  }
 }

@@ -130,6 +130,30 @@ class PackingSpec extends SparkSpec {
     }
   }
 
+  test("grouped packing keeps a key of 2^43 + 7 inside its own group") {
+    import org.apache.spark.sql.functions._
+    // Under a (group index · 2^42 + key) composite order this key of the
+    // first group would sort after every row of the second group, and
+    // its bin would count that group's tokens too.
+    val big = (1L << 43) + 7
+    val rows = (0L until 20L).map(i => ("a", i)) ++ Seq(("a", big)) ++
+      (0L until 30L).map(i => ("b", i))
+    val docs = rows.map { case (g, i) => (g, i, "w w w") }
+      .toDF("lang", "doc_id", "text")
+    val n = size(TextOps.tokens(TextOps.normText(col("text")))).cast("long")
+    val ref = docs.select(col("lang"), col("doc_id"), n.as("nt"))
+      .withColumn("bin", expr("coalesce(sum(nt) over (partition by lang " +
+        "order by doc_id rows between unbounded preceding and 1 preceding), 0) div 4"))
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
+    assert(ref(("a", big)) == 15L)
+    for (nRanges <- Seq(1, 4)) {
+      val got = Packing.packByBudgetGrouped(docs, "lang", "doc_id", "text",
+          budget = 4, ranges = nRanges)
+        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
+      assert(got == ref, s"ranges=$nRanges diverged from the per-group window")
+    }
+  }
+
   test("grouped packing plans keyed windows only") {
     val docs = (0L until 50L).map(i => (if (i % 3 == 0) "a" else "b", i, "w w"))
       .toDF("lang", "doc_id", "text")

@@ -58,6 +58,29 @@ class GroupedPrefixSpec extends SparkSpec {
     }
   }
 
+  test("ranksMulti over 2 and 3 axes equals one partitioned row_number per axis, plus the group count") {
+    // different keys, mixed directions, one shared tie column
+    val df = data.withColumn("u", (col("id") * 37) % 19)
+    val axes = Seq(("v", false, "r1"), ("amt", true, "r2"), ("u", true, "r3"))
+    val ref = axes.foldLeft(df) { case (acc, (k, desc, rc)) =>
+        val o = if (desc) col(k).desc else col(k).asc
+        acc.withColumn(rc, row_number()
+          .over(Window.partitionBy("g").orderBy(o, col("id"))).cast("long"))
+      }.withColumn("n", count(lit(1)).over(Window.partitionBy("g")))
+    for (k <- Seq(2, 3); n <- Seq(1, 3, 8)) {
+      val spec = axes.take(k)
+      val outCols = spec.map(_._3) :+ "n"
+      def byId(out: org.apache.spark.sql.DataFrame) =
+        out.select(col("id") +: outCols.map(col): _*).collect()
+          .map(r => r.getLong(0) -> outCols.indices.map(i => r.getLong(i + 1)))
+          .toMap
+      val got = GroupedPrefix.ranksMulti(df, "g", spec, ties = Seq(col("id")),
+        nCol = Some("n"), ranges = n)
+      assert(got.columns.toSeq == df.columns.toSeq ++ outCols)
+      assert(byId(got) == byId(ref), s"axes=$k ranges=$n diverged")
+    }
+  }
+
   test("ntile/percent_rank/cume_dist recoveries match Spark's window functions") {
     val w = Window.partitionBy("g").orderBy(col("v").asc, col("id"))
     val ref = data
