@@ -375,36 +375,20 @@ object Sampling {
     * training job's shard count does not scale with corpus size), so
     * `row_number over (partition by shard)` would serialize N/nShards
     * rows into one task — the r16 audit's fixed-domain case. Instead
-    * ONE global two-pass prefix sum ([[graft.operators.PrefixSum]])
-    * runs over the composite numeric key (shard, hash-rank, key) —
-    * ranges split freely INSIDE a shard — and per-shard positions are
-    * recovered by subtracting each shard's first prefix value (shards
-    * are contiguous in the composite order), the
-    * [[Packing.packByBudgetGrouped]] idiom. Identical output to the
-    * window form (the composite order IS (bucket100(key), key) within
-    * each shard — SamplingSpec pins equality). Requires
-    * key ∈ [0, 2⁴⁴) and nShards ≤ 4096 so the composite fits a long;
-    * out-of-range keys fail loudly per row. */
+    * the position is a grouped rank on the prefix engine
+    * ([[graft.operators.GroupedPrefix.rankWithin]], group = shard,
+    * order = (bucket100(key), key)), whose ranges split freely INSIDE a
+    * shard. Identical output to the window form (SamplingSpec pins
+    * equality). Any non-NULL numeric key works; a NULL key fails the
+    * engine's NULL-group check (its shard is NULL). */
   def shardShuffle(df: DataFrame, keyCol: String, nShards: Int): DataFrame = {
-    require(nShards >= 1 && nShards <= 4096,
-      s"shardShuffle supports 1..4096 shards, got $nShards")
-    val k = col(keyCol).cast("long")
-    val guarded = when(k >= 0L && k < lit(1L << 44), k)
-      .otherwise(raise_error(concat(lit(
-        s"shardShuffle: $keyCol out of [0, 2^44): "), k.cast("string"))))
-    val base = df
-      .withColumn("shard", shardOf(col(keyCol), nShards))
-      .withColumn("__sk",
-        col("shard").cast("long") * lit(1L << 51)
-          + bucket100(col(keyCol)).cast("long") * lit(1L << 44) + guarded)
-      .withColumn("__one", lit(1L))
-    val pre = graft.operators.PrefixSum.exclusive(base, "__sk",
-      descending = false, ties = Seq.empty, valueCol = "__one",
-      outCol = "__gpos")
-    val offs = broadcast(pre.groupBy("shard").agg(min("__gpos").as("__soff")))
-    pre.join(offs, Seq("shard"))
-      .withColumn("pos", col("__gpos") - col("__soff") + 1L)
-      .drop("__sk", "__one", "__gpos", "__soff")
+    require(nShards >= 1, s"shardShuffle needs >= 1 shard, got $nShards")
+    graft.operators.GroupedPrefix.rankWithin(
+        df.withColumn("shard", shardOf(col(keyCol), nShards))
+          .withColumn("__b", bucket100(col(keyCol))),
+        "shard", "__b", descending = false, ties = Seq(col(keyCol)),
+        rankCol = "pos")
+      .drop("__b")
   }
 
   /** MULTIPLICATIVE-WEIGHTS TRAJECTORY (the multi-round core of

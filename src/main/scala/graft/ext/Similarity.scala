@@ -66,34 +66,82 @@ object Similarity {
         .otherwise(0L)
     }.reduce(_ + _)
 
-  /** Brute-force cosine top-k: every query row against every corpus row,
-    * rank by (rounded score desc, id) per query — the rounded score is the
-    * ranking key so ordering is reproducible cross-engine. Query side is
-    * small by contract → broadcast; the corpus side streams, nothing
-    * collects. */
-  def bruteTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                embCol: String, k: Int): DataFrame = {
-    // Norms are per-ROW, so compute them before the pairing join — the
-    // oracle's `nm` CTE shape. Inlining `cosine` instead would re-run a
-    // norm dot product for both sides of every candidate pair (3×
-    // kernel work per pair instead of 1 dot + amortized norms).
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-      l2norm(col(embCol)).as("q_nrm"))
-    val c = graft.model.Tables.fanOut(corpus)
-      .select(col(idCol).as("neighbor_id"), col(embCol).as("c_emb"),
-        l2norm(col(embCol)).as("c_nrm"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4)
-          .as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("score"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"),
-        col("rank").cast("int").as("rank"))
+  // The retrieval tier below is candidate generation plus ONE shared
+  // scoring and top-k step: [[side]] projects either side, [[cosScore]]
+  // scores float candidates (and the IVF centroid probe), [[topK]] ranks
+  // per query and [[flaggedTopK]] adds the exact-recall flag.
+
+  /** The one side projection of the retrieval tier: `p` = "q" gives
+    * (query_id, q_emb, q_nrm, extra…) over `df`; `p` = "c" gives
+    * (neighbor_id, c_emb, c_nrm, extra…) over the fanned-out corpus.
+    * Norms are per ROW, computed before any pairing join — the oracle's
+    * `nm` CTE shape (inlining [[cosine]] would re-run a norm dot product
+    * for both sides of every candidate pair). */
+  private def side(df: DataFrame, p: String, idCol: String, embCol: String,
+                   extra: Column*): DataFrame = {
+    val (src, id) =
+      if (p == "q") (df, "query_id")
+      else (graft.model.Tables.fanOut(df), "neighbor_id")
+    src.select(Seq(col(idCol).as(id), col(embCol).as(s"${p}_emb"),
+      l2norm(col(embCol)).as(s"${p}_nrm")) ++ extra: _*)
   }
+
+  /** Rounded (4 dp) cosine from a dot product and the two norms — the
+    * ranking key, so ordering is reproducible cross-engine. 0.0 when a
+    * norm is 0 (cosine 0 by convention): a zero vector scores instead
+    * of ANSI-faulting the divide. */
+  private def cosScore(dotQC: Column, qNrm: Column, cNrm: Column): Column =
+    when(qNrm * cNrm === 0.0, lit(0.0))
+      .otherwise(round(dotQC / (qNrm * cNrm), 4))
+
+  private def notSelf: Column = col("neighbor_id") =!= col("query_id")
+
+  /** Float-tier candidates: corpus [[side]] ⋈ broadcast query side on
+    * `on` (a cross join when empty — queries are small by contract, the
+    * corpus streams, nothing collects), filtered by `keep`, scored by
+    * [[cosScore]]: (query_id, neighbor_id, carry…, score). */
+  private def cosinePairs(c: DataFrame, q: DataFrame, on: Seq[String],
+                          keep: Column, carry: String*): DataFrame = {
+    val pairs =
+      if (on.isEmpty) c.crossJoin(broadcast(q)) else c.join(broadcast(q), on)
+    pairs.filter(keep).select(Seq(col("query_id"), col("neighbor_id")) ++
+      carry.map(col) :+ cosScore(dot(col("q_emb"), col("c_emb")),
+        col("q_nrm"), col("c_nrm")).as("score"): _*)
+  }
+
+  /** The one per-query top-k tail: int `rank` = row_number over
+    * query_id by (`score` desc, `tie`), kept to rank ≤ k. */
+  private def topK(scored: DataFrame, score: String, k: Int,
+                   tie: String = "neighbor_id"): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("query_id").orderBy(desc(score), col(tie))
+    scored.withColumn("rank", row_number().over(w).cast("int"))
+      .filter(col("rank") <= k)
+  }
+
+  /** [[topK]] with each hit flagged against the exact float winner set
+    * ([[exactTopKFlags]], a broadcast left join): (query_id, rank,
+    * neighbor_id, cols…, in_exact_topk ∈ {0, 1}) ordered by (query_id,
+    * rank) — the recall readout of every approximate or quantized tier. */
+  private def flaggedTopK(scored: DataFrame, score: String, k: Int,
+                          corpus: DataFrame, queries: DataFrame,
+                          idCol: String, embCol: String,
+                          cols: Column*): DataFrame =
+    topK(scored, score, k)
+      .join(broadcast(exactTopKFlags(corpus, queries, idCol, embCol, k)),
+        Seq("query_id", "neighbor_id"), "left")
+      .select(Seq(col("query_id"), col("rank"), col("neighbor_id")) ++ cols :+
+        coalesce(col("hit"), lit(0)).as("in_exact_topk"): _*)
+      .orderBy("query_id", "rank")
+
+  /** Brute-force cosine top-k: every query row against every corpus row,
+    * rank by (rounded score desc, id) per query. Query side is small by
+    * contract → broadcast; the corpus side streams, nothing collects. */
+  def bruteTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
+                embCol: String, k: Int): DataFrame =
+    topK(cosinePairs(side(corpus, "c", idCol, embCol),
+        side(queries, "q", idCol, embCol), Nil, notSelf), "score", k)
+      .select("query_id", "neighbor_id", "score", "rank")
 
   /** LSH-bucketed approximate top-k: both sides keyed by sign-LSH bucket,
     * candidates = same-bucket rows only (equi join on bucket), then exact
@@ -101,24 +149,11 @@ object Similarity {
     * one hash join + one bounded window instead of a cross product. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               embCol: String, k: Int, nPlanes: Int = 4, dim: Int = 64): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-      l2norm(col(embCol)).as("q_nrm"),
-      bucketCol(col(embCol), nPlanes, dim).as("bucket"))
-    val c = graft.model.Tables.fanOut(corpus)
-      .select(col(idCol).as("neighbor_id"), col(embCol).as("c_emb"),
-        l2norm(col(embCol)).as("c_nrm"),
-        bucketCol(col(embCol), nPlanes, dim).as("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("bucket"),
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4)
-          .as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("score"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("bucket"), col("score"),
-        col("rank").cast("int").as("rank"))
+    val b = bucketCol(col(embCol), nPlanes, dim).as("bucket")
+    topK(cosinePairs(side(corpus, "c", idCol, embCol, b),
+        side(queries, "q", idCol, embCol, b), Seq("bucket"), notSelf, "bucket"),
+        "score", k)
+      .select("query_id", "neighbor_id", "bucket", "score", "rank")
   }
 
   /** Multi-probe LSH top-k (q192, the Lv et al. VLDB'07 idea on the
@@ -130,9 +165,9 @@ object Similarity {
     * what single-probe [[lshTopK]] loses while still never touching the
     * other 11/16 of the corpus — the standard memory-free alternative
     * to simply using fewer planes (which would double EVERY bucket).
-    * Each hit carries an `in_exact_topk` flag against the float
-    * [[bruteTopK]] winner set, so the recall the extra probes buy is
-    * measured, not asserted.
+    * Each hit carries an `in_exact_topk` flag against the exact
+    * [[exactTopKFlags]] winner set, so the recall the extra probes buy
+    * is measured, not asserted.
     *
     * Scale shape: the probe fan-out multiplies only the QUERY side
     * (|Q|·(nPlanes+1) rows, still broadcast); the corpus side keeps its
@@ -143,31 +178,14 @@ object Similarity {
                         embCol: String, k: Int, nPlanes: Int = 4,
                         dim: Int = 64): DataFrame = {
     val masks = lit(0L) +: (0 until nPlanes).map(m => lit(1L << m))
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-        l2norm(col(embCol)).as("q_nrm"),
-        bucketCol(col(embCol), nPlanes, dim).as("qb"))
+    val b = bucketCol(col(embCol), nPlanes, dim)
+    val q = side(queries, "q", idCol, embCol, b.as("qb"))
       .withColumn("mask", explode(array(masks: _*)))
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
         expr("qb ^ mask").as("bucket"))
-    val c = graft.model.Tables.fanOut(corpus)
-      .select(col(idCol).as("neighbor_id"), col(embCol).as("c_emb"),
-        l2norm(col(embCol)).as("c_nrm"),
-        bucketCol(col(embCol), nPlanes, dim).as("bucket"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("score"), col("neighbor_id"))
-    val exact = bruteTopK(corpus, queries, idCol, embCol, k)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    c.join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4)
-          .as("score"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .join(broadcast(exact), Seq("query_id", "neighbor_id"), "left")
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("score"),
-        coalesce(col("hit"), lit(0)).as("in_exact_topk"))
-      .orderBy("query_id", "rank")
+    val c = side(corpus, "c", idCol, embCol, b.as("bucket"))
+    flaggedTopK(cosinePairs(c, q, Seq("bucket"), notSelf), "score", k,
+      corpus, queries, idCol, embCol, col("score"))
   }
 
   /** Hard-negative mining: for each query, the top-k most-similar
@@ -179,25 +197,11 @@ object Similarity {
     * |Q|-bounded broadcast shape as [[bruteTopK]]: exact over the full
     * corpus, queries small by contract. */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, idCol: String,
-                    embCol: String, labelCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      col(labelCol).as("q_label"), col(embCol).as("q_emb"),
-      l2norm(col(embCol)).as("q_nrm"))
-    val c = graft.model.Tables.fanOut(corpus)
-      .select(col(idCol).as("neighbor_id"), col(labelCol).as("n_label"),
-        col(embCol).as("c_emb"), l2norm(col(embCol)).as("c_nrm"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("n_label") =!= col("q_label"))
-      .select(col("query_id"), col("neighbor_id"), col("n_label"),
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4)
-          .as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("score"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("n_label"),
-        col("score"), col("rank").cast("int").as("rank"))
-  }
+                    embCol: String, labelCol: String, k: Int): DataFrame =
+    topK(cosinePairs(side(corpus, "c", idCol, embCol, col(labelCol).as("n_label")),
+        side(queries, "q", idCol, embCol, col(labelCol).as("q_label")), Nil,
+        col("n_label") =!= col("q_label"), "n_label"), "score", k)
+      .select("query_id", "neighbor_id", "n_label", "score", "rank")
 
   /** The 100 TB path for [[hardNegatives]]: sign-LSH bucket equi join
     * generates candidates (one hash join, no cross product), the label
@@ -207,25 +211,12 @@ object Similarity {
   def hardNegativesLsh(corpus: DataFrame, queries: DataFrame, idCol: String,
                        embCol: String, labelCol: String, k: Int,
                        nPlanes: Int = 4, dim: Int = 64): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      col(labelCol).as("q_label"), col(embCol).as("q_emb"),
-      l2norm(col(embCol)).as("q_nrm"),
-      bucketCol(col(embCol), nPlanes, dim).as("bucket"))
-    val c = graft.model.Tables.fanOut(corpus)
-      .select(col(idCol).as("neighbor_id"), col(labelCol).as("n_label"),
-        col(embCol).as("c_emb"), l2norm(col(embCol)).as("c_nrm"),
-        bucketCol(col(embCol), nPlanes, dim).as("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("n_label") =!= col("q_label"))
-      .select(col("query_id"), col("neighbor_id"), col("n_label"),
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4)
-          .as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("score"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("n_label"),
-        col("score"), col("rank").cast("int").as("rank"))
+    val b = bucketCol(col(embCol), nPlanes, dim).as("bucket")
+    topK(cosinePairs(
+        side(corpus, "c", idCol, embCol, col(labelCol).as("n_label"), b),
+        side(queries, "q", idCol, embCol, col(labelCol).as("q_label"), b),
+        Seq("bucket"), col("n_label") =!= col("q_label"), "n_label"), "score", k)
+      .select("query_id", "neighbor_id", "n_label", "score", "rank")
   }
 
   /** Double-precision dot product over two `array<double>` columns —
@@ -272,37 +263,11 @@ object Similarity {
     * is equi on cell — no cross product anywhere.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              embCol: String, cellCol: String, k: Int, nprobe: Int = 2): DataFrame = {
-    val cents = cellCentroids(corpus, cellCol, embCol)
-      .withColumn("cnrm", sqrt(dotD(col("centroid"), col("centroid"))))
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-      l2norm(col(embCol)).as("q_nrm"))
-    val probeScore = round(
-      dotD(col("q_emb").cast("array<double>"), col("centroid")) /
-        (col("q_nrm") * col("cnrm")), 4)
-    val pw = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("cscore"), col("cell"))
-    val probed = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"),
-        probeScore.as("cscore"))
-      .withColumn("prk", row_number().over(pw))
-      .filter(col("prk") <= nprobe)
-      .select("query_id", "q_emb", "q_nrm", "cell")
-    val c = graft.model.Tables.fanOut(corpus)
-      .select(col(cellCol).as("cell"), col(idCol).as("neighbor_id"),
-        col(embCol).as("c_emb"), l2norm(col(embCol)).as("c_nrm"))
-    val scored = c.join(broadcast(probed), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4)
-          .as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("score"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cell"), col("score"),
-        col("rank").cast("int").as("rank"))
-  }
+              embCol: String, cellCol: String, k: Int, nprobe: Int = 2): DataFrame =
+    topK(cosinePairs(side(corpus, "c", idCol, embCol, col(cellCol).as("cell")),
+        probedCells(corpus, queries, idCol, embCol, cellCol, nprobe),
+        Seq("cell"), notSelf, "cell"), "score", k)
+      .select("query_id", "neighbor_id", "cell", "score", "rank")
 
   /** One k-means refinement step over the embedding corpus (q76): score
     * every vector against the current centroids (label-cell seeds —
@@ -390,132 +355,64 @@ object Similarity {
     * restriction composes on top — [[ivfTopK]]), it never adds to it. */
   def quantizedTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                     embCol: String, k: Int): DataFrame = {
-    val normExpr =
-      s"""transform($embCol, x -> CASE WHEN _nrm = 0.0D THEN 0.0D
-         |  ELSE CAST(x AS DOUBLE) / _nrm END)""".stripMargin
+    def unit(p: String): Column = expr(
+      s"""transform(${p}_emb, x -> CASE WHEN ${p}_nrm = 0.0D THEN 0.0D
+         |  ELSE CAST(x AS DOUBLE) / ${p}_nrm END)""".stripMargin).as("nx")
     val codeExpr =
       """transform(nx, x -> CAST(CASE WHEN scale = 0.0D THEN 0.0D
         |  ELSE floor(127.0D * x / scale) END AS BIGINT))""".stripMargin
-    val cN = graft.model.Tables.fanOut(corpus)
-      .withColumn("_nrm", l2norm(col(embCol)))
-      .select(col(idCol).as("neighbor_id"), expr(normExpr).as("nx"))
+    val cN = side(corpus, "c", idCol, embCol).select(col("neighbor_id"), unit("c"))
     val scale = cN.select(explode(col("nx")).as("x"))
       .agg(max(abs(col("x"))).as("scale"))
-    val q = queries.withColumn("_nrm", l2norm(col(embCol)))
-      .select(col(idCol).as("query_id"), expr(normExpr).as("nx"))
+    val q = side(queries, "q", idCol, embCol).select(col("query_id"), unit("q"))
       .crossJoin(broadcast(scale))
       .select(col("query_id"), expr(codeExpr).as("q_code"))
     val c = cN.crossJoin(broadcast(scale))
       .select(col("neighbor_id"), expr(codeExpr).as("c_code"))
     val scored = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
+      .filter(notSelf)
       .select(col("query_id"), col("neighbor_id"),
         expr("aggregate(zip_with(q_code, c_code, (a, b) -> a * b), " +
           "CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("qdot"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("qdot"), col("neighbor_id"))
-    // Exact float baseline for the recall flag — exactTopKFlags shares
-    // the zero-norm guard, so a degenerate vector can't ANSI-fault.
-    val exact = exactTopKFlags(corpus, queries, idCol, embCol, k)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .join(broadcast(exact), Seq("query_id", "neighbor_id"), "left")
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("qdot"),
-        coalesce(col("hit"), lit(0)).as("in_exact_topk"))
-      .orderBy("query_id", "rank")
+    flaggedTopK(scored, "qdot", k, corpus, queries, idCol, embCol, col("qdot"))
   }
 
-  /** PRODUCT-QUANTIZATION retrieval (Jégou–Douze–Schmid, PAMI 2011) —
-    * the compression rung above the q187 int8 scalar codes: the unit
-    * vector is split into `nSub` subvectors, each coded as its nearest
-    * entry of a per-subspace codebook, and queries score candidates by
-    * ASYMMETRIC DISTANCE COMPUTATION — one |codebook|-entry lookup
-    * table of exact query·centroid dots per (query, subspace), so
-    * scoring a candidate is `nSub` table lookups + adds instead of a
-    * 64-float dot, and the stored corpus is nSub one-byte codes per
-    * vector (8× smaller than float32 at the 32×64 default).
-    *
-    * Everything is integer-exact in the q187 contract: unit vectors
-    * quantize ONCE to e6 integer components; code assignment is argmin
-    * of exact integer squared distances (ties to the smallest centroid
-    * id); the codebook is DETERMINISTIC — seeded by the subvectors of
-    * the first `nCent` corpus vectors, then ONE Lloyd refinement step
-    * (assign every corpus subvector to its seed, recenter each cluster
-    * at the sign-split floor-mean of its members — measured recall@5
-    * 0.78 vs 0.68 unrefined at sf0.01; a fully trained PQ iterates this
-    * same step); LUT entries and scores are exact integer dots, so the
-    * winner set reproduces value-for-value on both engines. Each hit is
-    * flagged against the exact float top-k (the recall readout — on
-    * REAL clustered embeddings PQ does far better than on this
-    * near-uniform synthetic set).
-    *
-    * Scale shape: coding is one posexplode projection joined to the
-    * BROADCAST codebook (nCent-fanout on narrow integer rows, scan
-    * side); the LUT is |Q|·nSub·nCent rows (broadcast); scoring joins
-    * codes to the LUT on (subspace, code) keys and rolls up per
-    * (query, vector) — no float dot per pair anywhere, no cross
-    * product beyond the bounded LUT side. */
   /** Exact float top-k winner set as (query_id, neighbor_id, hit=1)
-    * rows — the recall readout the quantized tiers (q187 int8, q227
-    * PQ, q233 IVFADC) flag their hits against. The bruteTopK shape
-    * with the zero-norm guard (cosine 0 by convention) so a
-    * degenerate vector can't ANSI-fault the divide. */
+    * rows — the recall readout the approximate tiers (q192 multi-probe,
+    * q187 int8, q227 PQ, q233 IVFADC, q292 residual IVFADC, graph ANN)
+    * flag their hits against: [[bruteTopK]] itself. */
   private def exactTopKFlags(corpus: DataFrame, queries: DataFrame,
                              idCol: String, embCol: String,
                              k: Int): DataFrame =
-    // Four quantized tiers (q187/q227/q233/q292) plus q246's nested
-    // re-runs flag against the IDENTICAL exact winner set — memoize the
-    // |Q|·k flag relation rather than re-paying the corpus×|Q| scoring
-    // cross per query. Keyed on BOTH plans + k; output is tiny.
+    // Those tiers plus q246's nested re-runs flag against the IDENTICAL
+    // exact winner set — memoize the |Q|·k flag relation rather than
+    // re-paying the corpus×|Q| scoring cross per query. Keyed on BOTH
+    // plans + k; output is tiny.
     StageCache.getOrStage(
         StageCache.keyFor(corpus, "exactflags", idCol, embCol, k,
           StageCache.keyFor(queries))) {
-      exactTopKFlagsBuild(corpus, queries, idCol, embCol, k)
+      bruteTopK(corpus, queries, idCol, embCol, k)
+        .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
         .localCheckpoint()
     }
 
-  private def exactTopKFlagsBuild(corpus: DataFrame, queries: DataFrame,
-                                  idCol: String, embCol: String,
-                                  k: Int): DataFrame = {
-    val qe = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-      l2norm(col(embCol)).as("q_nrm"))
-    val ce = graft.model.Tables.fanOut(corpus)
-      .select(col(idCol).as("neighbor_id"), col(embCol).as("c_emb"),
-        l2norm(col(embCol)).as("c_nrm"))
-    val ew = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("score"), col("neighbor_id"))
-    ce.crossJoin(broadcast(qe))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(col("q_nrm") * col("c_nrm") === 0.0, lit(0.0))
-          .otherwise(round(dot(col("q_emb"), col("c_emb")) /
-            (col("q_nrm") * col("c_nrm")), 4)).as("score"))
-      .withColumn("rank", row_number().over(ew))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
+  /** Unit-e6 subvector projection (the q187/q227 integer contract) of
+    * one [[side]]: (query_id | neighbor_id, m, j, xe6) — subspace
+    * m = i div sw, within-subspace j, xe6 = round(x̂·10⁶) with the
+    * zero-norm → 0 guard. Shared by the PQ family (q227/q233) and the
+    * residual variant (q292). */
+  private def unitE6Proj(df: DataFrame, p: String, idCol: String,
+                         embCol: String, sw: Int): DataFrame = {
+    val s = side(df, p, idCol, embCol)
+    val id = s.columns.head
+    s.select(col(id), posexplode(col(s"${p}_emb")).as(Seq("i", "x")),
+        col(s"${p}_nrm").as("_nrm"))
+      .select(col(id), (col("i") / sw).cast("int").as("m"),
+        (col("i") % sw).cast("int").as("j"),
+        when(col("_nrm") === 0.0, 0L)
+          .otherwise(round(col("x") / col("_nrm") * 1e6, 0).cast("long"))
+          .as("xe6"))
   }
-
-  /** The PQ machinery shared by [[pqTopK]] and [[ivfPqTopK]]: the
-    * deterministic Lloyd-refined codebook, the corpus codes
-    * (neighbor_id, m, aid), and the per-query ADC lookup table
-    * (query_id, m, aid, pdot) — exactly the q227 construction, shared
-    * verbatim so the IVF composition scores with the identical
-    * codebook. */
-  /** Unit-e6 subvector projection (the q187/q227 integer contract):
-    * (outId, m, j, xe6) — subspace m = i div sw, within-subspace j,
-    * xe6 = round(x̂·10⁶) with the zero-norm → 0 guard. Shared by the PQ
-    * family (q227/q233) and the residual variant (q292). */
-  private def unitE6Proj(df: DataFrame, idCol: String, embCol: String,
-                         outId: String, sw: Int): DataFrame = df
-    .withColumn("_nrm", l2norm(col(embCol)))
-    .select(col(idCol).as(outId),
-      posexplode(col(embCol)).as(Seq("i", "x")), col("_nrm"))
-    .select(col(outId), (col("i") / sw).cast("int").as("m"),
-      (col("i") % sw).cast("int").as("j"),
-      when(col("_nrm") === 0.0, 0L)
-        .otherwise(round(col("x") / col("_nrm") * 1e6, 0).cast("long"))
-        .as("xe6"))
 
   /** The deterministic PQ training + coding shared by q227/q233/q292:
     * seed the per-subspace codebook from the first `nCent` vectors'
@@ -566,6 +463,12 @@ object Similarity {
       .localCheckpoint() // read 2x: coding join + the caller's LUT
   }
 
+  /** The PQ machinery shared by [[pqTopK]] and [[ivfPqTopK]]: the
+    * deterministic Lloyd-refined codebook, the corpus codes
+    * (neighbor_id, m, aid), and the per-query ADC lookup table
+    * (query_id, m, aid, pdot) — exactly the q227 construction, shared
+    * verbatim so the IVF composition scores with the identical
+    * codebook. */
   private def pqCodesAndLut(corpus: DataFrame, queries: DataFrame,
                             idCol: String, embCol: String, dim: Int,
                             nSub: Int, nCent: Int): (DataFrame, DataFrame) = {
@@ -579,38 +482,76 @@ object Similarity {
     val base = StageCache.keyFor(corpus, "pq", idCol, embCol, dim, nSub,
       nCent)
     val cx = StageCache.getOrStage(s"$base:cx") {
-      unitE6Proj(graft.model.Tables.fanOut(corpus), idCol, embCol,
-          "neighbor_id", sw)
+      unitE6Proj(corpus, "c", idCol, embCol, sw)
         .localCheckpoint() // read 4x: seed, refine, coding, LUT side
     }
     val (book, codes) = lloydBookAndCodes(cx, nCent, s"$base:raw")
-    val lut = unitE6Proj(queries, idCol, embCol, "query_id", sw)
+    val lut = unitE6Proj(queries, "q", idCol, embCol, sw)
       .join(broadcast(book), Seq("m", "j"))
       .groupBy(col("query_id"), col("m"), col("aid"))
       .agg(sum(col("xe6") * col("ce6")).as("pdot"))
     (codes, lut)
   }
 
+  /** PRODUCT-QUANTIZATION retrieval (Jégou–Douze–Schmid, PAMI 2011) —
+    * the compression rung above the q187 int8 scalar codes: the unit
+    * vector is split into `nSub` subvectors, each coded as its nearest
+    * entry of a per-subspace codebook, and queries score candidates by
+    * ASYMMETRIC DISTANCE COMPUTATION — one |codebook|-entry lookup
+    * table of exact query·centroid dots per (query, subspace), so
+    * scoring a candidate is `nSub` table lookups + adds instead of a
+    * 64-float dot, and the stored corpus is nSub one-byte codes per
+    * vector (8× smaller than float32 at the 32×64 default).
+    *
+    * Everything is integer-exact in the q187 contract: unit vectors
+    * quantize ONCE to e6 integer components; code assignment is argmin
+    * of exact integer squared distances (ties to the smallest centroid
+    * id); the codebook is DETERMINISTIC — seeded by the subvectors of
+    * the first `nCent` corpus vectors, then ONE Lloyd refinement step
+    * (assign every corpus subvector to its seed, recenter each cluster
+    * at the sign-split floor-mean of its members — measured recall@5
+    * 0.78 vs 0.68 unrefined at sf0.01; a fully trained PQ iterates this
+    * same step); LUT entries and scores are exact integer dots, so the
+    * winner set reproduces value-for-value on both engines. Each hit is
+    * flagged against the exact float top-k (the recall readout — on
+    * REAL clustered embeddings PQ does far better than on this
+    * near-uniform synthetic set).
+    *
+    * Scale shape: coding is one posexplode projection joined to the
+    * BROADCAST codebook (nCent-fanout on narrow integer rows, scan
+    * side); the LUT is |Q|·nSub·nCent rows (broadcast); scoring joins
+    * codes to the LUT on (subspace, code) keys and rolls up per
+    * (query, vector) — no float dot per pair anywhere, no cross
+    * product beyond the bounded LUT side. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              embCol: String, k: Int, dim: Int = 64, nSub: Int = 32,
              nCent: Int = 64): DataFrame = {
     val (codes, lut) =
       pqCodesAndLut(corpus, queries, idCol, embCol, dim, nSub, nCent)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("pq_dot"), col("neighbor_id"))
     val scored = codes.join(broadcast(lut), Seq("m", "aid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
+      .filter(notSelf)
       .groupBy("query_id", "neighbor_id")
       .agg(sum("pdot").as("pq_dot"))
-    // exact float top-k flag — the q187 recall readout
-    val exact = exactTopKFlags(corpus, queries, idCol, embCol, k)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .join(broadcast(exact), Seq("query_id", "neighbor_id"), "left")
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("pq_dot").cast("long").as("pq_dot"),
-        coalesce(col("hit"), lit(0)).as("in_exact_topk"))
-      .orderBy("query_id", "rank")
+    flaggedTopK(scored, "pq_dot", k, corpus, queries, idCol, embCol,
+      col("pq_dot").cast("long").as("pq_dot"))
+  }
+
+  /** The q49/q233/q292 coarse probe: each query's [[side]] row repeated
+    * for its `nprobe` nearest cells by rounded centroid cosine
+    * ([[cosScore]] over the double-precision centroid dot), `cell`
+    * appended. */
+  private def probedCells(corpus: DataFrame, queries: DataFrame,
+                          idCol: String, embCol: String, cellCol: String,
+                          nprobe: Int): DataFrame = {
+    val cents = cellCentroids(corpus, cellCol, embCol)
+      .withColumn("cnrm", sqrt(dotD(col("centroid"), col("centroid"))))
+    val q = side(queries, "q", idCol, embCol)
+    val qCols = q.columns.toSeq.map(col)
+    topK(q.crossJoin(broadcast(cents)).select(qCols ++ Seq(col("cell"),
+        cosScore(dotD(col("q_emb").cast("array<double>"), col("centroid")),
+          col("q_nrm"), col("cnrm")).as("cscore")): _*),
+        "cscore", nprobe, tie = "cell")
+      .select(qCols :+ col("cell"): _*)
   }
 
   /** IVFADC — the Jégou–Douze–Schmid COMPOSITION of the two scale
@@ -635,53 +576,23 @@ object Similarity {
     * codes to the BROADCAST LUT on (query, subspace, centroid) integer
     * keys — no cross product, no float dot per pair, nothing
     * corpus-wide after the one coding pass PQ already pays. */
-  /** The q49/q233/q292 coarse probe: each query's `nprobe` nearest
-    * cells by rounded centroid cosine — (query_id, cell) rows. */
-  private def probedCells(corpus: DataFrame, queries: DataFrame,
-                          idCol: String, embCol: String, cellCol: String,
-                          nprobe: Int): DataFrame = {
-    val cents = cellCentroids(corpus, cellCol, embCol)
-      .withColumn("cnrm", sqrt(dotD(col("centroid"), col("centroid"))))
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-      l2norm(col(embCol)).as("q_nrm"))
-    val probeScore = round(
-      dotD(col("q_emb").cast("array<double>"), col("centroid")) /
-        (col("q_nrm") * col("cnrm")), 4)
-    val pw = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("cscore"), col("cell"))
-    q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("cell"), probeScore.as("cscore"))
-      .withColumn("prk", row_number().over(pw))
-      .filter(col("prk") <= nprobe)
-      .select("query_id", "cell")
-  }
-
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 embCol: String, cellCol: String, k: Int, nprobe: Int = 2,
                 dim: Int = 64, nSub: Int = 32, nCent: Int = 64): DataFrame = {
-    val probed =
-      probedCells(corpus, queries, idCol, embCol, cellCol, nprobe)
+    val probed = probedCells(corpus, queries, idCol, embCol, cellCol, nprobe)
+      .select("query_id", "cell")
     val (codes, lut) =
       pqCodesAndLut(corpus, queries, idCol, embCol, dim, nSub, nCent)
     val cand = graft.model.Tables.fanOut(corpus)
       .select(col(cellCol).as("cell"), col(idCol).as("neighbor_id"))
       .join(broadcast(probed), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
+      .filter(notSelf)
     val scored = codes.join(cand, Seq("neighbor_id"))
       .join(broadcast(lut), Seq("query_id", "m", "aid"))
       .groupBy("query_id", "neighbor_id", "cell")
       .agg(sum("pdot").as("pq_dot"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("pq_dot"), col("neighbor_id"))
-    val exact = exactTopKFlags(corpus, queries, idCol, embCol, k)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .join(broadcast(exact), Seq("query_id", "neighbor_id"), "left")
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("cell"),
-        col("pq_dot").cast("long").as("pq_dot"),
-        coalesce(col("hit"), lit(0)).as("in_exact_topk"))
-      .orderBy("query_id", "rank")
+    flaggedTopK(scored, "pq_dot", k, corpus, queries, idCol, embCol,
+      col("cell"), col("pq_dot").cast("long").as("pq_dot"))
   }
 
   /** IVFADC with RESIDUAL encoding (q292) — the published Jégou–Douze–
@@ -730,7 +641,7 @@ object Similarity {
     val base = StageCache.keyFor(corpus, "ivfres", idCol, embCol, cellCol,
       dim, nSub, nCent)
     val cx = StageCache.getOrStage(s"$base:cx") {
-      unitE6Proj(fanned, idCol, embCol, "neighbor_id", sw)
+      unitE6Proj(corpus, "c", idCol, embCol, sw)
         .join(cellOf, Seq("neighbor_id"))
         .localCheckpoint() // read 2x: centroid rollup + residual build
     }
@@ -752,8 +663,9 @@ object Similarity {
     }
     val (book, codes) = lloydBookAndCodes(rx, nCent, s"$base:res")
     val probed = probedCells(corpus, queries, idCol, embCol, cellCol, nprobe)
+      .select("query_id", "cell")
     // Query residual against EACH probed cell + the exact offset term.
-    val qx = unitE6Proj(queries, idCol, embCol, "query_id", sw)
+    val qx = unitE6Proj(queries, "q", idCol, embCol, sw)
       .join(broadcast(probed), Seq("query_id"))
       .join(broadcast(cent6), Seq("cell", "m", "j"))
       .localCheckpoint() // read 2x: LUT + offset
@@ -768,7 +680,7 @@ object Similarity {
     val cand = fanned
       .select(col(cellCol).as("cell"), col(idCol).as("neighbor_id"))
       .join(broadcast(probed), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
+      .filter(notSelf)
     val scored = codes.join(cand, Seq("neighbor_id"))
       .join(broadcast(lut), Seq("query_id", "cell", "m", "aid"))
       .groupBy("query_id", "neighbor_id", "cell")
@@ -776,17 +688,8 @@ object Similarity {
       .join(broadcast(offset), Seq("query_id", "cell"))
       .select(col("query_id"), col("neighbor_id"), col("cell"),
         (col("rdot") + col("cdot")).as("adc_dot"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("adc_dot"), col("neighbor_id"))
-    val exact = exactTopKFlags(corpus, queries, idCol, embCol, k)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .join(broadcast(exact), Seq("query_id", "neighbor_id"), "left")
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("cell"),
-        col("adc_dot").cast("long").as("adc_dot"),
-        coalesce(col("hit"), lit(0)).as("in_exact_topk"))
-      .orderBy("query_id", "rank")
+    flaggedTopK(scored, "adc_dot", k, corpus, queries, idCol, embCol,
+      col("cell"), col("adc_dot").cast("long").as("adc_dot"))
   }
 
   /** Per-label SILHOUETTE quality of an embedding clustering — the
@@ -1124,10 +1027,10 @@ object Similarity {
                       marginThresholdPpm: Long = 1020000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val fanned = graft.model.Tables.fanOut(corpus)
-    def side(tag: String) = fanned.select(col(bucketCol).as("bucket"),
+    def half(tag: String) = fanned.select(col(bucketCol).as("bucket"),
       col(srcCol).as(s"src_$tag"), col(idCol).as(s"id_$tag"),
       col(embCol).as(s"emb_$tag"), l2norm(col(embCol)).as(s"nrm_$tag"))
-    val pairs = side("a").join(side("b"), Seq("bucket"))
+    val pairs = half("a").join(half("b"), Seq("bucket"))
       .filter(col("src_a") < col("src_b"))
       .select(col("src_a"), col("id_a"), col("src_b"), col("id_b"),
         round(dot(col("emb_a"), col("emb_b")) /

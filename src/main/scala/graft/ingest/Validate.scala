@@ -42,6 +42,10 @@ object Validate {
   def accept(df: DataFrame, rules: Seq[Column]): DataFrame =
     df.filter(rules.reduce(_ && _))
 
+  /** The exact complement of [[accept]]: every row it does not keep,
+    * including rows whose rules evaluate to NULL (a NULL key under
+    * `keyMatches`), which SQL's three-valued filter would otherwise drop
+    * from both streams. */
   def reject(df: DataFrame, rules: Seq[Column]): DataFrame =
-    df.filter(!rules.reduce(_ && _))
+    df.filter(!coalesce(rules.reduce(_ && _), lit(false)))
 }

@@ -34,31 +34,14 @@ object Bfs {
     * [[Graph.undirectedEdges]] contract); `seeds` one `seed` column. */
   def hopDistances(edges: DataFrame, seeds: DataFrame,
                    maxHops: Int): DataFrame =
-    hopDistancesAdj(symmetricAdjStaged(edges), seeds, maxHops)
+    hopDistancesAdj(Graph.symStaged(edges)
+      .select(col("u").as("src"), col("v").as("dst")), seeds, maxHops)
 
-  /** The staged symmetric adjacency for [[hopDistancesAdj]]: both
-    * directions of each canonical edge, checkpointed once. Callers
-    * running SEVERAL BFS passes over one graph (double sweep, iFUB's
-    * six-sweep certificate) build this once instead of paying a
-    * 2|E|-row materialization per sweep. */
-  def symmetricAdj(edges: DataFrame): DataFrame =
-    edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
-      .localCheckpoint()
-
-  /** [[symmetricAdj]] memoized on the edge plan
-    * ([[graft.ext.StageCache]]): THREE registered queries walk the same
-    * supplier↔customer graph (q188 multi-source hops, q285 double
-    * sweep, q291 iFUB), and before r17 q188 materialized its own
-    * 2|E|-row copy of the adjacency the sweep family had already
-    * staged. The key carries no hop cap — the adjacency does not
-    * depend on it. */
-  def symmetricAdjStaged(edges: DataFrame): DataFrame =
-    graft.ext.StageCache.getOrStage(
-      graft.ext.StageCache.keyFor(edges, "symadj-bfs"))(symmetricAdj(edges))
-
-  /** [[hopDistances]] over a prebuilt [[symmetricAdj]] relation. Each
-    * level's NEW reach is checkpointed once and never re-materialized:
+  /** [[hopDistances]] over a prebuilt symmetric adjacency (`src`, `dst`:
+    * both directions of each canonical edge — a rename projection over
+    * [[Graph.symStaged]], staged once per edge plan, so callers running
+    * SEVERAL BFS passes over one graph share it). Each level's NEW
+    * reach is checkpointed once and never re-materialized:
     * `visited` stays a union over the per-level checkpointed frames
     * (≤ maxHops materialized inputs — a shallow plan, no re-copy of
     * already-found rows per level, which halves the per-level job

@@ -32,9 +32,11 @@ object Graph {
     * [[graft.ext.StageCache]]-memoized on the edge plan because FOUR
     * registered families over the support-pruned co-purchase graph
     * (q223 coreness, q263/q279 LPA, q274 betweenness) each built and
-    * checkpointed this identical 2|E|-row relation per suite pass.
-    * Column types pass through untouched; consumers that need casts
-    * apply them as free projections over the staged blocks. */
+    * checkpointed this identical 2|E|-row relation per suite pass; the
+    * BFS family over the supplier↔customer graph (q188 hops, q285/q291
+    * sweeps) reads it renamed to (src, dst). Column types pass through
+    * untouched; consumers that need casts or names apply them as free
+    * projections over the staged blocks. */
   private[operators] def symStaged(edgesIn: DataFrame): DataFrame =
     graft.ext.StageCache.getOrStage(
         graft.ext.StageCache.keyFor(edgesIn, "symadj")) {
@@ -892,15 +894,15 @@ object Graph {
     import graft.ext.StageCache
     def key(part: String): String =
       StageCache.keyFor(edgesIn, "sweep", maxHops, part)
-    // The adjacency rides the plan-keyed SHARED memo, keyed on the raw
-    // `edgesIn` plan so q188's hopDistances over the same graph hits
+    // The adjacency is [[symStaged]] renamed to (src, dst), keyed on the
+    // raw `edgesIn` plan so q188's hopDistances over the same graph hits
     // the same entry (the hop cap doesn't shape the adjacency). The
     // former per-family `edges` re-checkpoint is gone: both registered
     // callers pass the already-staged supplier↔customer edge list, and
     // the one remaining direct read (the u0 seed scan) is a projection
     // over its blocks.
     val edges = edgesIn
-    val adj = Bfs.symmetricAdjStaged(edgesIn)
+    val adj = symStaged(edgesIn).select(col("u").as("src"), col("v").as("dst"))
     val u0 = StageCache.getOrStage(key("u0")) {
       edges.select(col("u").as("node"))
         .unionAll(edges.select(col("v").as("node")))

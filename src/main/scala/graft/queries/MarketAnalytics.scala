@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.model.{Parity, Tables}
+import graft.model.{Catalog, Parity, Tables}
 
 /** The market/time-series half of the reference analytics surface
   * (SURVEY.md §2.4–§2.7): the ClickHouse SQL query API of
@@ -69,15 +69,10 @@ object MarketAnalytics {
   }
 
   /** `daily_market_summary` view (A2, `setup_clickhouse.py:252-264`):
-    * per-date grouped aggregates. */
+    * per-date grouped aggregates — [[Catalog.dailyMarketSummary]],
+    * ordered by date. */
   def dailySummary(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .groupBy(col("o_orderdate").cast("date").as("order_date"))
-      .agg(
-        count(lit(1)).as("n_orders"),
-        moneyAvg(col("o_totalprice")).as("avg_price"),
-        moneySum(col("o_totalprice")).as("total_amount"))
-      .orderBy("order_date")
+    Catalog.dailyMarketSummary(spark, dir).orderBy("order_date")
 
   /** Conditional counts (A3, `stock_master.py:261-270`):
     * `countIf(is_active=1)`-style per-market stats. */
@@ -201,17 +196,13 @@ object MarketAnalytics {
   /** `latest_prices` view (J4, `setup_clickhouse.py:267-283`): correlated
     * scalar subquery `trade_date = (SELECT max(trade_date) … sp2.symbol =
     * sp.symbol)` decorrelated into a per-key window — one shuffle on the
-    * key instead of a rescan per row. */
-  def latestPerKey(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey")
-      .orderBy(desc("o_orderdate"), desc("o_orderkey"))
-    Tables.orders(spark, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    * key instead of a rescan per row. The view body is
+    * [[Catalog.latestPrices]]; this adds the report columns and order. */
+  def latestPerKey(spark: SparkSession, dir: String): DataFrame =
+    Catalog.latestPrices(spark, dir)
       .select(col("o_custkey"), col("o_orderkey"),
         col("o_orderdate").cast("date").as("latest_date"), col("o_totalprice"))
       .orderBy("o_custkey")
-  }
 
   /** `calculate_returns` (W1+W2+T10, `client.py:179-202`): per-key daily
     * return (lag) and cumulative return (first_value over an unbounded

@@ -37,13 +37,21 @@ object Sinks {
 
   /** Fact-table write with ClickHouse-equivalent layout: monthly partition
     * directories + key-sorted row groups. One shuffle (by month) sizes
-    * output files; the sort is partition-local (no global sort). */
+    * output files; the sort is partition-local (no global sort).
+    *
+    * Overwrite contract: only the months present in `df` are replaced;
+    * every other month directory under `path` is left as it is (dynamic
+    * partition overwrite, set on this writer only — the session's
+    * static default would delete the whole table first). Writing one
+    * day's batch therefore replaces that day's whole month: pass the
+    * full month to keep its other days. */
   def writeMonthlyPartitioned(df: DataFrame, dateCol: String,
                               sortKeys: Seq[String], path: String): Unit =
     df.withColumn(MonthCol, date_format(col(dateCol), "yyyyMM"))
       .repartition(col(MonthCol))
       .sortWithinPartitions(sortKeys.map(col): _*)
-      .write.partitionBy(MonthCol).mode("overwrite").parquet(path)
+      .write.partitionBy(MonthCol).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(path)
 
   /** Read the partitioned fact back; month predicates prune directories,
     * key predicates skip row groups via the write-time sort. */

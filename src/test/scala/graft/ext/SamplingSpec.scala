@@ -136,6 +136,20 @@ class SamplingSpec extends SparkSpec {
       s"expected only range-keyed prefix windows, got: $windows")
   }
 
+  test("shardShuffle takes keys >= 2^44 and still equals the window reference") {
+    val df = ((0L until 100L).map(i => (1L << 44) + i * 7919L) ++
+      (0L until 100L).map(i => (1L << 60) + i)).toDF("id")
+    val rows = Sampling.shardShuffle(df, "id", nShards = 3)
+      .select("id", "shard", "pos").as[(Long, Int, Long)].collect()
+    import org.apache.spark.sql.expressions.Window
+    val ref = df.withColumn("shard", Sampling.shardOf(col("id"), 3))
+      .withColumn("pos", row_number().over(Window.partitionBy(col("shard"))
+        .orderBy(Sampling.bucket100(col("id")), col("id"))).cast("long"))
+      .select("id", "shard", "pos").as[(Long, Int, Long)].collect()
+    assert(rows.length == 200)
+    assert(rows.sortBy(_._1).toSeq == ref.sortBy(_._1).toSeq)
+  }
+
   test("temperature mix flattens a skewed source distribution") {
     // 800 'web', 150 'books', 50 'code' — α=½ should downsample web
     // hardest and keep (nearly) all of the rarest source.

@@ -108,6 +108,39 @@ class SimilaritySpec extends SparkSpec {
     assert(rows.forall(r => r.getLong(2) >= 0 && r.getLong(2) < 16))
   }
 
+  test("a zero vector scores 0.0 in the float tiers instead of failing") {
+    // vec 0 is all-zero; (1, 0) shares its sign-LSH bucket 0 (every
+    // 2-d plane weight on x is -5), and labels double as IVF cells
+    val corpus = Seq(
+      (0L, Array(0.0f, 0.0f), 0),
+      (1L, Array(1.0f, 0.0f), 1),
+      (2L, Array(0.0f, 1.0f), 0),
+      (3L, Array(1.0f, 1.0f), 1)
+    ).toDF("vec_id", "embedding", "label")
+    def zeroPairs(out: org.apache.spark.sql.DataFrame): Seq[Double] =
+      out.filter(col("query_id") === 0L || col("neighbor_id") === 0L)
+        .select("score").as[Double].collect().toSeq
+    val tiers = Seq(
+      "bruteTopK" -> Similarity.bruteTopK(corpus, corpus, "vec_id",
+        "embedding", k = 3),
+      "lshTopK" -> Similarity.lshTopK(corpus, corpus, "vec_id", "embedding",
+        k = 3, dim = 2),
+      "hardNegatives" -> Similarity.hardNegatives(corpus, corpus, "vec_id",
+        "embedding", "label", k = 3),
+      "ivfTopK" -> Similarity.ivfTopK(corpus, corpus, "vec_id", "embedding",
+        "label", k = 3))
+    tiers.foreach { case (name, out) =>
+      val scores = zeroPairs(out)
+      assert(scores.nonEmpty, s"$name returned no zero-vector pair")
+      assert(scores.forall(_ == 0.0), s"$name: $scores")
+    }
+    // the non-degenerate pairs keep their cosines: (1,0)·(1,1) = 0.7071
+    val brute = Similarity.bruteTopK(corpus, corpus, "vec_id", "embedding", 3)
+      .filter(col("query_id") === 1L && col("neighbor_id") === 3L)
+      .select("score").as[Double].collect().toSeq
+    assert(brute == Seq(0.7071))
+  }
+
   test("nearDupPairs is symmetric-free (a<b) and respects the threshold") {
     val corpus = Seq(
       (1L, Array(1.0f, 0.0f), 0), (2L, Array(1.0f, 0.01f), 0),

@@ -41,6 +41,23 @@ class DailyPipelineSpec extends SparkSpec {
     assert(rej == Seq("Broken Row"))
   }
 
+  test("a row with an empty code lands in rejects: accepted + rejected = rows in") {
+    // the empty code normalizes to NULL, so the P2 regex evaluates to
+    // NULL rather than false for it
+    val drop = Seq(
+      ("005930", "Samsung Electronics", "kospi", "2020-01-02"),
+      ("BAD", "Broken Row", "kospi", "2020-01-01"),
+      ("", "No Code", "kospi", "2020-01-01")
+    ).toDF("종목코드", "회사명", "시장구분", "상장일")
+    val n = DailyPipeline.normalize(drop, "2024-01-01 02:00:00")
+    val accepted = DailyPipeline.validate(n).count()
+    val rejected = DailyPipeline.rejects(n).select("name").as[String]
+      .collect().toSet
+    assert(accepted == 1)
+    assert(rejected == Set("Broken Row", "No Code"))
+    assert(accepted + rejected.size == drop.count())
+  }
+
   test("two daily runs produce last-write-wins state and a correct report") {
     val s1 = DailyPipeline.runBatch(DailyPipeline.emptyState(spark), day1,
       "2024-01-01 02:00:00")

@@ -56,6 +56,35 @@ class SourcesSpec extends SparkSpec {
       plan.contains("part_month"), s"no partition pruning in:\n$plan")
   }
 
+  test("monthly-partitioned sink replaces only the months it writes") {
+    val path = java.nio.file.Files.createTempDirectory("graft_months")
+      .toString + "/fact"
+    def month(rows: (String, String, Double)*) =
+      rows.toDF("symbol", "d", "close")
+        .select(col("symbol"), col("d").cast("date").as("trade_date"),
+          col("close"))
+    def write(df: org.apache.spark.sql.DataFrame): Unit =
+      Sinks.writeMonthlyPartitioned(df, "trade_date",
+        Seq("symbol", "trade_date"), path)
+    def read: Set[(String, String, Double)] =
+      Sinks.readPartitioned(spark, path)
+        .select(col("symbol"), col("trade_date").cast("string"), col("close"))
+        .as[(String, String, Double)].collect().toSet
+    def files(m: String): Set[String] =
+      Option(new java.io.File(s"$path/${Sinks.MonthCol}=$m").listFiles())
+        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
+    val a = Set(("005930", "2024-01-02", 10.0), ("035720", "2024-01-03", 20.0))
+    write(month(a.toSeq: _*))
+    val aFiles = files("202401")
+    write(month(("005930", "2024-02-01", 11.0)))
+    assert(read == a + (("005930", "2024-02-01", 11.0)))
+    write(month(("005930", "2024-02-01", 12.0), ("000660", "2024-02-02", 5.0)))
+    assert(read == a + (("005930", "2024-02-01", 12.0)) +
+      (("000660", "2024-02-02", 5.0)))
+    assert(files("202401") == aFiles && aFiles.nonEmpty,
+      "rewriting February touched January's files")
+  }
+
   test("meteredWrite reports confirmed rows, progress ticks, and rows/sec") {
     val base = java.nio.file.Files.createTempDirectory("graft_meter").toString
     val df = spark.range(1000).toDF("id").repartition(4)
