@@ -27,7 +27,34 @@ object Similarity {
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
+  /** Cosine similarity; 0.0 when either vector is all-zero. */
+  def cosine(a: Column, b: Column): Column =
+    ratio(dot(a, b), l2norm(a) * l2norm(b))
+
+  /** The one guarded cosine ratio: `num / normProduct`, 0.0 when the norm
+    * product is 0 (cosine 0 by convention) — a zero vector scores
+    * instead of ANSI-faulting the divide and failing its whole query.
+    * Every cosine in this object goes through it. */
+  private def ratio(num: Column, normProduct: Column): Column =
+    when(normProduct === 0.0, lit(0.0)).otherwise(num / normProduct)
+
+  /** [[ratio]] of a dot product over two norms, rounded to 4 dp — the
+    * ranking key, so ordering is reproducible cross-engine. */
+  private def cosScore(dotQC: Column, qNrm: Column, cNrm: Column): Column =
+    round(ratio(dotQC, qNrm * cNrm), 4)
+
+  /** The one top-k window: `rank` = row_number over `by` ordered by
+    * `order`, kept to rank ≤ k. */
+  private def topK(df: DataFrame, by: Seq[String], order: Seq[Column],
+                   k: Int, rank: String = "rank"): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(by.map(col): _*).orderBy(order: _*)
+    df.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
+  /** The order of every top-k here: `score` descending, ties by `tie`. */
+  private def byScore(score: String, tie: String = "neighbor_id"): Seq[Column] =
+    Seq(desc(score), col(tie))
 
   /** Fixed integer hyperplanes for sign-LSH: weight i of plane m is
     * `((i·(2m+3)) mod 11) - 5` — exact integer arithmetic, reproducible in
@@ -86,14 +113,6 @@ object Similarity {
       l2norm(col(embCol)).as(s"${p}_nrm")) ++ extra: _*)
   }
 
-  /** Rounded (4 dp) cosine from a dot product and the two norms — the
-    * ranking key, so ordering is reproducible cross-engine. 0.0 when a
-    * norm is 0 (cosine 0 by convention): a zero vector scores instead
-    * of ANSI-faulting the divide. */
-  private def cosScore(dotQC: Column, qNrm: Column, cNrm: Column): Column =
-    when(qNrm * cNrm === 0.0, lit(0.0))
-      .otherwise(round(dotQC / (qNrm * cNrm), 4))
-
   private def notSelf: Column = col("neighbor_id") =!= col("query_id")
 
   /** Float-tier candidates: corpus [[side]] ⋈ broadcast query side on
@@ -109,16 +128,6 @@ object Similarity {
         col("q_nrm"), col("c_nrm")).as("score"): _*)
   }
 
-  /** The one per-query top-k tail: int `rank` = row_number over
-    * query_id by (`score` desc, `tie`), kept to rank ≤ k. */
-  private def topK(scored: DataFrame, score: String, k: Int,
-                   tie: String = "neighbor_id"): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc(score), col(tie))
-    scored.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-  }
-
   /** [[topK]] with each hit flagged against the exact float winner set
     * ([[exactTopKFlags]], a broadcast left join): (query_id, rank,
     * neighbor_id, cols…, in_exact_topk ∈ {0, 1}) ordered by (query_id,
@@ -127,7 +136,7 @@ object Similarity {
                           corpus: DataFrame, queries: DataFrame,
                           idCol: String, embCol: String,
                           cols: Column*): DataFrame =
-    topK(scored, score, k)
+    topK(scored, Seq("query_id"), byScore(score), k)
       .join(broadcast(exactTopKFlags(corpus, queries, idCol, embCol, k)),
         Seq("query_id", "neighbor_id"), "left")
       .select(Seq(col("query_id"), col("rank"), col("neighbor_id")) ++ cols :+
@@ -140,7 +149,8 @@ object Similarity {
   def bruteTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 embCol: String, k: Int): DataFrame =
     topK(cosinePairs(side(corpus, "c", idCol, embCol),
-        side(queries, "q", idCol, embCol), Nil, notSelf), "score", k)
+        side(queries, "q", idCol, embCol), Nil, notSelf), Seq("query_id"),
+        byScore("score"), k)
       .select("query_id", "neighbor_id", "score", "rank")
 
   /** LSH-bucketed approximate top-k: both sides keyed by sign-LSH bucket,
@@ -152,7 +162,7 @@ object Similarity {
     val b = bucketCol(col(embCol), nPlanes, dim).as("bucket")
     topK(cosinePairs(side(corpus, "c", idCol, embCol, b),
         side(queries, "q", idCol, embCol, b), Seq("bucket"), notSelf, "bucket"),
-        "score", k)
+        Seq("query_id"), byScore("score"), k)
       .select("query_id", "neighbor_id", "bucket", "score", "rank")
   }
 
@@ -200,7 +210,8 @@ object Similarity {
                     embCol: String, labelCol: String, k: Int): DataFrame =
     topK(cosinePairs(side(corpus, "c", idCol, embCol, col(labelCol).as("n_label")),
         side(queries, "q", idCol, embCol, col(labelCol).as("q_label")), Nil,
-        col("n_label") =!= col("q_label"), "n_label"), "score", k)
+        col("n_label") =!= col("q_label"), "n_label"), Seq("query_id"),
+        byScore("score"), k)
       .select("query_id", "neighbor_id", "n_label", "score", "rank")
 
   /** The 100 TB path for [[hardNegatives]]: sign-LSH bucket equi join
@@ -215,7 +226,8 @@ object Similarity {
     topK(cosinePairs(
         side(corpus, "c", idCol, embCol, col(labelCol).as("n_label"), b),
         side(queries, "q", idCol, embCol, col(labelCol).as("q_label"), b),
-        Seq("bucket"), col("n_label") =!= col("q_label"), "n_label"), "score", k)
+        Seq("bucket"), col("n_label") =!= col("q_label"), "n_label"),
+        Seq("query_id"), byScore("score"), k)
       .select("query_id", "neighbor_id", "n_label", "score", "rank")
   }
 
@@ -266,7 +278,7 @@ object Similarity {
               embCol: String, cellCol: String, k: Int, nprobe: Int = 2): DataFrame =
     topK(cosinePairs(side(corpus, "c", idCol, embCol, col(cellCol).as("cell")),
         probedCells(corpus, queries, idCol, embCol, cellCol, nprobe),
-        Seq("cell"), notSelf, "cell"), "score", k)
+        Seq("cell"), notSelf, "cell"), Seq("query_id"), byScore("score"), k)
       .select("query_id", "neighbor_id", "cell", "score", "rank")
 
   /** One k-means refinement step over the embedding corpus (q76): score
@@ -298,14 +310,11 @@ object Similarity {
     val vecs = graft.model.Tables.fanOut(corpus)
       .select(col(idCol).as("vid"), col(embCol).as("emb"),
         l2norm(col(embCol)).as("nrm"), col(cellCol).as("old_cell"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vid").orderBy(desc("score"), col("cell"))
-    val assigned = vecs.crossJoin(broadcast(cents))
+    val assigned = topK(vecs.crossJoin(broadcast(cents))
       .select(col("vid"), col("emb"), col("old_cell"), col("cell"),
-        round(dotD(col("emb").cast("array<double>"), col("centroid")) /
-          (col("nrm") * col("cnrm")), 4).as("score"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+        cosScore(dotD(col("emb").cast("array<double>"), col("centroid")),
+          col("nrm"), col("cnrm")).as("score")),
+        Seq("vid"), byScore("score", tie = "cell"), 1, "rk")
       .select(col("vid"), col("emb"), col("old_cell"), col("cell"))
       .localCheckpoint()
     val newCents = cellCentroids(assigned, "cell", "emb")
@@ -316,9 +325,9 @@ object Similarity {
     cents.join(newCents, Seq("cell"))
       .join(sizes, Seq("cell"))
       .select(col("cell"), col("n_assigned"), col("n_stayed"),
-        round(dotD(col("centroid"), col("new_centroid")) /
-          (sqrt(dotD(col("centroid"), col("centroid"))) *
-            sqrt(dotD(col("new_centroid"), col("new_centroid")))), 4)
+        cosScore(dotD(col("centroid"), col("new_centroid")),
+          sqrt(dotD(col("centroid"), col("centroid"))),
+          sqrt(dotD(col("new_centroid"), col("new_centroid"))))
           .as("centroid_cos"))
       .orderBy("cell")
   }
@@ -550,7 +559,7 @@ object Similarity {
     topK(q.crossJoin(broadcast(cents)).select(qCols ++ Seq(col("cell"),
         cosScore(dotD(col("q_emb").cast("array<double>"), col("centroid")),
           col("q_nrm"), col("cnrm")).as("cscore")): _*),
-        "cscore", nprobe, tie = "cell")
+        Seq("query_id"), byScore("cscore", tie = "cell"), nprobe)
       .select(qCols :+ col("cell"): _*)
   }
 
@@ -819,9 +828,8 @@ object Similarity {
         Seq("gb"))
       .select(col("ga").as("source_a"), col("gb").as("source_b"),
         col("n_a").cast("long").as("n_a"), col("n_b").cast("long").as("n_b"),
-        round(col("dot").cast("double") /
-          (sqrt(col("da").cast("double")) * sqrt(col("db").cast("double"))),
-          4).as("cos_centroid"))
+        cosScore(col("dot").cast("double"), sqrt(col("da").cast("double")),
+          sqrt(col("db").cast("double"))).as("cos_centroid"))
       .orderBy("source_a", "source_b")
   }
 
@@ -1025,7 +1033,6 @@ object Similarity {
   def marginAlignment(corpus: DataFrame, idCol: String, embCol: String,
                       bucketCol: String, srcCol: String, kAvg: Int = 3,
                       marginThresholdPpm: Long = 1020000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val fanned = graft.model.Tables.fanOut(corpus)
     def half(tag: String) = fanned.select(col(bucketCol).as("bucket"),
       col(srcCol).as(s"src_$tag"), col(idCol).as(s"id_$tag"),
@@ -1033,17 +1040,15 @@ object Similarity {
     val pairs = half("a").join(half("b"), Seq("bucket"))
       .filter(col("src_a") < col("src_b"))
       .select(col("src_a"), col("id_a"), col("src_b"), col("id_b"),
-        round(dot(col("emb_a"), col("emb_b")) /
-          (col("nrm_a") * col("nrm_b")) * 10000, 0).cast("long").as("cos_e4"))
+        round(ratio(dot(col("emb_a"), col("emb_b")),
+          col("nrm_a") * col("nrm_b")) * 10000, 0).cast("long").as("cos_e4"))
       .localCheckpoint() // read by both directed views + the pair census
     val directed = pairs.select(col("id_a").as("qid"), col("src_a").as("qsrc"),
         col("src_b").as("oth"), col("id_b").as("nid"), col("cos_e4"))
       .unionAll(pairs.select(col("id_b").as("qid"), col("src_b").as("qsrc"),
         col("src_a").as("oth"), col("id_a").as("nid"), col("cos_e4")))
-    val w = Window.partitionBy("qid", "oth")
-      .orderBy(col("cos_e4").desc, col("nid"))
-    val ranked = directed.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= kAvg)
+    val ranked = topK(directed, Seq("qid", "oth"), byScore("cos_e4", "nid"),
+        kAvg, "rk")
       .localCheckpoint() // read by the kNN average AND the NN1 probe
     val avgk = ranked.groupBy("qid", "oth")
       .agg(sum("cos_e4").as("sc"), count(lit(1)).as("nc"))
@@ -1105,8 +1110,8 @@ object Similarity {
       l2norm(col(embCol)).as("nrm_b"))
     a.join(b, Seq("bucket"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", round(
-        dot(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")), 4))
+      .withColumn("cos",
+        cosScore(dot(col("emb_a"), col("emb_b")), col("nrm_a"), col("nrm_b")))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("bucket"), col("cos"))
   }
@@ -1356,7 +1361,7 @@ object Similarity {
       val exactScored = c.crossJoin(broadcast(probe))
         .filter(col("id") =!= col("pid"))
         .select(col("pid").as("qid"), col("id").as("nid"),
-          round(dot(col("p_emb"), col("emb")) / (col("p_nrm") * col("nrm")), 4)
+          cosScore(dot(col("p_emb"), col("emb")), col("p_nrm"), col("nrm"))
             .as("score"))
       graft.operators.Skew.saltedTopKPerGroup(
           exactScored.withColumnRenamed("qid", "id"), Seq("id"),
@@ -1480,7 +1485,7 @@ object Similarity {
         col("nrm").as("n_nrm"), col(key).as("bk")), Seq("bk"))
       .filter(col("id") =!= col("nid"))
       .select(col("id"), col("nid"),
-        round(dot(col("emb"), col("n_emb")) / (col("nrm") * col("n_nrm")), 4)
+        cosScore(dot(col("emb"), col("n_emb")), col("nrm"), col("n_nrm"))
           .as("score"))
     val seed = StageCache.getOrStage(s"$base:seed:$k") {
       // A pair colliding in both tables is scored twice (deterministic
@@ -1527,7 +1532,7 @@ object Similarity {
       .join(c.select(col("id").as("nid"), col("emb").as("n_emb"),
         col("nrm").as("n_nrm")), Seq("nid"))
       .select(col("id"), col("nid"),
-        round(dot(col("emb"), col("n_emb")) / (col("nrm") * col("n_nrm")), 4)
+        cosScore(dot(col("emb"), col("n_emb")), col("nrm"), col("n_nrm"))
           .as("score"))
     graft.operators.Skew.saltedTopKPerGroup(rescored, Seq("id"),
         Seq(col("score").desc, col("nid")), k, salts = 8)
@@ -1573,10 +1578,8 @@ object Similarity {
       .join(labels.select(col("id").as("nid"), col("label").as("nlab")),
         Seq("nid"))
       .groupBy("id", "nlab").agg(count(lit(1)).as("c"))
-    val wr = org.apache.spark.sql.expressions.Window.partitionBy("id")
-      .orderBy(col("c").desc, col("nlab")) // ≤ k rows per id
-    val majority = votes.withColumn("rk", row_number().over(wr))
-      .filter(col("rk") === 1)
+    // ≤ k rows per id
+    val majority = topK(votes, Seq("id"), byScore("c", "nlab"), 1, "rk")
       .select(col("id"), col("nlab").as("maj_label"))
     labels.join(majority, Seq("id"), "left")
       .groupBy("label")
@@ -1676,9 +1679,8 @@ object Similarity {
         .join(c.select(col("id").as("nid"), col("emb").as("n_emb"),
           col("nrm").as("n_nrm")), Seq("nid"))
         .select(col("id"), col("nid"),
-          when(col("nrm") * col("n_nrm") === 0.0, lit(0.0))
-            .otherwise(round(dot(col("emb"), col("n_emb")) /
-              (col("nrm") * col("n_nrm")), 4)).as("escore"))
+          cosScore(dot(col("emb"), col("n_emb")), col("nrm"), col("n_nrm"))
+            .as("escore"))
       graft.operators.Skew.saltedTopKPerGroup(scored, Seq("id"),
           Seq(col("escore").desc, col("nid")), 2 * k, salts = 8)
         .select("id", "nid")
@@ -1698,9 +1700,8 @@ object Similarity {
         col("nrm").as("n_nrm")), Seq("nid"))
       .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("nid"),
-        when(col("q_nrm") * col("n_nrm") === 0.0, lit(0.0))
-          .otherwise(round(dot(col("q_emb"), col("n_emb")) /
-            (col("q_nrm") * col("n_nrm")), 4)).as("score"))
+        cosScore(dot(col("q_emb"), col("n_emb")), col("q_nrm"), col("n_nrm"))
+          .as("score"))
     // Entry pairs (query_id, nid). A query that IS an entry node scores
     // itself 1.0 and expands its own neighborhood — wanted for
     // more-like-this; the self row is excluded from the final ranking
@@ -1715,14 +1716,11 @@ object Similarity {
         val perCell = nEntry / nprobe
         val cents = cellCentroids(corpus, cc, embCol) // q49's cache key
           .withColumn("cnrm", sqrt(dotD(col("centroid"), col("centroid"))))
-        val pw = org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id").orderBy(desc("pscore"), col("__cell"))
-        val probed = q.crossJoin(broadcast(cents))
+        val probed = topK(q.crossJoin(broadcast(cents))
           .select(col("query_id"), col("cell").as("__cell"),
-            round(dotD(col("q_emb").cast("array<double>"), col("centroid")) /
-              (col("q_nrm") * col("cnrm")), 4).as("pscore"))
-          .withColumn("prk", row_number().over(pw))
-          .filter(col("prk") <= nprobe)
+            cosScore(dotD(col("q_emb").cast("array<double>"), col("centroid")),
+              col("q_nrm"), col("cnrm")).as("pscore")),
+            Seq("query_id"), byScore("pscore", "__cell"), nprobe, "prk")
           .join(broadcast(q), Seq("query_id"))
           .select("query_id", "__cell", "q_emb", "q_nrm")
         // the q49 IVF probe as entry selection: score only the probed
@@ -1734,16 +1732,11 @@ object Similarity {
             Seq("id"))
           .select(col("__cell"), col("id").as("nid"),
             col("emb").as("n_emb"), col("nrm").as("n_nrm"))
-        val ew = org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id", "__cell")
-          .orderBy(desc("escore"), col("nid"))
-        members.join(broadcast(probed), Seq("__cell"))
+        topK(members.join(broadcast(probed), Seq("__cell"))
           .select(col("query_id"), col("__cell"), col("nid"),
-            when(col("q_nrm") * col("n_nrm") === 0.0, lit(0.0))
-              .otherwise(round(dot(col("q_emb"), col("n_emb")) /
-                (col("q_nrm") * col("n_nrm")), 4)).as("escore"))
-          .withColumn("erk", row_number().over(ew))
-          .filter(col("erk") <= perCell)
+            cosScore(dot(col("q_emb"), col("n_emb")), col("q_nrm"),
+              col("n_nrm")).as("escore")),
+            Seq("query_id", "__cell"), byScore("escore", "nid"), perCell, "erk")
           .select("query_id", "nid")
     }
     val entryScored = StageCache.getOrStage(
@@ -1758,10 +1751,8 @@ object Similarity {
     var layers = Vector(entryScored)
     def visited: DataFrame = layers.reduce(_ unionAll _)
     for (_ <- 1 to hops) {
-      val bw = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(col("score").desc, col("nid"))
-      val beamSet = visited.withColumn("brk", row_number().over(bw))
-        .filter(col("brk") <= beam)
+      val beamSet = topK(visited, Seq("query_id"), byScore("score", "nid"),
+          beam, "brk")
         .select(col("query_id"), col("nid").as("id"))
       val expanded = beamSet.join(serve, Seq("id"))
         .select(col("query_id"), col("nid")).distinct()
@@ -1775,11 +1766,8 @@ object Similarity {
     val exact = exactTopKFlags(corpus, queries, idCol, embCol, k)
       .select(col("query_id"), col("neighbor_id").as("nid"),
         col("hit").as("is_hit"))
-    val fw = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("score").desc, col("nid"))
-    visited.filter(col("nid") =!= col("query_id"))
-      .withColumn("rank", row_number().over(fw))
-      .filter(col("rank") <= k)
+    topK(visited.filter(col("nid") =!= col("query_id")), Seq("query_id"),
+        byScore("score", "nid"), k)
       .join(exact, Seq("query_id", "nid"), "left")
       .join(broadcast(nv), Seq("query_id"))
       .select(col("query_id"), col("rank").cast("int").as("rank"),

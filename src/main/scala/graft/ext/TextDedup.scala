@@ -87,16 +87,6 @@ object TextDedup {
         explode(graft.functions.TextKernelOps.shingleHashes(
           normText(col(textCol)), k)).as("hv"))
 
-  /** Distinct (doc, word-n-gram shingle) pairs, generated by the native
-    * [[graft.functions.WordNgrams]] kernel (contiguous slices of the
-    * normalized text — no interpreted per-token lambda work). */
-  def docWordShingles(docs: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3): DataFrame =
-    fanOut(docs).select(col(idCol).as("doc_id"),
-        explode(graft.functions.TextKernelOps.wordNgrams(
-          normText(col(textCol)), n)).as("sh"))
-      .distinct()
-
   /** Distinct (doc, word-n-gram HASH) pairs — the exact tier's index
     * with 8-byte elements: n-gram strings never leave the row
     * (hash-before-distinct, the same idiom as [[docShingleHashes]]; a

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
@@ -34,10 +34,6 @@ object EventStream {
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
-
-  /** File-based streaming source: tail a directory of event parquet. */
-  def readEvents(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
 
   /** Tumbling window counts per event_type; watermark bounds state. */
   def tumblingCounts(events: DataFrame, width: String = "1 hour",

@@ -168,16 +168,20 @@ class BenchVerdictSpec extends AnyFunSuite {
     assert(line ==
       """{"regressions":{"q1":2.42},"retried":["q1","q3"],""" +
         """"floor_gate_active":true,"floor_refuted":{"q3":1.1}}""")
+    assert(compact(JObject(passFields(Seq(806.123, 412.5)))) ==
+      """{"pass_totals":[806.123,412.5],"cold_pass_s":806.12}""")
   }
 
   test("the compact line is the full line without its per-query detail") {
     val full = JObject("metric" -> JString("total"),
+      "cold_pass_s" -> JDouble(3.0),
       "queries" -> JObject("q1" -> JDouble(1.0)),
       "standalone" -> JObject("q1" -> JDouble(2.0)),
       "stage_cache" -> JObject("builds" -> JInt(1)),
       "errors" -> JObject(), "regressions" -> JObject(), "sf" -> JString("x"))
     val c = compactOf(full)
-    assert(c.obj.map(_._1) == List("metric", "errors", "regressions", "sf"))
+    assert(c.obj.map(_._1) ==
+      List("metric", "cold_pass_s", "errors", "regressions", "sf"))
     assert(parse(compact(c)) == c)
   }
 

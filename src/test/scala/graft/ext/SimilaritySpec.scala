@@ -109,13 +109,23 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("a zero vector scores 0.0 in the float tiers instead of failing") {
-    // vec 0 is all-zero; (1, 0) shares its sign-LSH bucket 0 (every
-    // 2-d plane weight on x is -5), and labels double as IVF cells
+    // vec 0 is all-zero; (1, 0) and (1, 1) share its sign-LSH bucket 0
+    // in both kNN tables (every 2-d plane weight on x is -5), (0, 1)
+    // shares none; labels double as IVF cells
     val corpus = Seq(
-      (0L, Array(0.0f, 0.0f), 0),
-      (1L, Array(1.0f, 0.0f), 1),
+      (0L, Array(0.0f, 0.0f), 0, "s0"),
+      (1L, Array(1.0f, 0.0f), 1, "s1"),
+      (2L, Array(0.0f, 1.0f), 0, "s1"),
+      (3L, Array(1.0f, 1.0f), 1, "s0")
+    ).toDF("vec_id", "embedding", "label", "source")
+    // no zero vector, but cell 2's members (1, 0) and (-1, 0) average
+    // (and their unit vectors sum) to zero
+    val cancel = Seq(
+      (0L, Array(1.0f, 0.0f), 2),
+      (1L, Array(-1.0f, 0.0f), 2),
       (2L, Array(0.0f, 1.0f), 0),
-      (3L, Array(1.0f, 1.0f), 1)
+      (3L, Array(1.0f, 1.0f), 1),
+      (4L, Array(0.5f, 1.0f), 0)
     ).toDF("vec_id", "embedding", "label")
     def zeroPairs(out: org.apache.spark.sql.DataFrame): Seq[Double] =
       out.filter(col("query_id") === 0L || col("neighbor_id") === 0L)
@@ -139,6 +149,51 @@ class SimilaritySpec extends SparkSpec {
       .filter(col("query_id") === 1L && col("neighbor_id") === 3L)
       .select("score").as[Double].collect().toSeq
     assert(brute == Seq(0.7071))
+
+    val cos = corpus.select(col("vec_id"),
+        Similarity.cosine(col("embedding"), col("embedding")))
+      .as[(Long, Double)].collect().toMap
+    assert(cos(0L) == 0.0 && (1L to 3L).forall(i => math.abs(cos(i) - 1) < 1e-9))
+    // vec 0 ties at 0.0 against both centroids and joins the smaller cell
+    assert(Similarity.kmeansStep(corpus, "vec_id", "embedding", "label")
+      .as[(Int, Long, Long, Double)].collect().toSeq ==
+      Seq((0, 2L, 2L, 1.0), (1, 2L, 2L, 1.0)))
+    // cell 2's centroid is (0, 0): -1 scores 0.0 there, above its
+    // negative cosines elsewhere, and the old↔new centroid cosine is 0.0
+    assert(Similarity.kmeansStep(cancel, "vec_id", "embedding", "label")
+      .as[(Int, Long, Long, Double)].collect().toSeq ==
+      Seq((0, 2L, 2L, 1.0), (1, 2L, 1L, 0.9487), (2, 1L, 1L, 0.0)))
+    assert(Similarity.nearDupPairs(corpus, "vec_id", "embedding", "label", 0.0)
+      .as[(Long, Long, Int, Double)].collect().toSet ==
+      Set((0L, 2L, 0, 0.0), (1L, 3L, 1, 0.7071)))
+    // candidates (0,1) and (0,2) score 0; only 3 <-> 1 is mutual, margin
+    // 2·7071 / (7071 + (0 + 7071) div 2) in ppm
+    val margin = Similarity.marginAlignment(corpus.withColumn("bk", lit(0)),
+        "vec_id", "embedding", "bk", "source").collect().toSeq
+    assert(margin.map(_.toSeq) ==
+      Seq(Seq("s0", "s1", 4L, 1L, 1L, 1333396L, 3L, 1L)))
+    // vec 2 shares no bucket, so the graphs cover 3 nodes; vec 0's
+    // edges score 0.0 and still count
+    assert(Similarity.knnGraphDescent(corpus, "vec_id", "embedding", k = 2,
+        dim = 2, nProbe = 4).collect().map(_.toSeq).toSeq ==
+      Seq(Seq("descent", 3L, 6L, 8L, 4L, 500000L),
+        Seq("seed", 3L, 6L, 8L, 4L, 500000L)))
+    // (label, n_vectors, n_no_neighbors, n_suspect, suspect_ppm)
+    assert(Similarity.labelNoiseByKnn(corpus, "vec_id", "embedding", "label",
+        k = 2, dim = 2).collect().map(_.toSeq).toSeq ==
+      Seq(Seq(0L, 2L, 1L, 1L, 1000000L), Seq(1L, 2L, 0L, 2L, 1000000L)))
+    def ann(c: org.apache.spark.sql.DataFrame, entry: Option[String]) =
+      Similarity.graphAnnBeamSearch(c, "vec_id", "embedding", c, k = 2,
+        beam = 2, hops = 1, nEntry = 2, graphRounds = 1, dim = 2,
+        entryCellCol = entry)
+    assert(zeroPairs(ann(corpus, None)).forall(_ == 0.0))
+    assert(ann(corpus, None).filter(col("query_id") === 0L).count() == 2)
+    // cell 2's zero centroid is probed at pscore 0.0
+    assert(ann(cancel, Some("label")).select("query_id").distinct().count() == 5)
+    // group 2's unit vectors sum to zero: its centroid cosines are 0.0
+    assert(Similarity.centroidSimilarity(cancel, "label", "embedding")
+      .as[(Int, Int, Long, Long, Double)].collect().toSeq ==
+      Seq((0, 1, 2L, 1L, 0.8507), (0, 2, 2L, 2L, 0.0), (1, 2, 1L, 2L, 0.0)))
   }
 
   test("nearDupPairs is symmetric-free (a<b) and respects the threshold") {

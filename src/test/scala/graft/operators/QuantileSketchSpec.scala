@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.JobCounter
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class QuantileSketchSpec extends SparkSpec {
@@ -139,6 +141,74 @@ class QuantileSketchSpec extends SparkSpec {
       val exact = sorted((sorted.size - 1) / 2)
       assert(math.abs(got(g) - exact).toDouble <= exact.toDouble / 32 + 1,
         s"group $g: est=${got(g)} exact=$exact")
+    }
+  }
+
+  test("golden rows and job counts of all four sketches") {
+    // NULLs, a one-row group (b), a NULL-only group (c, no rows) and a
+    // value >= 2^40; `flat` is a degenerate range (vmax = vmin)
+    val mixed = Seq(("a", Some(1L)), ("a", Some(5L)), ("a", Some(5L)),
+      ("a", Some(9L)), ("a", None), ("a", Some(1L << 40)), ("b", Some(7L)),
+      ("c", None)).toDF("g", "v")
+    val flat = Seq(("a", Some(42L)), ("a", Some(42L)), ("b", Some(42L)),
+      ("b", None)).toDF("g", "v")
+    val probes = Seq(0L, 500000L, 1000000L)
+    def sketches(in: DataFrame): Seq[(String, () => DataFrame)] = Seq(
+      "histogram" -> (() =>
+        QuantileSketch.histogramQuantiles(in, "v", 8, probes)),
+      "groupedHistogram" -> (() =>
+        QuantileSketch.groupedHistogramQuantiles(in, "g", "v", 8, probes)),
+      "log" -> (() => QuantileSketch.logQuantiles(in, "v", 5, probes)),
+      "groupedLog" -> (() =>
+        QuantileSketch.groupedLogQuantiles(in, "g", "v", 5, probes)))
+    // (jobs while the call builds its result, jobs of collecting it, rows)
+    def run(call: () => DataFrame): (Int, Int, Seq[Row]) = {
+      val sc = spark.sparkContext
+      val (out, atCall) = JobCounter.jobsIn(sc)(call())
+      val (rows, atCollect) = JobCounter.jobsIn(sc)(out.collect().toSeq)
+      (atCall, atCollect, rows)
+    }
+    val hugeLo = 962072674305L // 1 + 7·(2^40 div 8), the last cell's low
+    val expected = Map(
+      ("mixed", "histogram") -> (10, 8, Seq(
+        Row(0L, 1L, 137438953472L, 5L, 6L, 1L),
+        Row(500000L, 1L, 137438953472L, 5L, 6L, 54975581389L),
+        Row(1000000L, hugeLo, 1099511627776L, 1L, 6L, hugeLo))),
+      ("mixed", "groupedHistogram") -> (0, 8, Seq(
+        Row("a", 0L, 1L, 137438953472L, 4L, 5L, 1L),
+        Row("a", 500000L, 1L, 137438953472L, 4L, 5L, 68719476736L),
+        Row("a", 1000000L, hugeLo, 1099511627776L, 1L, 5L, hugeLo),
+        Row("b", 0L, 1L, 137438953472L, 1L, 1L, 1L),
+        Row("b", 500000L, 1L, 137438953472L, 1L, 1L, 1L),
+        Row("b", 1000000L, 1L, 137438953472L, 1L, 1L, 1L))),
+      ("mixed", "log") -> (8, 8, Seq(
+        Row(0L, 1L, 1L, 1L, 6L, 1L),
+        Row(500000L, 5L, 5L, 2L, 6L, 5L),
+        Row(1000000L, 1L << 40, 1133871366143L, 1L, 6L, 1L << 40))),
+      ("mixed", "groupedLog") -> (0, 6, Seq(
+        Row("a", 0L, 1L, 1L, 1L, 5L, 1L),
+        Row("a", 500000L, 5L, 5L, 2L, 5L, 5L),
+        Row("a", 1000000L, 1L << 40, 1133871366143L, 1L, 5L, 1L << 40),
+        Row("b", 0L, 7L, 7L, 1L, 1L, 7L),
+        Row("b", 500000L, 7L, 7L, 1L, 1L, 7L),
+        Row("b", 1000000L, 7L, 7L, 1L, 1L, 7L))),
+      ("flat", "histogram") -> (8, 8,
+        probes.map(p => Row(p, 42L, 41L, 3L, 3L, 42L))),
+      ("flat", "groupedHistogram") -> (0, 8,
+        Seq("a" -> 2L, "b" -> 1L).flatMap { case (g, n) =>
+          probes.map(p => Row(g, p, 42L, 41L, n, n, 42L)) }),
+      ("flat", "log") -> (6, 8,
+        probes.map(p => Row(p, 42L, 42L, 3L, 3L, 42L))),
+      ("flat", "groupedLog") -> (0, 6,
+        Seq("a" -> 2L, "b" -> 1L).flatMap { case (g, n) =>
+          probes.map(p => Row(g, p, 42L, 42L, n, n, 42L)) }))
+    for ((input, df) <- Seq("mixed" -> mixed, "flat" -> flat);
+         (name, call) <- sketches(df)) {
+      val (atCall, atCollect, rows) = run(call)
+      info(s"$input/$name: $atCall jobs at call, $atCollect at collect")
+      val (eCall, eCollect, eRows) = expected((input, name))
+      assert(rows == eRows, s"$input/$name rows")
+      assert((atCall, atCollect) == ((eCall, eCollect)), s"$input/$name jobs")
     }
   }
 }

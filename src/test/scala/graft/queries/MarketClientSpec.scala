@@ -129,4 +129,32 @@ class MarketClientSpec extends SparkSpec {
     val tc = client.tableCounts().collect()(0)
     assert(tc.getAs[Long]("total_rows") == 5 && tc.getAs[Long]("unique_symbols") == 3)
   }
+
+  test("getPriceData returns one sf0.001 customer's orders in date order") {
+    // FIXTURES.md §C: orders stand in for stock_price
+    val orders = graft.model.Tables.orders(spark, sf001)
+    val sf = new MarketClient(master, orders.select(
+      col("o_custkey").cast("string").as("symbol"),
+      col("o_orderdate").cast("date").as("trade_date"),
+      col("o_totalprice").as("close_price")))
+    // the customer with the most orders (ties to the smallest key)
+    val key = orders.groupBy("o_custkey").count()
+      .orderBy(desc("count"), col("o_custkey")).head().getLong(0)
+    val mine = orders.filter(col("o_custkey") === key)
+      .select(col("o_orderdate").cast("date").cast("string"), col("o_totalprice"))
+      .as[(String, Double)].collect().toSeq
+    def dates(out: org.apache.spark.sql.DataFrame) =
+      out.select(col("trade_date").cast("string")).as[String].collect().toSeq
+    val all = sf.getPriceData(key.toString)
+    assert(all.columns.toSeq == Seq("symbol", "trade_date", "close_price"))
+    assert(dates(all) == mine.map(_._1).sorted)
+    assert(all.select("close_price").as[Double].collect().sorted.toSeq ==
+      mine.map(_._2).sorted)
+    // an inclusive range: both bounds are order dates of this customer
+    val sorted = mine.map(_._1).sorted
+    val (start, end) = (sorted(2), sorted(sorted.size - 3))
+    assert(dates(sf.getPriceData(key.toString, Some(start), Some(end))) ==
+      sorted.filter(d => d >= start && d <= end))
+    assert(sf.getPriceData("no such symbol").count() == 0)
+  }
 }

@@ -92,4 +92,30 @@ class MasterClientSpec extends SparkSpec {
     assert(client.getDelistedStocksMissingDate().collect()
       .map(_.getString(0)).toSeq == Seq("777777"))
   }
+
+  test("getStockBySymbol returns the latest row of one sf0.001 customer") {
+    // FIXTURES.md §C: customer ⋈ nation ⋈ region stands in for
+    // stock_master; every symbol gets an older and a newer version
+    import graft.model.Tables
+    val cust = Tables.customer(spark, sf001)
+      .join(Tables.nation(spark, sf001), col("c_nationkey") === col("n_nationkey"))
+      .join(Tables.region(spark, sf001), col("n_regionkey") === col("r_regionkey"))
+    def version(updateDt: String, tag: String) = cust.select(
+      col("c_custkey").cast("string").as("symbol"),
+      concat(col("c_name"), lit(tag)).as("name"), col("r_name").as("market"),
+      lit(null).cast("date").as("listing_date"),
+      lit(null).cast("date").as("delisting_date"), lit(1).as("is_active"),
+      to_timestamp(lit(updateDt)).as("update_dt"))
+    val sf = new MasterClient(version("2020-01-01 00:00:00", " (old)")
+      .unionByName(version("2026-01-01 00:00:00", "")))
+    val (key, name, market) = cust.orderBy("c_custkey")
+      .select("c_custkey", "c_name", "r_name").as[(Long, String, String)].head()
+    val got = sf.getStockBySymbol(key.toString).collect()
+    assert(got.length == 1)
+    assert(got(0).getAs[String]("name") == name &&
+      got(0).getAs[String]("market") == market)
+    assert(got(0).getAs[java.sql.Timestamp]("update_dt").toString ==
+      "2026-01-01 00:00:00.0")
+    assert(sf.getStockBySymbol("no such symbol").count() == 0)
+  }
 }
