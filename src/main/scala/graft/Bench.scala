@@ -120,10 +120,11 @@ object Bench {
     * queries' re-runs (`retryMin`: each one's minimum over its re-runs).
     *
     * A flag survives when the minimum over all runs still clears
-    * [[over]], and is reported as its ratio to the baseline. A history
-    * flag the re-runs refute becomes a suspect regression; a refuted
-    * floor flag lands in `floorRefuted` unless history already refuted
-    * it, so no flag is counted twice.
+    * [[over]], and is reported as its ratio to the baseline. Each
+    * baseline judges only the names it flagged before the retry: a
+    * history flag the re-runs refute becomes a suspect regression; a
+    * refuted floor flag lands in `floorRefuted` unless history already
+    * refuted it, so no flag is counted twice.
     *
     * Load gate: against each of the last 10 history runs that shares at
     * least 50 queries with this one, compare the totals over the shared
@@ -136,21 +137,20 @@ object Bench {
                                 history: Seq[Run], floors: Run,
                                 priorStreak: Int): Verdict = {
     val prior = baseline(history)
-    val retryFlagged = flagged(minima, history, floors)
     val times = minima.map { case (name, t) =>
       name -> (t ++ retryMin.get(name)).minOption
     }
     val current = times.collect { case (name, Some(t)) => name -> t }.toMap
-    // (survivors, refuted) of one baseline; `judged` names are left out
-    // of the refuted side.
+    // (survivors, refuted) of one baseline's own flags; `judged` names
+    // are left out of the refuted side.
     def judge(base: Run, judged: Set[String]): (Ratios, Ratios) = {
       def ratio(name: String) = name -> current(name) / base(name)
       val survivors = times.collect {
         case (name, Some(t)) if over(base)(name, t) => ratio(name)
       }
-      val refuted = retryFlagged
-        .filterNot(n => judged(n) || survivors.exists(_._1 == n))
-        .filter(base.contains).map(ratio)
+      val refuted = minima
+        .collect { case (name, Some(t)) if over(base)(name, t) => name }
+        .filterNot(n => judged(n) || survivors.exists(_._1 == n)).map(ratio)
       (survivors, refuted)
     }
     val (raw, historyRefuted) = judge(prior, Set.empty)
@@ -329,11 +329,14 @@ object Bench {
       // evictions > 0 means the LRU is undersized for the live key
       // population (a warm reading silently became a rebuild);
       // dead_rebuilds > 0 means pinned blocks were dropped under a live
-      // memo.
+      // memo; peak_forgotten_bytes > 0 means evicted blocks stayed
+      // stored, beyond the byte budget, until the query's sweep.
       "stage_cache" -> JObject("entries" -> JInt(entries), "builds" -> JInt(builds),
         "hits" -> JInt(hits), "evictions" -> JInt(evictions),
         "dead_rebuilds" -> JInt(deadRebuilds), "bytes" -> JInt(bytes),
-        "peak_bytes" -> JInt(peakBytes)),
+        "peak_bytes" -> JInt(peakBytes),
+        "forgotten_bytes" -> JInt(StageCache.forgottenBytes),
+        "peak_forgotten_bytes" -> JInt(StageCache.peakForgotten)),
       "errors" -> JObject(errors.map { case (k, e) => k -> JString(e) }.toList)) ++
       verdictFields(v, floors.nonEmpty) :+ ("sf" -> JString(sfDir)))
     writeLine("bench_out.json", full, append = false)

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** Byte-pair-encoding SEGMENTATION under an ordered merge list — the
   * tokenize-under-a-fixed-vocab step every training-data pipeline runs
@@ -51,7 +52,7 @@ object Bpe {
       .select(explode(tokens(normText(col(textCol)))).as("w"))
       .filter(col("w").rlike("^[a-z]+$"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint() // read every round (pair weights) + final report
+      .stage("bpe:vocab") // read every round (pair weights) + final report
     val pw = Window.partitionBy("w").orderBy("pos")
     var st = vocab
       .select(col("w"), posexplode(
@@ -63,7 +64,7 @@ object Bpe {
     for (r <- 1 to rounds) {
       val withNext = st
         .withColumn("nxt", lead("sym", 1).over(pw))
-        .localCheckpoint() // read 2x: pair stats + merge application
+        .stage(s"bpe:r$r") // read 2x: pair stats + merge application
       val bestFull = withNext.filter(col("nxt").isNotNull)
         .join(vocab, Seq("w"))
         .groupBy(col("sym").as("a"), col("nxt").as("b"))
@@ -131,13 +132,13 @@ object Bpe {
     lazy val trained = trainState(docs, textCol, rounds)
     def k(part: String) = StageCache.keyFor(docs, "bpe", part, textCol, rounds)
     val vocab = StageCache.getOrStage(k("vocab"))(trained._1)
-    val st = StageCache.getOrStage(k("st"))(trained._2.localCheckpoint())
+    val st = StageCache.getOrStage(k("st"))(trained._2.stage("bpe:st"))
     val merges = StageCache.getOrStage(k("merges"))(
-      trained._3.reduce(_ unionAll _).localCheckpoint())
+      trained._3.reduce(_ unionAll _).stage("bpe:merges"))
     val states = StageCache.getOrStage(k("states"))(
       trained._4.zipWithIndex.map { case (s, r) =>
         s.withColumn("round", lit(r))
-      }.reduce(_ unionAll _).localCheckpoint())
+      }.reduce(_ unionAll _).stage("bpe:states"))
     (vocab, st, merges, states)
   }
 

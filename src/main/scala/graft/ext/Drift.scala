@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** Distribution-drift detection between two corpus cohorts — the
   * monitoring step a recurring ingest runs to catch a silent shift in
@@ -83,7 +84,7 @@ object Drift {
   def chiSquareCells(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val cells = df.groupBy(col(aCol), col(bCol))
       .agg(count(lit(1)).as("obs"))
-      .localCheckpoint() // marginals + grid re-read it; ≤ cells rows
+      .stage("chiSquareCells:cells") // marginals + grid re-read it; ≤ cells rows
     val rowM = cells.groupBy(col(aCol)).agg(sum("obs").as("row_n"))
     val colM = cells.groupBy(col(bCol)).agg(sum("obs").as("col_n"))
     val n = cells.agg(sum("obs").as("n"))
@@ -137,7 +138,7 @@ object Drift {
       .select(col(srcCol).as("source"),
         explode(tokens(normText(col(textCol)))).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // totals + both sides of the pair join
+      .stage("jsDivergenceMatrix:cnt") // totals + both sides of the pair join
     val tot = cnt.groupBy("source").agg(sum("c").as("n"))
     val p = cnt.join(tot, "source")
       .select(col("source"), col("w"),
@@ -202,7 +203,7 @@ object Drift {
         round(col("v").cast("double") * binsPerUnit, 0).cast("long").as("bin"))
     val cells = base.groupBy("dim", "half", "bin")
       .agg(count(lit(1)).as("c"), sum("v_e6").as("sv"))
-      .localCheckpoint() // dims·bins·2 rows; read by centroid + PSI legs
+      .stage("embeddingDrift:cells") // dims·bins·2 rows; read by centroid + PSI legs
     val cent = cells.groupBy("dim", "half")
       .agg(sum("c").as("n"), sum("sv").as("s"))
       .withColumn("c_e6",

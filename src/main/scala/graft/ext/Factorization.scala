@@ -3,7 +3,9 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** Rank-2 alternating least squares — the canonical distributed
   * matrix-factorization recommender (Koren/Bell/Volinsky 2009; the
@@ -62,7 +64,8 @@ object Factorization {
         case _: Attribute | Alias(_: Attribute, _) => true
         case _ => false
       } && rddRooted(pr.child)
-    case other => other.getClass.getSimpleName == "LogicalRDD"
+    case _: LogicalRDD => true
+    case _ => false
   }
 
   /** Stage `(u, i, r)` once per report: it is read by every half-step
@@ -73,7 +76,7 @@ object Factorization {
     * staged base, pays the checkpoint. */
   private def stagedRatings(df: DataFrame): DataFrame =
     if (rddRooted(df.queryExecution.optimizedPlan)) df
-    else df.localCheckpoint()
+    else df.stage("als:ratings")
 
   /** Stage `ratings(u, i, r)` and the deterministic item-factor INIT
     * relation. The init is identical for the explicit (q294) and
@@ -89,7 +92,7 @@ object Factorization {
       val (y1, y2) = initY(col("i"))
       r.select(col("i")).distinct()
         .select(col("i"), y1.as("f1"), y2.as("f2"))
-        .localCheckpoint()
+        .stage("als:y0")
     }
     (r, y0)
   }
@@ -147,8 +150,8 @@ object Factorization {
       col(itemCol).as("i"), col("r")))
     var y = y0
     val evals = (1 to rounds).map { rnd =>
-      val x = halfStep(r, y, "u", "i", lambda).localCheckpoint()
-      y = halfStep(r, x, "i", "u", lambda).localCheckpoint()
+      val x = halfStep(r, y, "u", "i", lambda).stage(s"als:x-r$rnd")
+      y = halfStep(r, x, "i", "u", lambda).stage(s"als:r$rnd")
       // Training-fit eval for this round: pred and residual in exact
       // micro-units; squared residuals summed as DECIMAL(38,0) (a long
       // sum can wrap at corpus scale — the d² terms are ≤ ~2.5·10¹⁷).
@@ -265,8 +268,8 @@ object Factorization {
     var y = y0
     val evals = (1 to rounds).map { rnd =>
       val x = implicitHalfStep(r, y, "u", "i", alpha, lambda)
-        .localCheckpoint()
-      y = implicitHalfStep(r, x, "i", "u", alpha, lambda).localCheckpoint()
+        .stage(s"alsImplicit:x-r$rnd")
+      y = implicitHalfStep(r, x, "i", "u", alpha, lambda).stage(s"alsImplicit:r$rnd")
       // one factor-table pass serves the Gram AND the item count (y has
       // exactly one row per item) — no separate n_items scalar cross
       val gramY = y.agg(

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** Deterministic sequence packing: assign documents, in key order, to
   * fixed-token-budget bins — the "group texts into training sequences"
@@ -173,7 +174,7 @@ object Packing {
     val pref = graft.operators.PrefixSum.exclusive(base, keyCol,
         descending = false, ties = Seq.empty, valueCol = "n_tokens",
         outCol = "prefix", ranges = 0)
-      .localCheckpoint() // read once per budget
+      .stage("packingSweep:prefix") // read once per budget
     budgets.map { b =>
       pref.select(floor(col("prefix") / b).as("bin"), col("n_tokens"))
         .groupBy("bin").agg(sum("n_tokens").as("fill"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ext.TextOps.{normText, tokens}
+import graft.operators.Stage.StageOps
 
 /** Full-text retrieval over the documents corpus: an inverted-index BM25
   * ranker — the lexical search primitive every corpus-curation stack
@@ -107,14 +108,14 @@ object Retrieval {
         .select(col(idCol).as("doc_id"),
           explode(tokens(normText(col(textCol)))).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-        .localCheckpoint() // read 3×: df rollup, dl rollup, scoring join
+        .stage("bm25Index:tf") // read 3×: df rollup, dl rollup, scoring join
     }
     val dl = StageCache.getOrStage(s"$base:dl")(
-      tf.groupBy("doc_id").agg(sum("tf").as("dl")).localCheckpoint())
+      tf.groupBy("doc_id").agg(sum("tf").as("dl")).stage("bm25Index:dl"))
     val dfT = StageCache.getOrStage(s"$base:df")(
-      tf.groupBy("w").agg(count(lit(1)).as("df")).localCheckpoint())
+      tf.groupBy("w").agg(count(lit(1)).as("df")).stage("bm25Index:df"))
     val totals = StageCache.getOrStage(s"$base:tot")(
-      dl.agg(count(lit(1)).as("n"), sum("dl").as("t")).localCheckpoint())
+      dl.agg(count(lit(1)).as("n"), sum("dl").as("t")).stage("bm25Index:totals"))
     (tf, dl, dfT, totals)
   }
 
@@ -124,7 +125,7 @@ object Retrieval {
                     tf: DataFrame): DataFrame =
     StageCache.getOrStage(
         StageCache.keyFor(docs, "bm25idx", idCol, textCol) + ":ctf")(
-      tf.groupBy("w").agg(sum("tf").as("ctf")).localCheckpoint())
+      tf.groupBy("w").agg(sum("tf").as("ctf")).stage("bm25Index:ctf"))
 
   /** idf per (query, term): quantized once, BEFORE any aggregation.
     * Terms absent from the corpus score 0 and are dropped. */
@@ -250,7 +251,7 @@ object Retrieval {
     val qTerms = queries
       .select(col("query_id"), explode(tokens(normText(col("qtext")))).as("w"))
       .distinct()
-      .localCheckpoint() // read by stage-1 idf, the anti join, the union
+      .stage("bm25PrfTopK:qTerms") // read by stage-1 idf, the anti join, the union
     val fb = rankTopK(idfTerms(qTerms, dfT, totals), tf, dl, totals,
       kFb, excludeQueryDoc = true)
       .select(col("query_id"), col("doc_id"))
@@ -269,7 +270,7 @@ object Retrieval {
           .orderBy(col("escore").desc, col("w"))))
       .filter(col("erk") <= nExp)
       .select(col("query_id"), col("w"))
-      .localCheckpoint() // |Q|·nExp rows, read TWICE (expanded ∪ exFlag):
+      .stage("bm25PrfTopK:expTerms") // |Q|·nExp rows, read TWICE (expanded ∪ exFlag):
       // un-staged, each read re-ran stage 1 (rank + window) from the index
     val expanded = qTerms.select("query_id", "w")
       .unionAll(expTerms)
@@ -338,7 +339,7 @@ object Retrieval {
       .distinct()
     val qTerms = q.join(ctf, Seq("w")).crossJoin(broadcast(totals))
       .select(col("query_id"), col("w"), col("ctf"), col("t"))
-      .localCheckpoint() // |q| rows; read by nq + the postings join
+      .stage("dirichletQlTopK:qTerms") // |q| rows; read by nq + the postings join
     val nq = qTerms.groupBy("query_id").agg(count(lit(1)).as("nq"))
     val matched = qTerms.join(tf, Seq("w"))
       .select(col("query_id"), col("doc_id"),
@@ -401,7 +402,7 @@ object Retrieval {
       .select("query_id", "doc_id")
     val tfF = fb.join(tf, Seq("doc_id"))
       .groupBy("query_id", "w").agg(sum("tf").as("tff"))
-      .localCheckpoint() // read by the length rollup + the KL terms
+      .stage("clarityScore:tfF") // read by the length rollup + the KL terms
     val lenF = tfF.groupBy("query_id").agg(sum("tff").as("lenf"))
     val nFb = fb.groupBy("query_id").agg(count(lit(1)).as("n_fb_docs"))
     tfF.join(lenF, Seq("query_id"))
@@ -528,7 +529,7 @@ object Retrieval {
       .join(b.select(col("query_id"), col("doc_id"), col("rank").as("rb")),
         Seq("query_id", "doc_id"))
       .select(col("query_id"), greatest(col("ra"), col("rb")).as("m"))
-      .localCheckpoint() // |Q|·k at most; read by the spine join + count
+      .stage("rankBiasedOverlap:m") // |Q|·k at most; read by the spine join + count
     val spine = (1 to k).map(d => d -> rboWeight(d, k)).toDF("d", "wt")
     val num = m.join(broadcast(spine), col("m") <= col("d"))
       .groupBy("query_id").agg(sum(col("wt")).as("num"))

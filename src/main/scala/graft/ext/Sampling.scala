@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** Deterministic sampling and dataset splitting for a training-data
   * pipeline. Everything is keyed integer arithmetic — no RNG, no
@@ -217,7 +218,7 @@ object Sampling {
       s"targetPct must be in (0, 100], got $targetPct")
     val counts = df.groupBy(col(stratumCol).as("source"))
       .agg(count(lit(1)).as("n_total"))
-      .localCheckpoint() // read by all four temperature legs
+      .stage("temperatureSweep:counts") // read by all four temperature legs
     val n = col("n_total")
     val legs: Seq[(Int, org.apache.spark.sql.Column)] = Seq(
       25 -> floor(lit(1000000d) * sqrt(sqrt(n))).cast("long"),
@@ -228,7 +229,7 @@ object Sampling {
       counts.select(lit(tau).as("tau_pct"), col("source"), col("n_total"),
         w.as("weight_e6"))
     }.reduce(_ unionAll _)
-      .localCheckpoint() // read by the per-tau totals + the rate rows
+      .stage("temperatureSweep:weighted") // read by the per-tau totals + the rate rows
     val tot = weighted.groupBy("tau_pct")
       .agg(sum("n_total").as("corpus_n"), sum("weight_e6").as("sum_w"))
     val rated = weighted.join(broadcast(tot), Seq("tau_pct"))
@@ -238,7 +239,7 @@ object Sampling {
           expr("CAST(1000000 AS DECIMAL(38,0)) * t_target * weight_e6" +
             " div (CAST(sum_w AS DECIMAL(38,0)) * n_total)").cast("long")))
       .withColumn("n_kept_exp", expr("n_total * rate_ppm div 1000000"))
-      .localCheckpoint() // read by the effective-count rollup + output
+      .stage("temperatureSweep:rated") // read by the effective-count rollup + output
     val eff = rated.groupBy("tau_pct")
       .agg(sum("n_kept_exp").as("sk"),
         // DECIMAL squares: a 10⁹-doc source's square would sit at the
@@ -421,7 +422,7 @@ object Sampling {
     require(rounds >= 1 && rounds <= 8,
       s"rounds must be in [1, 8], got $rounds")
     var cur = base.select(col("source"), col("share_ppm").cast("long"),
-      col("factor_micro").cast("long")).localCheckpoint()
+      col("factor_micro").cast("long")).stage("mw:r0")
     val legs = (1 to rounds).map { t =>
       val raw = cur.withColumn("raw", col("share_ppm") * col("factor_micro"))
       val rt = raw.agg(sum("raw").as("rt"))
@@ -436,7 +437,7 @@ object Sampling {
         sum(col("share_ppm")).as("sum_share_ppm"))
       val leg = nxt.crossJoin(broadcast(roll))
         .withColumn("round", lit(t))
-        .localCheckpoint() // next round's state AND one report slice
+        .stage(s"mw:r$t") // next round's state AND one report slice
       cur = leg.select("source", "share_ppm", "factor_micro")
       leg
     }
@@ -476,7 +477,7 @@ object Sampling {
     require(rounds >= 1 && rounds <= 8,
       s"rounds must be in [1, 8], got $rounds")
     var cur = base.select(col("source"), col("share_ppm").cast("long"),
-      col("nll_micro").cast("long")).localCheckpoint()
+      col("nll_micro").cast("long")).stage("mwAdaptive:r0")
     val legs = (1 to rounds).map { t =>
       val bt = cur.agg(expr(
         "CASE WHEN sum(share_ppm) = 0 THEN CAST(0 AS BIGINT) " +
@@ -498,7 +499,7 @@ object Sampling {
         sum(col("share_ppm")).as("sum_share_ppm"))
       val leg = nxt.crossJoin(broadcast(roll))
         .withColumn("round", lit(t))
-        .localCheckpoint() // next round's state AND one report slice
+        .stage(s"mwAdaptive:r$t") // next round's state AND one report slice
       cur = leg.select("source", "share_ppm", "nll_micro")
       leg
     }

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** Similarity search over an embedding column (`ArrayType(FloatType)`):
   * brute-force cosine top-k as the exact baseline, a random-hyperplane
@@ -259,7 +260,7 @@ object Similarity {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("s"), col("n")))),
           x => x.getField("s").cast("double") / lit(10000.0) /
             x.getField("n").cast("double")).as("centroid"))
-        .localCheckpoint()
+        .stage("cellCentroids:centroids")
     }
 
   /** IVF top-k — the other classic ANN scale path next to sign-LSH
@@ -306,7 +307,7 @@ object Similarity {
     // the full corpus × centroids scoring pass.
     val cents = cellCentroids(corpus, cellCol, embCol)
       .withColumn("cnrm", sqrt(dotD(col("centroid"), col("centroid"))))
-      .localCheckpoint()
+      .stage("kmeansStep:cents")
     val vecs = graft.model.Tables.fanOut(corpus)
       .select(col(idCol).as("vid"), col(embCol).as("emb"),
         l2norm(col(embCol)).as("nrm"), col(cellCol).as("old_cell"))
@@ -316,7 +317,7 @@ object Similarity {
           col("nrm"), col("cnrm")).as("score")),
         Seq("vid"), byScore("score", tie = "cell"), 1, "rk")
       .select(col("vid"), col("emb"), col("old_cell"), col("cell"))
-      .localCheckpoint()
+      .stage("kmeansStep:assigned")
     val newCents = cellCentroids(assigned, "cell", "emb")
       .select(col("cell"), col("centroid").as("new_centroid"))
     val sizes = assigned.groupBy("cell")
@@ -402,7 +403,7 @@ object Similarity {
           StageCache.keyFor(queries))) {
       bruteTopK(corpus, queries, idCol, embCol, k)
         .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        .localCheckpoint()
+        .stage("exactTopKFlags:scored")
     }
 
   /** Unit-e6 subvector projection (the q187/q227 integer contract) of
@@ -438,7 +439,7 @@ object Similarity {
                                 cacheKey: String): (DataFrame, DataFrame) = {
     val book = StageCache.getOrStage(s"$cacheKey:book")(lloydBook(vx, nCent))
     val codes = StageCache.getOrStage(s"$cacheKey:codes")(
-      codesFor(vx, book).localCheckpoint())
+      codesFor(vx, book).stage("lloydBookAndCodes:codes"))
     (book, codes)
   }
 
@@ -469,7 +470,7 @@ object Similarity {
       .select(col("aid"), col("m"), col("j"),
         when(col("sx") >= 0, expr("sx div n"))
           .otherwise(-expr("(-sx) div n")).as("ce6"))
-      .localCheckpoint() // read 2x: coding join + the caller's LUT
+      .stage("lloydBook:a1") // read 2x: coding join + the caller's LUT
   }
 
   /** The PQ machinery shared by [[pqTopK]] and [[ivfPqTopK]]: the
@@ -492,7 +493,7 @@ object Similarity {
       nCent)
     val cx = StageCache.getOrStage(s"$base:cx") {
       unitE6Proj(corpus, "c", idCol, embCol, sw)
-        .localCheckpoint() // read 4x: seed, refine, coding, LUT side
+        .stage("pqCodesAndLut:cx") // read 4x: seed, refine, coding, LUT side
     }
     val (book, codes) = lloydBookAndCodes(cx, nCent, s"$base:raw")
     val lut = unitE6Proj(queries, "q", idCol, embCol, sw)
@@ -652,7 +653,7 @@ object Similarity {
     val cx = StageCache.getOrStage(s"$base:cx") {
       unitE6Proj(corpus, "c", idCol, embCol, sw)
         .join(cellOf, Seq("neighbor_id"))
-        .localCheckpoint() // read 2x: centroid rollup + residual build
+        .stage("ivfAdcResidualTopK:cx") // read 2x: centroid rollup + residual build
     }
     // Integer cell centroids: sign-split floor-mean of member xe6.
     val cent6 = StageCache.getOrStage(s"$base:cent6") {
@@ -661,14 +662,14 @@ object Similarity {
         .select(col("cell"), col("m"), col("j"),
           when(col("sx") >= 0, expr("sx div n"))
             .otherwise(-expr("(-sx) div n")).as("ke6"))
-        .localCheckpoint() // read 3x: residuals, query residuals, offsets
+        .stage("ivfAdcResidualTopK:cent6") // read 3x: residuals, query residuals, offsets
     }
     // Residual projection — feeds the IDENTICAL PQ training machinery.
     val rx = StageCache.getOrStage(s"$base:rx") {
       cx.join(broadcast(cent6), Seq("cell", "m", "j"))
         .select(col("neighbor_id"), col("m"), col("j"),
           (col("xe6") - col("ke6")).as("xe6"))
-        .localCheckpoint() // read 3x inside lloydBookAndCodes
+        .stage("ivfAdcResidualTopK:rx") // read 3x inside lloydBookAndCodes
     }
     val (book, codes) = lloydBookAndCodes(rx, nCent, s"$base:res")
     val probed = probedCells(corpus, queries, idCol, embCol, cellCol, nprobe)
@@ -677,7 +678,7 @@ object Similarity {
     val qx = unitE6Proj(queries, "q", idCol, embCol, sw)
       .join(broadcast(probed), Seq("query_id"))
       .join(broadcast(cent6), Seq("cell", "m", "j"))
-      .localCheckpoint() // read 2x: LUT + offset
+      .stage("ivfAdcResidualTopK:qx") // read 2x: LUT + offset
     val lut = qx
       .select(col("query_id"), col("cell"), col("m"), col("j"),
         (col("xe6") - col("ke6")).as("qre6"))
@@ -738,7 +739,7 @@ object Similarity {
         col("nrm"))
       .select(col("vid"), col("lbl"), col("i"),
         round(col("x") / col("nrm") * 1e6, 0).cast("long").as("xe6"))
-      .localCheckpoint() // read 3×: label sums, self-dots, dot join
+      .stage("silhouetteByLabel:unit") // read 3×: label sums, self-dots, dot join
     val sums = unit.groupBy(col("lbl").as("l2"), col("i"))
       .agg(sum(expr("CAST(xe6 AS DECIMAL(38,0))")).as("s"))
     val nL = unit.select("vid", "lbl").distinct()
@@ -807,7 +808,7 @@ object Similarity {
         round(col("x") / col("_nrm") * 1e6, 0).cast("long").as("xe6"))
     val sums = unit.groupBy("g", "i")
       .agg(sum("xe6").as("s"))
-      .localCheckpoint() // read 3x: both pair-dot sides + norms
+      .stage("centroidSimilarity:sums") // read 3x: both pair-dot sides + norms
     val n = corpus.withColumn("_nrm", l2norm(col(embCol)))
       .filter(col("_nrm") > 0)
       .groupBy(col(groupCol).as("g")).agg(count(lit(1)).as("n"))
@@ -860,11 +861,11 @@ object Similarity {
           col("nrm"))
         .select(col("vid"), col("c0"), col("i"),
           round(col("x") / col("nrm") * 1e6, 0).cast("long").as("xe6"))
-        .localCheckpoint() // read by every round's centroid + distance legs
+        .stage("lloydLoop:unit") // read by every round's centroid + distance legs
     }
     var asg = StageCache.getOrStage(s"$base:asg:0")(
       unit.select(col("vid"), col("c0").as("cell")).distinct()
-        .localCheckpoint())
+        .stage("lloydLoop:r0"))
     var prevAsg = asg
     for (r <- 1 to rounds) {
       prevAsg = asg
@@ -884,7 +885,7 @@ object Similarity {
           .agg(min_by(struct(col("cell"), col("d2")),
             struct(col("d2"), col("cell"))).as("w"))
           .select(col("vid"), col("w.cell").as("cell"), col("w.d2").as("d2"))
-          .localCheckpoint() // per-round lineage cut; read by next round + report
+          .stage(s"lloydLoop:r$r") // per-round lineage cut; read by next round + report
       }
     }
     (unit, prevAsg, asg)
@@ -965,9 +966,9 @@ object Similarity {
     val lab = unit.select(col("vid"), col("c0").as("label")).distinct()
     val ct = asg.select("vid", "cell").join(lab, Seq("vid"))
       .groupBy(col("cell"), col("label")).agg(count(lit(1)).as("n"))
-      .localCheckpoint() // |clusters|·|labels| rows; read by 4 rollups
+      .stage("kmeansClusterEval:ct") // |clusters|·|labels| rows; read by 4 rollups
     val rowTot = ct.groupBy("cell").agg(sum("n").as("ncl"))
-      .localCheckpoint() // read by MI terms + entropy + purity spine
+      .stage("kmeansClusterEval:rowTot") // read by MI terms + entropy + purity spine
     val colTot = ct.groupBy("label").agg(sum("n").as("nlb"))
     val nTot = ct.agg(sum("n").as("nn"))
     val mi = ct.join(rowTot, Seq("cell")).join(colTot, Seq("label"))
@@ -1042,14 +1043,14 @@ object Similarity {
       .select(col("src_a"), col("id_a"), col("src_b"), col("id_b"),
         round(ratio(dot(col("emb_a"), col("emb_b")),
           col("nrm_a") * col("nrm_b")) * 10000, 0).cast("long").as("cos_e4"))
-      .localCheckpoint() // read by both directed views + the pair census
+      .stage("marginAlignment:pairs") // read by both directed views + the pair census
     val directed = pairs.select(col("id_a").as("qid"), col("src_a").as("qsrc"),
         col("src_b").as("oth"), col("id_b").as("nid"), col("cos_e4"))
       .unionAll(pairs.select(col("id_b").as("qid"), col("src_b").as("qsrc"),
         col("src_a").as("oth"), col("id_a").as("nid"), col("cos_e4")))
     val ranked = topK(directed, Seq("qid", "oth"), byScore("cos_e4", "nid"),
         kAvg, "rk")
-      .localCheckpoint() // read by the kNN average AND the NN1 probe
+      .stage("marginAlignment:ranked") // read by the kNN average AND the NN1 probe
     val avgk = ranked.groupBy("qid", "oth")
       .agg(sum("cos_e4").as("sc"), count(lit(1)).as("nc"))
       .select(col("qid"), col("oth"), expr(
@@ -1073,7 +1074,7 @@ object Similarity {
                  |WHEN cos_e4 < 0 THEN -((-cos_e4) * 2000000 div (avg_a + avg_b))
                  |ELSE cos_e4 * 2000000 div (avg_a + avg_b) END""".stripMargin)
           .as("margin_ppm"))
-      .localCheckpoint() // read by the rollup AND the best-pair probe
+      .stage("marginAlignment:mutual") // read by the rollup AND the best-pair probe
     val census = pairs.groupBy("src_a", "src_b")
       .agg(count(lit(1)).as("n_candidates"))
     census.join(mutual.groupBy("src_a", "src_b")
@@ -1170,7 +1171,7 @@ object Similarity {
         .select(col(idCol).as("vid"), posexplode(col(embCol)).as(Seq("i", "x")))
         .select(col("vid"), col("i"),
           round(col("x") * 1e4, 0).cast("long").as("q"))
-        .localCheckpoint()
+        .stage("quantizedE4:q")
     }
 
   /** The q245 power recursion over a quantized (vid, i, q) relation:
@@ -1197,9 +1198,9 @@ object Similarity {
     lazy val looped: (DataFrame, DataFrame) = {
       var v = q.select(col("i")).distinct()
         .select(col("i"), lit(10000L).as("v"))
-        .localCheckpoint()
+        .stage("powerLoop:r0")
       var vPrev = v
-      for (_ <- 1 to rounds) {
+      for (r <- 1 to rounds) {
         val s = q.join(broadcast(v), Seq("i"))
           .groupBy("vid").agg(sum(col("q") * col("v")).as("s"))
         val w = q.join(s, Seq("vid"))
@@ -1211,7 +1212,7 @@ object Similarity {
           .select(col("i"),
             when(col("w") >= 0, expr("(abs(w) * 10000) div m"))
               .otherwise(-expr("(abs(w) * 10000) div m")).cast("long").as("v"))
-          .localCheckpoint() // dim rows; per-round lineage cut
+          .stage(s"powerLoop:r$r") // dim rows; per-round lineage cut
       }
       (v, vPrev)
     }
@@ -1259,7 +1260,7 @@ object Similarity {
           expr("(CAST(s AS DECIMAL(38,0)) * v) div nv"))
           .otherwise(-expr("(-(CAST(s AS DECIMAL(38,0)) * v)) div nv"))
           .cast("long")).as("q"))
-      .localCheckpoint() // the second loop's scan relation
+      .stage("secondComponent:q2") // the second loop's scan relation
     // Key the residual loop on the ORIGINAL corpus scan plan (q2 is a
     // pure deterministic function of q, so equal keys ⇒ equal values):
     // q2 itself is a fresh LogicalRDD each run and can never hit.
@@ -1367,7 +1368,7 @@ object Similarity {
           exactScored.withColumnRenamed("qid", "id"), Seq("id"),
           Seq(col("score").desc, col("nid")), k, salts = 8)
         .select("id", "nid")
-        .localCheckpoint() // read by every round's readout
+        .stage("exactProbeTopK:exactScored") // read by every round's readout
     }
 
   /** NN-DESCENT RUN TO A CONVERGENCE CERTIFICATE (q280) — the q267
@@ -1419,7 +1420,7 @@ object Similarity {
     var g = seed
     var edgesAll = seed.select(lit(0).as("round"), col("id"), col("nid"))
     for (r <- 1 to rounds) {
-      val ng = descentRound(c, g, k, s"$base:descent:$k:$r")
+      val ng = descentRound(c, g, k, r, s"$base:descent:$k:$r")
       edgesAll = edgesAll
         .unionAll(ng.select(lit(r).as("round"), col("id"), col("nid")))
       g = ng
@@ -1477,7 +1478,7 @@ object Similarity {
           l2norm(col(embCol)).as("nrm"),
           bucketColFrom(col(embCol), 0, nPlanes, dim).as("b1"),
           bucketColFrom(col(embCol), nPlanes, nPlanes, dim).as("b2"))
-        .localCheckpoint() // read by seed pairs ×4, rescore ×2, probe ×2
+        .stage("knnSeed:corpus") // read by seed pairs ×4, rescore ×2, probe ×2
     }
     def seedLeg(key: String): DataFrame = c
       .select(col("id"), col("emb"), col("nrm"), col(key).as("bk"))
@@ -1495,7 +1496,7 @@ object Similarity {
       graft.operators.Skew.saltedTopKPerGroup(seedScored, Seq("id"),
           Seq(col("score").desc, col("nid")), k, salts = 8)
         .select("id", "nid")
-        .localCheckpoint() // read by the N-of-N join (both sides) + readout
+        .stage("knnSeed:seed") // read by the N-of-N join (both sides) + readout
     }
     (c, seed)
   }
@@ -1509,18 +1510,18 @@ object Similarity {
     * corpus projection `c`, best-k kept (salted two-phase top-k).
     * Candidates ⊇ g, so per-node hit sets vs the exact graph are
     * monotone non-decreasing across rounds — the q280 trajectory pin. */
-  private[ext] def descentRound(c: DataFrame, g: DataFrame, k: Int,
+  private[ext] def descentRound(c: DataFrame, g: DataFrame, k: Int, rnd: Int,
                                 cacheKey: String): DataFrame =
     // Round-numbered keys let q267/q276 share round 1 with q280's
     // trajectory.
-    StageCache.getOrStage(cacheKey)(descentRoundBuild(c, g, k))
+    StageCache.getOrStage(cacheKey)(descentRoundBuild(c, g, k, rnd))
 
   private def descentRoundBuild(c: DataFrame, g: DataFrame,
-                                k: Int): DataFrame = {
+                                k: Int, rnd: Int): DataFrame = {
     val undirected = g
       .unionAll(g.select(col("nid").as("id"), col("id").as("nid")))
       .distinct()
-      .localCheckpoint() // both sides of the two-hop join
+      .stage(s"knnDescent:undirected-r$rnd") // both sides of the two-hop join
     val cand2 = undirected
       .join(undirected.select(col("id").as("nid"), col("nid").as("nid2")),
         Seq("nid"))
@@ -1537,7 +1538,7 @@ object Similarity {
     graft.operators.Skew.saltedTopKPerGroup(rescored, Seq("id"),
         Seq(col("score").desc, col("nid")), k, salts = 8)
       .select("id", "nid")
-      .localCheckpoint() // per-round lineage cut; read by next round + report
+      .stage(s"knnDescent:r$rnd") // per-round lineage cut; read by next round + report
   }
 
   /** The q267 pipeline's three staged relations — the corpus projection
@@ -1549,7 +1550,7 @@ object Similarity {
                              dim: Int): (DataFrame, DataFrame, DataFrame) = {
     val base = knnBaseKey(corpus, idCol, embCol, nPlanes, dim)
     val (c, seed) = knnSeed(corpus, idCol, embCol, k, nPlanes, dim)
-    (c, seed, descentRound(c, seed, k, s"$base:descent:$k:1"))
+    (c, seed, descentRound(c, seed, k, 1, s"$base:descent:$k:1"))
   }
 
   /** LABEL-NOISE detection by k-NN disagreement (q276 — the edited-
@@ -1573,7 +1574,7 @@ object Similarity {
                       dim: Int = 64): DataFrame = {
     val (_, _, descent) = knnStages(corpus, idCol, embCol, k, nPlanes, dim)
     val labels = corpus.select(col(idCol).as("id"),
-      col(labelCol).cast("long").as("label")).localCheckpoint()
+      col(labelCol).cast("long").as("label")).stage("labelNoiseByKnn:labels")
     val votes = descent
       .join(labels.select(col("id").as("nid"), col("label").as("nlab")),
         Seq("nid"))
@@ -1670,7 +1671,7 @@ object Similarity {
     // Ride the SAME round-keyed cache entries as the q280 trajectory:
     // in a shared session the serving graph is free after q280 ran.
     var g = seed
-    for (r <- 1 to graphRounds) g = descentRound(c, g, k, s"$base:descent:$k:$r")
+    for (r <- 1 to graphRounds) g = descentRound(c, g, k, r, s"$base:descent:$k:$r")
     val serve = StageCache.getOrStage(s"$base:serve:$k:$graphRounds") {
       val und = g.unionAll(g.select(col("nid").as("id"), col("id").as("nid")))
         .distinct()
@@ -1684,7 +1685,7 @@ object Similarity {
       graft.operators.Skew.saltedTopKPerGroup(scored, Seq("id"),
           Seq(col("escore").desc, col("nid")), 2 * k, salts = 8)
         .select("id", "nid")
-        .localCheckpoint() // read by every hop's expansion join
+        .stage("graphAnn:serve") // read by every hop's expansion join
     }
     // The query projection and the ENTRY-score relation are both
     // beam-independent, so the q310 sweep's three legs (and q304) share
@@ -1693,7 +1694,7 @@ object Similarity {
     val qKey = StageCache.keyFor(queries, "annq", idCol, embCol)
     val q = StageCache.getOrStage(qKey) {
       queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-        l2norm(col(embCol)).as("q_nrm")).localCheckpoint() // read per hop
+        l2norm(col(embCol)).as("q_nrm")).stage("graphAnn:queries") // read per hop
     }
     def score(cand: DataFrame): DataFrame = cand
       .join(c.select(col("id").as("nid"), col("emb").as("n_emb"),
@@ -1742,7 +1743,7 @@ object Similarity {
     val entryScored = StageCache.getOrStage(
         s"$base:annentry:$qKey:$nEntry:${entryCellCol.getOrElse("-")}:" +
           s"$nprobe") {
-      score(entryPairs).localCheckpoint()
+      score(entryPairs).stage("graphAnn:entry")
     }
     // Per hop only the DELTA (newly scored candidates) checkpoints;
     // `visited` stays a lazy union over the staged layers (the BFS
@@ -1750,7 +1751,7 @@ object Similarity {
     // re-materialized every prior layer's rows each round.
     var layers = Vector(entryScored)
     def visited: DataFrame = layers.reduce(_ unionAll _)
-    for (_ <- 1 to hops) {
+    for (h <- 1 to hops) {
       val beamSet = topK(visited, Seq("query_id"), byScore("score", "nid"),
           beam, "brk")
         .select(col("query_id"), col("nid").as("id"))
@@ -1760,7 +1761,7 @@ object Similarity {
         // rows rejoin via the union below
         .join(visited.select("query_id", "nid"), Seq("query_id", "nid"),
           "left_anti")
-      layers = layers :+ score(expanded).localCheckpoint()
+      layers = layers :+ score(expanded).stage(s"graphAnn:r$h")
     }
     val nv = visited.groupBy("query_id").agg(count(lit(1)).as("n_visited"))
     val exact = exactTopKFlags(corpus, queries, idCol, embCol, k)

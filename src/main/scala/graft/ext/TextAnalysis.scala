@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.model.Parity
 import graft.model.Tables.fanOut
+import graft.operators.Stage.StageOps
 
 /** Text-analysis operators for a training-data pipeline: token counting,
   * quality scoring, n-gram-heuristic language ID, and document
@@ -132,7 +133,7 @@ object TextAnalysis {
       .groupBy("w").agg(count(lit(1)).as("n"))
       .withColumn("h",
         graft.functions.TextKernelOps.wordNgramHashFull(col("w"), 1).getItem(0))
-      .localCheckpoint() // feeds the sketch AND the exact top-k probe
+      .stage("cmsHeavyHitters:vocab") // feeds the sketch AND the exact top-k probe
     val buckets = (0 until 4).map(i =>
       ((lit(CmsA(i)) * col("h") + lit(CmsB(i))) % lit(TextOps.HashP)) % lit(CmsW))
     val cms = vocab
@@ -691,7 +692,7 @@ object TextAnalysis {
         .select(col(idCol).as("doc_id"),
           explode_outer(charShingles(normText(col(textCol)), 2)).as("bg"))
         .groupBy("doc_id", "bg").agg(count(col("bg")).as("c"))
-        .localCheckpoint() // model AND scoring read it; ≤ docs·charset² rows
+        .stage("bigramLmScore:dc") // model AND scoring read it; ≤ docs·charset² rows
       val m = dc.filter(col("bg").isNotNull)
         .groupBy("bg").agg(sum("c").as("cnt"))
       val mar = m.groupBy(substring(col("bg"), 1, 1).as("c1"))
@@ -710,7 +711,7 @@ object TextAnalysis {
         .select(col("doc_id"), col("n_bigrams"),
           when(col("n_bigrams") === 0, 0L)
             .otherwise(expr("sl div n_bigrams")).as("nll_micro"))
-        .localCheckpoint()
+        .stage("bigramLmScore:lp")
     }
     scored.orderBy("doc_id")
   }
@@ -750,10 +751,10 @@ object TextAnalysis {
         explode_outer(wordShingles(tokens(normText(col(textCol))), 2))
           .as("bg"))
       .groupBy("doc_id", "bg").agg(count(col("bg")).as("c"))
-      .localCheckpoint() // model AND scoring read it
+      .stage("wordBigramLmScore:dcb") // model AND scoring read it
     val cball = dcb.filter(col("bg").isNotNull)
       .groupBy("bg").agg(sum("c").as("cb"))
-      .localCheckpoint() // read by the w1 marginal + the retained model
+      .stage("wordBigramLmScore:cball") // read by the w1 marginal + the retained model
     // the left-context marginal is over ALL observed bigrams (pruning
     // cuts the model rows, never the denominator)
     val c1 = cball.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
@@ -761,7 +762,7 @@ object TextAnalysis {
     val uni = fanOut(docs)
       .select(explode(tokens(normText(col(textCol)))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cu"))
-      .localCheckpoint() // read by totals + model join + backoff column
+      .stage("wordBigramLmScore:uni") // read by totals + model join + backoff column
     val tot = uni.agg(sum("cu").as("tt"), count(lit(1)).as("vv"))
     val lpBig = cball.filter(col("cb") >= countFloor)
       .join(c1, substring_index(col("bg"), " ", 1) === col("w1"))
@@ -837,10 +838,10 @@ object TextAnalysis {
         explode_outer(wordShingles(tokens(normText(col(textCol))), 2))
           .as("bg"))
       .groupBy("doc_id", "bg").agg(count(col("bg")).as("c"))
-      .localCheckpoint() // model AND scoring read it
+      .stage("kneserNeyBigramScore:dcb") // model AND scoring read it
     val cball = dcb.filter(col("bg").isNotNull)
       .groupBy("bg").agg(sum("c").as("cb"))
-      .localCheckpoint() // read by both marginals, the type total, the model
+      .stage("kneserNeyBigramScore:cball") // read by both marginals, the type total, the model
     // ONE left-marginal groupBy carries both c(w1·) and N1+(w1·) — the
     // continuation-weight inputs ride the rollup the plain marginal
     // already needed.
@@ -961,7 +962,7 @@ object TextAnalysis {
     val lab = ruleQualityLabel(docs, idCol, textCol)
     val cells = lab.join(pred, Seq("doc_id"))
       .groupBy("label", "predicted").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // |classes|² rows; read for matrix rows AND column totals
+      .stage("classifierEval:cells") // |classes|² rows; read for matrix rows AND column totals
     val predTot = cells.groupBy(col("predicted").as("class"))
       .agg(sum("n").as("n_pred"))
     val spine = (0 until nClasses).toDF("class")
@@ -1127,7 +1128,7 @@ object TextAnalysis {
     val lab = ruleQualityLabel(docs, idCol, textCol)
     val j = pred.join(lab, Seq("doc_id"))
       .withColumn("half", (col("doc_id") % 2).cast("int"))
-      .localCheckpoint() // read by the calibration and test legs
+      .stage("conformalSelective:j") // read by the calibration and test legs
     val cal = j.filter(col("half") === 0)
     val nCal = cal.agg(count(lit(1)).as("n_cal"))
       .withColumn("k", expr(s"(n_cal + 1) * $alphaPpm div 1000000"))
@@ -1197,7 +1198,7 @@ object TextAnalysis {
           .getItem(0) % dim).cast("int").as("bucket"))
     val perDoc = tokh.groupBy("doc_id", "bucket")
       .agg(count(lit(1)).as("c"), max("tgt").as("tgt"))
-      .localCheckpoint() // read 2x: bucket distributions + doc weights
+      .stage("dsirWeights:perDoc") // read 2x: bucket distributions + doc weights
     val byBucket = perDoc.groupBy("bucket").agg(
       sum("c").as("ca"),
       sum(when(col("tgt") === 1, col("c")).otherwise(0L)).as("ct"))

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.model.Tables.fanOut
+import graft.operators.Stage
+import graft.operators.Stage.StageOps
 
 /** Near-duplicate detection for a training-data pipeline: exact
   * (normalized-hash) dedup, n-gram Jaccard, MinHash+LSH, and SimHash.
@@ -112,7 +114,7 @@ object TextDedup {
     * makes bytes ≡ chars. Similarity is tie-proof fixed-point. */
   def fuzzyPairs(docs: DataFrame, idCol: String, textCol: String,
                  k: Int = 8): DataFrame = {
-    val bands = staged(minhashBands(docs, idCol, textCol, k))
+    val bands = minhashBands(docs, idCol, textCol, k).stage("fuzzyPairs:bands")
     val cands = bands
       .select(col("doc_id").as("doc_a"), col("band"), col("band_hash"))
       .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("band_hash")),
@@ -174,7 +176,8 @@ object TextDedup {
       .select(least(col("a"), col("b")).as("doc_a"),
         greatest(col("a"), col("b")).as("doc_b"))
       .distinct()
-    val sh = staged(docWordShingleHashes(docs, idCol, textCol, n))
+    val sh = docWordShingleHashes(docs, idCol, textCol, n)
+      .stage("sortedNeighborhoodPairs:shingles")
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = cands
       .join(sh.select(col("doc_id").as("doc_a"), col("hv")), Seq("doc_a"))
@@ -200,7 +203,7 @@ object TextDedup {
     // Both the df aggregation and the join read the index, so stage it
     // once (the q33/q95 idiom): text is normalized and hashed exactly
     // once, and only (doc_id, hv) longs are ever re-read.
-    val sh = staged(docWordShingleHashes(docs, idCol, textCol, n))
+    val sh = docWordShingleHashes(docs, idCol, textCol, n).stage("shingleNovelty:shingles")
     val df = sh.groupBy("hv").agg(count(lit(1)).as("df"))
     sh.join(df, Seq("hv"))
       .groupBy("doc_id")
@@ -253,14 +256,14 @@ object TextDedup {
     // The raw index feeds the df aggregation, the size branch, and the
     // pair branch — stage it ONCE instead of re-exploding the corpus per
     // branch (at warehouse scale this materialization is a staging
-    // table). `staged` (localCheckpoint) rather than persist(): blocks
-    // are reclaimed by the ContextCleaner when the plan is GC'd, so a
-    // long-lived session doesn't accumulate pinned cache per call.
-    val raw = staged(shingles)
+    // table). Staged rather than persist(): blocks are reclaimed by
+    // the ContextCleaner when the plan is GC'd, so a long-lived session
+    // doesn't accumulate pinned cache per call.
+    val raw = shingles.stage("pairIntersections:shingles")
     // One df pass serves both the hot cap and the shared-shingle
     // restriction. Count-only state, so a pathological boilerplate
     // shingle partial-aggregates to a counter, never to a posting list.
-    val dfs = staged(raw.groupBy(shCol).agg(count(lit(1)).as("df")))
+    val dfs = raw.groupBy(shCol).agg(count(lit(1)).as("df")).stage("pairIntersections:df")
     val hot = dfs.filter(col("df") > maxDf).select(shCol)
     val sizes = raw.join(broadcast(hot), Seq(shCol), "left_anti")
       .groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -315,14 +318,6 @@ object TextDedup {
     containmentPairs(docWordShingleHashes(docs, idCol, textCol, n), "hv",
       threshold, maxDf)
 
-  /** Stage-once wrapper: materialize a multiply-consumed relation.
-    * `localCheckpoint` (not `persist`) — it cuts lineage, and its blocks
-    * are released by the ContextCleaner once the DataFrame is garbage
-    * collected, where `persist` pins an entry in the CacheManager until
-    * an explicit `unpersist` that a lazily-returned plan can never
-    * schedule. */
-  private def staged(df: DataFrame): DataFrame = df.localCheckpoint()
-
   private def finishJaccard(inter: DataFrame, sizes: DataFrame,
                             threshold: Double): DataFrame = {
     val jac = col("n_inter").cast("double") /
@@ -364,12 +359,12 @@ object TextDedup {
         StageCache.keyFor(docs, "jacjoined", idCol, textCol, k, maxDf)) {
       val (inter, sizes) = pairIntersections(
         docShingleHashes(docs, idCol, textCol, k), "hv", maxDf)
-      staged(inter
+      Stage.local(inter
         .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")),
           Seq("doc_a"))
         .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")),
           Seq("doc_b"))
-        .withColumn("u", col("na") + col("nb") - col("n_inter")))
+        .withColumn("u", col("na") + col("nb") - col("n_inter")), "jaccardJoined:inter")
     }
 
   /** DEDUP THRESHOLD SWEEP (q248) — "how much would we drop at θ": for
@@ -391,8 +386,9 @@ object TextDedup {
                           maxDf: Int = DefaultMaxDf): DataFrame = {
     require(thresholds.nonEmpty, "need >= 1 threshold")
     val joined = jaccardJoined(docs, idCol, textCol, k, maxDf)
-    val toks = staged(docs.select(col(idCol).as("doc_id"),
-      size(tokens(normText(col(textCol)))).cast("long").as("n_tokens")))
+    val toks = docs.select(col(idCol).as("doc_id"),
+        size(tokens(normText(col(textCol)))).cast("long").as("n_tokens"))
+      .stage("dedupThresholdSweep:tokens")
     val tot = toks.agg(count(lit(1)).as("total_docs"),
       sum("n_tokens").as("total_tokens"))
     val rows = thresholds.sorted.map { th =>
@@ -640,13 +636,13 @@ object TextDedup {
       : (DataFrame, DataFrame) = {
     val base = StageCache.keyFor(docs, "mhlsh", idCol, textCol, k)
     val bands = StageCache.getOrStage(s"$base:bands")(
-      staged(minhashBands(docs, idCol, textCol, k)))
-    val cands = StageCache.getOrStage(s"$base:cands")(staged(
+      minhashBands(docs, idCol, textCol, k).stage("lsh:bands"))
+    val cands = StageCache.getOrStage(s"$base:cands")(Stage.local(
       bands.select(col("doc_id").as("doc_a"), col("band"), col("band_hash"))
         .join(bands.select(col("doc_id").as("doc_b"), col("band"),
           col("band_hash")), Seq("band", "band_hash"))
         .filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b").distinct()))
+        .select("doc_a", "doc_b").distinct(), "lsh:cands"))
     (bands, cands)
   }
 
@@ -665,9 +661,9 @@ object TextDedup {
       val candDocs = cands.select(col("doc_a").as("doc_id"))
         .union(cands.select(col("doc_b").as("doc_id")))
         .distinct()
-      staged(docShingleHashesRaw(docs, idCol, textCol, k)
+      Stage.local(docShingleHashesRaw(docs, idCol, textCol, k)
         .join(candDocs, Seq("doc_id"), "left_semi")
-        .distinct())
+        .distinct(), "lsh:candShingles")
     }
 
   /** Cross-source duplicate LEAKAGE report: near-dup pairs (the
@@ -765,24 +761,24 @@ object TextDedup {
                             idCol: String, textCol: String, k: Int = 8,
                             threshold: Double = 0.8): (DataFrame, MinhashState) = {
     val batchHashed = docShingleHashesRaw(batch, idCol, textCol, k)
-    val batchBands = staged(minhashBands(batch, idCol, textCol, k))
+    val batchBands = minhashBands(batch, idCol, textCol, k).stage("minhashIncremental:bands")
     val allBands = state.bands.unionByName(batchBands)
     // candidates must touch the batch: batch × (state ∪ batch)
-    val cands = staged(
+    val cands = Stage.local(
       batchBands.select(col("doc_id").as("doc_a"), col("band"), col("band_hash"))
         .join(allBands.select(col("doc_id").as("doc_b"), col("band"), col("band_hash")),
           Seq("band", "band_hash"))
         .filter(col("doc_a") =!= col("doc_b"))
         .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
           greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-        .distinct())
+        .distinct(), "minhashIncremental:cands")
     val candDocs = cands.select(col("doc_a").as("doc_id"))
       .union(cands.select(col("doc_b").as("doc_id")))
       .distinct()
     val batchShingles = batchHashed.distinct()
     val allShingles = state.shingles.unionByName(batchShingles)
-    val candShingles = staged(allShingles
-      .join(candDocs, Seq("doc_id"), "left_semi"))
+    val candShingles = Stage.local(allShingles
+      .join(candDocs, Seq("doc_id"), "left_semi"), "minhashIncremental:candShingles")
     val pairs = verifyJaccard(cands, candShingles, threshold)
     (pairs, MinhashState(allBands, allShingles))
   }
@@ -841,7 +837,7 @@ object TextDedup {
   def clusterSizeHistogram(docs: DataFrame, idCol: String, textCol: String,
                            k: Int = 8, threshold: Double = 0.8): DataFrame = {
     val mem = dedupClusters(docs, idCol, textCol, k, threshold)
-      .localCheckpoint() // read by the rollup + the clustered-count scalar
+      .stage("clusterSizeHistogram:mem") // read by the rollup + the clustered-count scalar
     val tok = docs.select(col(idCol).as("doc_id"),
       size(tokens(normText(col(textCol)))).cast("long").as("n_tokens"))
     val per = mem.join(tok, Seq("doc_id"))
@@ -1004,7 +1000,7 @@ object TextDedup {
     // relation; stage it (one long per doc) or the per-row kernel runs
     // twice. The 20 permuted prefixes are a generator projection over the
     // staged scan — bit arithmetic only, no shuffle before the join.
-    val fps = staged(simhashFingerprints(docs, idCol, textCol))
+    val fps = simhashFingerprints(docs, idCol, textCol).stage("simhashPairs:fingerprints")
     val keyed = fps.select(col("doc_id"), col("fp"),
         explode(array(combos.map { case (combo, t) =>
           struct(lit(t).as("t"), prefixOf(combo).as("pfx"))
@@ -1044,7 +1040,7 @@ object TextDedup {
   def dedupTierMatrix(docs: DataFrame, idCol: String, textCol: String,
                       k: Int = 8, threshold: Double = 0.8,
                       maxHamming: Int = 3): DataFrame = {
-    val ids = docs.select(col(idCol).as("doc_id")).localCheckpoint()
+    val ids = docs.select(col(idCol).as("doc_id")).stage("dedupTierMatrix:ids")
     // md5-of-normalized-text grouping (the exactState/q231 convention):
     // a keyed agg + hash-keyed join — a boilerplate mega-group never
     // rides one window task, and no document text crosses an exchange.
@@ -1103,7 +1099,7 @@ object TextDedup {
     val base = docs.select(col(idCol).as("doc_id"), col(srcCol).as("source"),
         size(TextOps.tokens(t)).cast("long").as("n_tokens"),
         graft.functions.TextKernelOps.wordNgramHashFull(t, width).as("hs"))
-      .localCheckpoint() // read by the line leg + the per-doc rollup
+      .stage("lineDedup:base") // read by the line leg + the per-doc rollup
     val lines = base
       .select(col("doc_id"), posexplode(col("hs")).as(Seq("pos", "h")))
       .filter(pmod(col("pos"), lit(width)) === 0)
@@ -1161,13 +1157,13 @@ object TextDedup {
   def crossDocSpanScrub(docs: DataFrame, idCol: String, textCol: String,
                         srcCol: String, n: Int = 4, k: Int = 8,
                         threshold: Double = 0.5): DataFrame = {
-    val pairs = staged(minhashLshPairs(docs, idCol, textCol, k, threshold)
-      .select("doc_a", "doc_b")) // read by both directed legs
+    val pairs = Stage.local(minhashLshPairs(docs, idCol, textCol, k, threshold)
+      .select("doc_a", "doc_b"), "crossDocSpanScrub:pairs") // read by both directed legs
     val t = TextOps.normText(col(textCol))
     val base = docs.select(col(idCol).as("doc_id"), col(srcCol).as("source"),
         size(TextOps.tokens(t)).cast("long").as("n_tokens"),
         graft.functions.TextKernelOps.wordNgramHashFull(t, n).as("hs"))
-      .localCheckpoint() // read by occ + dochash + the rollup
+      .stage("crossDocSpanScrub:base") // read by occ + dochash + the rollup
     val occ = base.select(col("doc_id"), posexplode(col("hs")).as(Seq("pos", "h")))
     val dochash = occ.select("doc_id", "h").distinct()
     val directed = pairs
@@ -1283,7 +1279,7 @@ object TextDedup {
         col(srcCol).as("source"),
         size(TextOps.tokens(t)).cast("long").as("n_tokens"),
         graft.functions.TextKernelOps.wordNgramHashFull(t, minLen).as("hs"))
-      .localCheckpoint() // read by the hash leg + the per-doc rollup
+      .stage("exactSubstrDupOcc:base") // read by the hash leg + the per-doc rollup
     val occ = base.select(col("doc_id"),
       posexplode(col("hs")).as(Seq("pos", "h")))
     // Candidate sliver: hashes with ≥ 2 occurrences corpus-wide.
@@ -1345,7 +1341,7 @@ object TextDedup {
       minLen)
     val keepers = dupOcc.filter(col("rn") === 1)
       .groupBy("doc_id").agg(count(lit(1)).as("n_kept"))
-    val losers = dupOcc.filter(col("rn") >= 2).localCheckpoint()
+    val losers = dupOcc.filter(col("rn") >= 2).stage("exactSubstringKeepFirst:losers")
     val nDup = losers.groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
     val covered = losers.select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + (minLen - 1))).as("p"))

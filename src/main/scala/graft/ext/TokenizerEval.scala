@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** Cross-lineage tokenizer FERTILITY evaluation (q317) — the number
   * every data card and tokenizer-selection decision quotes: per
@@ -32,7 +33,7 @@ object TokenizerEval {
     val tw = docs.select(col(langCol).as("lang"),
         explode(tokens(normText(col(textCol)))).as("w"))
       .filter(col("w") =!= "")
-      .localCheckpoint() // tokenized once, read by all three legs
+      .stage("fertilityMatrix:tw") // tokenized once, read by all three legs
     // The BPE/WordPiece maps derive from their lineages' StageCache'd
     // trainer artifacts (shared with q232/q237/q238/q251 and q313);
     // the unigram chain has no other rider at THIS budget, so its map
@@ -45,7 +46,7 @@ object TokenizerEval {
       val (_, _, _, _, np) = UnigramLm.trainState(docs, textCol,
         seedMulti = 48, keepMulti = budget, maxWordLen = 12,
         maxPieceLen = 4)
-      np.localCheckpoint()
+      np.stage("fertilityMatrix:unigramLm")
     }
     def leg(name: String, np: DataFrame): DataFrame =
       tw.join(broadcast(np.select(col("w"),

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** UNIGRAM-LM (SentencePiece-style) tokenizer — the second tokenizer
   * lineage next to BPE (q232/q237/q238): Kudo 2018's subword
@@ -118,7 +119,7 @@ object UnigramLm {
       .select(explode(tokens(normText(col(textCol)))).as("w"))
       .filter(col("w").rlike("^[a-z]+$") && length(col("w")) <= maxWordLen)
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint() // read by substring counts, usage weights, DP base
+      .stage("unigramLm:vw") // read by substring counts, usage weights, DP base
     val wl = vw.select(col("w"), length(col("w")).cast("int").as("len"))
     // corpus-weighted substring occurrence counts, lengths 1..maxPieceLen
     val occ = (1 to maxPieceLen).map { l =>
@@ -128,11 +129,11 @@ object UnigramLm {
           .as("piece"))
     }.reduce(_ unionAll _)
       .groupBy("piece").agg(sum("freq").as("c0"))
-      .localCheckpoint() // read by the char slice + the multi top-k
+      .stage("unigramLm:occ") // read by the char slice + the multi top-k
     val chars = occ.filter(length(col("piece")) === 1)
     val multi = occ.filter(length(col("piece")) >= 2)
       .orderBy(desc("c0"), col("piece")).limit(seedMulti)
-    val v0 = chars.unionAll(multi).localCheckpoint() // vp0 + prune spine + count
+    val v0 = chars.unionAll(multi).stage("unigramLm:v0") // vp0 + prune spine + count
     val t0 = v0.agg(sum("c0").as("tt"), count(lit(1)).as("vv"))
     val vp0 = v0.crossJoin(broadcast(t0))
       .select(col("piece"), lpCol("c0").as("lp"))
@@ -140,7 +141,7 @@ object UnigramLm {
       .select(col("w"), explode(expr(usedPiecesExpr)).as("piece"))
       .join(vw, Seq("w"))
       .groupBy("piece").agg(sum("freq").as("u1"))
-      .localCheckpoint() // read by both prune slices
+      .stage("unigramLm:u1") // read by both prune slices
     val keptChars = v0.filter(length(col("piece")) === 1)
       .join(u1, Seq("piece"), "left")
       .select(col("piece"), coalesce(col("u1"), lit(0L)).as("u1"))
@@ -149,7 +150,7 @@ object UnigramLm {
       .select(col("piece"), coalesce(col("u1"), lit(0L)).as("u1"))
       .filter(col("u1") >= 1)
       .orderBy(desc("u1"), col("piece")).limit(keepMulti)
-    val v1 = keptChars.unionAll(keptMulti).localCheckpoint() // vp1 + count
+    val v1 = keptChars.unionAll(keptMulti).stage("unigramLm:v1") // vp1 + count
     val t1 = v1.agg(sum("u1").as("tt"), count(lit(1)).as("vv"))
     val vp1 = v1.crossJoin(broadcast(t1))
       .select(col("piece"), lpCol("u1").as("lp"))

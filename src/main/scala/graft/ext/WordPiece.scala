@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** WORDPIECE vocabulary training (q313) — the THIRD production
   * tokenizer lineage beside BPE ([[Bpe]], greedy count-argmax growth)
@@ -49,7 +50,7 @@ object WordPiece {
       .select(explode(tokens(normText(col(textCol)))).as("w"))
       .filter(col("w").rlike("^[a-z]+$"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint() // read every round (pair + unigram weights)
+      .stage("wordPiece:vocab") // read every round (pair + unigram weights)
     val pw = Window.partitionBy("w").orderBy("pos")
     var st = vocab
       .select(col("w"), posexplode(
@@ -59,7 +60,7 @@ object WordPiece {
     for (r <- 1 to rounds) {
       val withNext = st
         .withColumn("nxt", lead("sym", 1).over(pw))
-        .localCheckpoint() // read 3x: pair stats, unigram stats, apply
+        .stage(s"wordPiece:r$r") // read 3x: pair stats, unigram stats, apply
       val weighted = withNext.join(vocab, Seq("w"))
       val uni = weighted.groupBy(col("sym")).agg(sum("freq").as("ucnt"))
       val bestFull = weighted.filter(col("nxt").isNotNull)
@@ -93,8 +94,8 @@ object WordPiece {
     lazy val trained = trainLoop(docs, textCol, rounds)
     def k(part: String) = StageCache.keyFor(docs, "wp", part, textCol, rounds)
     val merges = StageCache.getOrStage(k("merges"))(
-      trained._1.reduce(_ unionAll _).localCheckpoint())
-    val st = StageCache.getOrStage(k("st"))(trained._2.localCheckpoint())
+      trained._1.reduce(_ unionAll _).stage("wordPiece:merges"))
+    val st = StageCache.getOrStage(k("st"))(trained._2.stage("wordPiece:st"))
     (merges, st)
   }
 

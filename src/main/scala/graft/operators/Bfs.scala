@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** Multi-source breadth-first hop distances over an undirected edge
   * list — the reachability/shortest-path primitive behind "how far is
@@ -50,7 +51,7 @@ object Bfs {
                       maxHops: Int): DataFrame = {
     require(maxHops >= 0 && maxHops <= 16, s"maxHops out of [0,16]: $maxHops")
     val level0 = seeds.select(col("seed"), col("seed").as("node"),
-      lit(0).as("dist")).localCheckpoint()
+      lit(0).as("dist")).stage("bfs:r0")
     val levels = scala.collection.mutable.ArrayBuffer(level0)
     var frontier = level0
     var h = 0
@@ -62,7 +63,7 @@ object Bfs {
         .distinct()
         .join(visited.select("seed", "node"), Seq("seed", "node"), "left_anti")
         .select(col("seed"), col("node"), lit(h).as("dist"))
-        .localCheckpoint()
+        .stage(s"bfs:r$h")
       levels += next
       frontier = next
     }
@@ -98,13 +99,13 @@ object Bfs {
       .withColumn("bit_idx", row_number().over(w) - 1)
       .withColumn("bit", expr("shiftleft(CAST(1 AS BIGINT), bit_idx)"))
       .drop("bit_idx")
-      .localCheckpoint()
+      .stage("groupEcc:tagged")
     require(tagged.count() <= 64, "groupEccentricity holds at most 64 seeds")
     val groupMasks = tagged.groupBy("off")
-      .agg(expr("bit_or(bit)").as("gmask")).localCheckpoint()
+      .agg(expr("bit_or(bit)").as("gmask")).stage("groupEcc:groupMasks")
     var state = tagged.select(col("seed").as("node"), col("bit").as("mask"))
       .groupBy("node").agg(expr("bit_or(mask)").as("mask"))
-      .localCheckpoint()
+      .stage("groupEcc:r0")
     var frontier = state
     // (dist, gained-bit union) — 1 lazy row per level over the level's
     // already-checkpointed gains (nothing re-materializes).
@@ -122,10 +123,10 @@ object Bfs {
           col("pmask").bitwiseAND(bitwise_not(coalesce(col("seen"), lit(0L))))
             .as("mask"))
         .filter(col("mask") =!= 0L)
-        .localCheckpoint()
+        .stage(s"groupEcc:gained-r$h")
       state = state.unionAll(gained)
         .groupBy("node").agg(expr("bit_or(mask)").as("mask"))
-        .localCheckpoint()
+        .stage(s"groupEcc:r$h")
       gains += gained.agg(coalesce(expr("bit_or(mask)"), lit(0L)).as("gained"))
         .select(lit(h).as("dist"), col("gained"))
       frontier = gained

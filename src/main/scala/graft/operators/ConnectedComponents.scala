@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** Connected components by iterative min-label propagation — the step
   * that turns near-duplicate PAIRS into dedup GROUPS (keep one
@@ -24,14 +25,14 @@ object ConnectedComponents {
     // two branches would otherwise each re-evaluate the (potentially
     // expensive — e.g. a whole MinHash verify) upstream plan.
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint()
+      .stage("cc:edges")
     val sym = e
       .union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .localCheckpoint()
+      .stage("cc:sym")
     var labels = sym.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-      .localCheckpoint()
+      .stage("cc:r0")
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
@@ -49,7 +50,7 @@ object ConnectedComponents {
         .select(col("node"), col("label"),
           least(col("label"), coalesce(col("nbr_label"), col("label"))).as("new_label"))
         .observe(obs, count(when(col("new_label") < col("label"), 1)).as("changed"))
-        .localCheckpoint()
+        .stage(s"cc:r${i + 1}")
       changed = obs.get("changed").asInstanceOf[Long]
       labels = updated.select(col("node"), col("new_label").as("label"))
       i += 1
@@ -89,11 +90,11 @@ object ConnectedComponents {
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct()
-      .localCheckpoint()
+      .stage("star:init")
     // every node, including isolated-after-rewrite roots, must surface
     val nodes = init.select(col("a").as("node"))
       .union(init.select(col("b").as("node"))).distinct()
-      .localCheckpoint()
+      .stage("star:nodes")
 
     def sym(e: DataFrame): DataFrame =
       e.select(col("a").as("u"), col("b").as("v"))
@@ -112,7 +113,7 @@ object ConnectedComponents {
         .join(mins(nbL), Seq("u"))
         .select(col("m").as("a"), col("v").as("b"))
         .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint()
+        .stage(s"star:large-r${i + 1}")
       // small-star: (v, m(u)) for v ≤ u, plus (u, m(u))
       val nbS = sym(large)
       val sMin = mins(nbS)
@@ -124,7 +125,7 @@ object ConnectedComponents {
         .select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b"))
         .distinct()
-        .localCheckpoint()
+        .stage(s"star:r${i + 1}")
       stable = small.exceptAll(e).isEmpty && e.exceptAll(small).isEmpty
       e = small
       i += 1

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** Distributed triangle counting over an undirected edge list — the
   * graph-shape statistic (closed wedges / clustering coefficient) that
@@ -42,7 +43,7 @@ object Graph {
         graft.ext.StageCache.keyFor(edgesIn, "symadj")) {
       val e = edgesIn.select(col("u"), col("v"))
       e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-        .localCheckpoint()
+        .stage("symStaged:sym")
     }
 
   /** Canonicalize an edge list to distinct undirected edges (u < v,
@@ -61,7 +62,7 @@ object Graph {
   def triangleReport(edgesIn: DataFrame): DataFrame = {
     // Three stages re-read the edge list (degrees, wedge build, closing
     // probe); stage it once — the canonical list is (long, long) rows.
-    val edges = edgesIn.localCheckpoint()
+    val edges = edgesIn.stage("triangleReport:edges")
     val deg = edges.select(col("u").as("node")).unionAll(
         edges.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -123,7 +124,7 @@ object Graph {
     * lcc_ppm = ⌊2·t·10⁶ / (deg·(deg−1))⌋ exactly, 0 for deg < 2.
     * Output: one row per node (node, degree, n_triangles, lcc_ppm). */
   def localClustering(edgesIn: DataFrame): DataFrame = {
-    val edges = edgesIn.localCheckpoint()
+    val edges = edgesIn.stage("localClustering:edges")
     val deg = edges.select(col("u").as("node")).unionAll(
         edges.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -204,8 +205,8 @@ object Graph {
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-    var cur = nonNullEdges(edgesIn).localCheckpoint()
-    for (_ <- 1 to rounds) {
+    var cur = nonNullEdges(edgesIn).stage("kcore:r0")
+    for (r <- 1 to rounds) {
       // Peel by ANTI-joining the DROP set (deg < k) rather than
       // semi-joining the keep set: every endpoint of `cur` has a degree
       // row by construction, so anti(drop) ≡ semi(keep) — but the drop
@@ -217,7 +218,7 @@ object Graph {
       cur = cur
         .join(drop.withColumnRenamed("node", "u"), Seq("u"), "left_anti")
         .join(drop.withColumnRenamed("node", "v"), Seq("v"), "left_anti")
-        .localCheckpoint()
+        .stage(s"kcore:r$r")
     }
     degrees(cur).select(col("node"), col("deg").cast("long").as("core_deg"))
   }
@@ -241,12 +242,12 @@ object Graph {
     // row (n_edges = Σdeg/2 — no separate edge count pass) and the next
     // round's keep filter; the node-scale degree table is materialized
     // once so neither consumer re-scans the edge list.
-    def degrees(e: DataFrame): DataFrame =
+    def degrees(e: DataFrame, r: Int): DataFrame =
       e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-    var cur = nonNullEdges(edgesIn).localCheckpoint()
-    var deg = degrees(cur)
+        .stage(s"kcoreTrajectory:deg-r$r")
+    var cur = nonNullEdges(edgesIn).stage("kcoreTrajectory:r0")
+    var deg = degrees(cur, 0)
     // (An r16 Σdeg early-fixpoint cut — the q223 trick — was tried and
     // REVERTED here: the adaptive-k trajectory is still shrinking at
     // round 6 at every bench scale (sf0.1: 1,196,000 → 1,100,065 edges,
@@ -264,8 +265,8 @@ object Graph {
         cur = cur
           .join(drop.withColumnRenamed("node", "u"), Seq("u"), "left_anti")
           .join(drop.withColumnRenamed("node", "v"), Seq("v"), "left_anti")
-          .localCheckpoint()
-        deg = degrees(cur)
+          .stage(s"kcoreTrajectory:r$r")
+        deg = degrees(cur, r)
       }
       deg.agg(count(lit(1)).as("n_nodes"),
           coalesce(expr("sum(deg) div 2"), lit(0L)).as("n_edges"),
@@ -316,7 +317,7 @@ object Graph {
     val sym = symStaged(edgesIn)
     val deg = sym.groupBy(col("u").as("node"))
       .agg(count(lit(1)).cast("long").as("c"))
-      .localCheckpoint()
+      .stage("corenessHIndex:r0")
     var c = deg
     var prev = deg
     // Early-fixpoint cut (values IDENTICAL to the full unroll): the
@@ -339,7 +340,7 @@ object Graph {
       c = nbr.withColumn("rk", row_number().over(wr).cast("long"))
         .groupBy("node").agg(max(least(col("rk"), col("nc"))).as("c"))
       if (t % 3 == 0 || t == rounds) {
-        c = c.localCheckpoint()
+        c = c.stage(s"corenessHIndex:r$t")
         // (r17 note: deferring this probe to later blocks — the ADVICE
         // suggestion — was tried and rejected on paper: the t=3 probe
         // stores the baseline that lets t=6 exit, so skipping it can
@@ -367,7 +368,7 @@ object Graph {
   def triangleReportSampled(edgesIn: DataFrame,
                             pPpm: Long = 250000): DataFrame = {
     require(pPpm >= 1 && pPpm <= 1000000, s"pPpm out of (0,10^6]: $pPpm")
-    val edges = edgesIn.localCheckpoint()
+    val edges = edgesIn.stage("triangleReportSampled:edges")
     val total = edges.agg(count(lit(1)).as("n_edges_total"))
     val sampled = edges.filter(
       graft.ext.Sampling.ppmHash(col("u") * lit(1000003L) + col("v"))
@@ -410,7 +411,7 @@ object Graph {
                  maxDeg: Long = 64L): DataFrame = {
     val e = edgesIn.select(col("u").cast("long").as("u"),
         col("v").cast("long").as("v"))
-      .localCheckpoint() // read by degrees + adjacency + anti join
+      .stage("adamicAdar:e") // read by degrees + adjacency + anti join
     val dir = e.select(col("u"), col("v"))
       .unionAll(e.select(col("v").as("u"), col("u").as("v")))
     val deg = dir.groupBy(col("u").as("z")).agg(count(lit(1)).as("d"))
@@ -455,11 +456,11 @@ object Graph {
   def degreeAssortativity(edgesIn: DataFrame): DataFrame = {
     val e = edgesIn.select(col("u").cast("long").as("u"),
         col("v").cast("long").as("v"))
-      .localCheckpoint() // read by degree count + both direction legs
+      .stage("degreeAssortativity:e") // read by degree count + both direction legs
     val deg = e.select(col("u").as("n"))
       .unionAll(e.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
-      .localCheckpoint() // read by node count + both endpoint joins
+      .stage("degreeAssortativity:deg") // read by node count + both endpoint joins
     val nodes = deg.agg(count(lit(1)).as("n_nodes"),
       max("d").as("max_degree"))
     val dir = e.select(col("u"), col("v"))
@@ -548,7 +549,7 @@ object Graph {
     val comm = members.join(intra, Seq("lab"), "left_outer")
       .select(col("lab"), col("n_nodes"), col("dsum"),
         coalesce(col("ec"), lit(0L)).as("ec"))
-      .localCheckpoint() // |communities| rows; read by Q sum + top-k
+      .stage("lpaCommunities:comm") // |communities| rows; read by Q sum + top-k
     val q = comm.crossJoin(broadcast(m))
       .agg(sum(expr("CAST(4 AS DECIMAL(38,0)) * m * ec - dsum * dsum"))
         .as("qnum"), count(lit(1)).as("n_communities"))
@@ -594,7 +595,7 @@ object Graph {
     lazy val looped: (DataFrame, DataFrame) = {
       val nodes = sym.select(col("u").as("node")).distinct()
       var lab = nodes.select(col("node"), col("node").as("lab"))
-        .localCheckpoint() // round 0: also the staged `prev` when rounds=1
+        .stage("lpa:r0") // round 0: also the staged `prev` when rounds=1
       var prev = lab
       for (t <- 1 to rounds) {
         prev = lab
@@ -606,7 +607,7 @@ object Graph {
           .orderBy(col("c").desc, col("lab"))
         lab = votes.withColumn("rk", row_number().over(wr))
           .filter(col("rk") === 1).select(col("node"), col("lab"))
-          .localCheckpoint()
+          .stage(s"lpa:r$t")
       }
       (lab, prev)
     }
@@ -697,7 +698,7 @@ object Graph {
       s"need rounds>=1, topK>=1; got $rounds, $topK")
     val e = edgesIn.select(col("c").cast("long").as("c"),
         col("p").cast("long").as("p"))
-      .localCheckpoint() // read 2× per round + both degree counts
+      .stage("hits:edges") // read 2× per round + both degree counts
     val Scale = "CAST(1000000 AS DECIMAL(38,0))"
     var a = e.select(col("p")).distinct()
       .select(col("p"), expr(Scale).as("a"))
@@ -733,7 +734,7 @@ object Graph {
       val hr = e.join(a, Seq("p"))
         .groupBy("c").agg(sum(col("a")).as("h"))
         .observe(obsH, max(col("h")).as("mx"))
-        .localCheckpoint() // read by the rescale + next half-round
+        .stage(s"hits:h${2 * t - 1}") // read by the rescale + next half-round
       // Empty-graph guard: max over zero rows observes null — any
       // positive literal serves, the rescale projects zero rows anyway.
       def mxLit(v: Any): java.math.BigInteger =
@@ -747,7 +748,7 @@ object Graph {
       val ar = e.join(h, Seq("c"))
         .groupBy("p").agg(sum(col("h")).as("a"))
         .observe(obsA, max(col("a")).as("mx"))
-        .localCheckpoint()
+        .stage(s"hits:h${2 * t}")
       val amx = mxLit(obsA.get("mx"))
       a = ar.select(col("p"),
         expr(s"CAST((CAST(a AS DECIMAL(38,0)) * 1000000) div " +
@@ -811,12 +812,12 @@ object Graph {
     val sym = symStaged(edgesIn).select(col("u").cast("long").as("u"),
       col("v").cast("long").as("v"))
     val sources = sym.select(col("u").as("src")).distinct()
-      .orderBy("src").limit(nSources).localCheckpoint()
+      .orderBy("src").limit(nSources).stage("betweenness:sources")
     // ---- forward: batched BFS with exact path counting ----
     var layers = Vector(sources
       .select(col("src"), col("src").as("node"),
         expr("CAST(1 AS DECIMAL(38,0))").as("sigma"))
-      .localCheckpoint())
+      .stage("betweenness:r0"))
     // `visited` stays a lazy UNION over the per-layer checkpointed
     // frames (the Bfs.hopDistancesAdj posture): re-checkpointing the
     // whole visited set every round — the pre-r17 shape — re-materialized
@@ -836,7 +837,7 @@ object Graph {
         .groupBy(col("src"), col("nxt").as("node"))
         .agg(sum("sigma").as("sigma"))
         .join(visited, Seq("src", "node"), "left_anti")
-        .localCheckpoint()
+        .stage(s"betweenness:r$t")
       if (expand.isEmpty) exhausted = true
       else layers = layers :+ expand
     }
@@ -858,7 +859,7 @@ object Graph {
         .select(col("src"), col("node"), col("sigma"),
           coalesce(col("dsum"), expr("CAST(0 AS DECIMAL(38,0))"))
             .as("delta"))
-        .localCheckpoint()
+        .stage(s"betweenness:back-r$t")
       deltas = layer +: deltas
     }
     val all = deltas.reduce(_ unionAll _)
@@ -907,26 +908,26 @@ object Graph {
       edges.select(col("u").as("node"))
         .unionAll(edges.select(col("v").as("node")))
         .agg(min("node").as("seed"))
-        .localCheckpoint() // seed of sweep 1 + source column of its row
+        .stage("sweep:u0") // seed of sweep 1 + source column of its row
     }
     val d1 = StageCache.getOrStage(key("d1")) {
       Bfs.hopDistancesAdj(adj, u0, maxHops).select("node", "dist")
-        .localCheckpoint()
+        .stage("sweep:d1")
     }
     val e1 = StageCache.getOrStage(key("e1")) {
       d1.orderBy(desc("dist"), col("node")).limit(1)
         .select(col("node").as("far1"), col("dist").as("ecc1"))
-        .localCheckpoint() // sweep-2 seed + report rows + the bound
+        .stage("sweep:e1") // sweep-2 seed + report rows + the bound
     }
     val d2 = StageCache.getOrStage(key("d2")) {
       Bfs.hopDistancesAdj(adj, e1.select(col("far1").as("seed")), maxHops)
         .select("node", "dist")
-        .localCheckpoint()
+        .stage("sweep:d2")
     }
     val e2 = StageCache.getOrStage(key("e2")) {
       d2.orderBy(desc("dist"), col("node")).limit(1)
         .select(col("node").as("far2"), col("dist").as("ecc2"))
-        .localCheckpoint()
+        .stage("sweep:e2")
     }
     (edges, adj, u0, d1, e1, d2, e2)
   }
@@ -1033,7 +1034,7 @@ object Graph {
     val d3 = graft.ext.StageCache.getOrStage(ikey("d3")) {
       Bfs.hopDistancesAdj(adj, e2.select(col("far2").as("seed")), maxHops)
         .select(col("node"), col("dist").as("dist3"))
-        .localCheckpoint()
+        .stage("ifub:d3")
     }
     val ecc3 = d3.agg(max("dist3").as("ecc3"))
     // Midpoint of a shortest far1→far2 path: on-path (distances sum to
@@ -1044,19 +1045,19 @@ object Graph {
           abs(col("dist") - col("dist3")) <= 1)
       .orderBy("node").limit(1)
       .select(col("node").as("root"))
-      .localCheckpoint()
+      .stage("ifub:mid")
     val dm = graft.ext.StageCache.getOrStage(ikey("dm")) {
       Bfs.hopDistancesAdj(adj, mid.select(col("root").as("seed")), maxHops)
-        .select("node", "dist").localCheckpoint()
+        .select("node", "dist").stage("ifub:dm")
     }
-    val eccm = dm.agg(max("dist").as("ecc_root")).localCheckpoint()
+    val eccm = dm.agg(max("dist").as("ecc_root")).stage("ifub:eccm")
     // Fringe at level ecc_root − off: size and the ≤cap smallest-id
     // probe batch. The two levels are disjoint (different dist), so
     // BOTH batches ride ONE multi-source BFS, split per level after.
     def fringeLeg(off: Int): (DataFrame, DataFrame) = {
       val fringe = dm.join(broadcast(eccm),
           col("dist") === col("ecc_root") - off)
-        .select("node").localCheckpoint()
+        .select("node").stage(s"ifub:fringe$off")
       val nF = fringe.agg(count(lit(1)).as(s"n_fringe$off"))
       val probes = fringe.orderBy("node").limit(cap)
         .select(col("node").as("seed"), lit(off).as("off"))
@@ -1066,7 +1067,7 @@ object Graph {
     val (nF1, probes1) = fringeLeg(1)
     val probeEcc = Bfs.groupEccentricity(adj, probes0.unionAll(probes1),
         maxHops)
-      .localCheckpoint() // ≤2 rows; read by both per-level maxima
+      .stage("ifub:probeEcc") // ≤2 rows; read by both per-level maxima
     val pmax0 = probeEcc.filter(col("off") === 0)
       .agg(coalesce(max("pecc"), lit(0)).as("pmax0"))
     val pmax1 = probeEcc.filter(col("off") === 1)
@@ -1100,7 +1101,7 @@ object Graph {
           least(col("ub1"),
             greatest(col("lb2"), (col("ecc_root") - 2) * 2)))
           .otherwise(col("ub1")).as("ub2"))
-      .localCheckpoint() // one scalar row; read by all three report legs
+      .stage("ifub:bounds") // one scalar row; read by all three report legs
     def row(step: Int, level: org.apache.spark.sql.Column,
             nFr: org.apache.spark.sql.Column, pm: org.apache.spark.sql.Column,
             lb: org.apache.spark.sql.Column, ub: org.apache.spark.sql.Column,
@@ -1162,10 +1163,10 @@ object Graph {
   def boruvkaForest(edgesIn: DataFrame, rounds: Int = 3,
                     mergeCap: Int = 30): DataFrame = {
     require(rounds >= 1 && rounds <= 6, s"rounds out of [1,6]: $rounds")
-    val edges = edgesIn.select(col("u"), col("v"), col("s")).localCheckpoint()
+    val edges = edgesIn.select(col("u"), col("v"), col("s")).stage("boruvka:edges")
     val nodes = edges.select(col("u").as("node"))
       .unionAll(edges.select(col("v").as("node"))).distinct()
-    var lbl = nodes.select(col("node"), col("node").as("l")).localCheckpoint()
+    var lbl = nodes.select(col("node"), col("node").as("l")).stage("boruvka:r0")
     var cumSel: DataFrame = null
     // Stats assembly: every per-round readout is ONE aggregate over a
     // tagged UNION of the round's relations — not five 1-row
@@ -1181,7 +1182,7 @@ object Graph {
         .join(lbl.select(col("node").as("u"), col("l").as("lu")), Seq("u"))
         .join(lbl.select(col("node").as("v"), col("l").as("lv")), Seq("v"))
         .filter(col("lu") =!= col("lv"))
-        .localCheckpoint() // read by the census AND both selection sides
+        .stage(s"boruvka:el-r$r") // read by the census AND both selection sides
       val sel = el.select(col("lu").as("l"), col("u"), col("v"), col("s"))
         .unionAll(el.select(col("lv").as("l"), col("u"), col("v"), col("s")))
         .groupBy("l")
@@ -1189,7 +1190,7 @@ object Graph {
           struct(-col("s"), col("u"), col("v"))).as("e"))
         .select(col("e.u").as("u"), col("e.v").as("v"), col("e.s").as("s"))
         .distinct()
-        .localCheckpoint() // read by the label graph, stats, cumulative set
+        .stage(s"boruvka:sel-r$r") // read by the label graph, stats, cumulative set
       // Plain union, no cross-round distinct/checkpoint: a selected
       // edge is collapsed INTO its component by this round's exact
       // merge (both endpoints take one label), so later rounds' lu≠lv
@@ -1206,25 +1207,12 @@ object Graph {
         .select(col("lu"), col("lv"))
       val lg = selLab.select(col("lu").as("a"), col("lv").as("b"))
         .unionAll(selLab.select(col("lv").as("a"), col("lu").as("b")))
-        .localCheckpoint() // read by every hash-min hop
-      // Periodic plan-statistics RESET. Spark's localCheckpoint keeps
-      // the origin plan's size estimate on the LogicalRDD, and this
-      // loop's plan references lmap TWICE per hop (neighbor min, left
-      // side) — so the carried sizeInBytes COMPOUNDS as a product
-      // across hops (digits ~double per hop) and past ~20 hops the
-      // planner's canBroadcastBySize would be multiplying
-      // million-digit BigInts single-core on the driver (measured in
-      // r16 with a third lmap reference: one checkpoint stalled
-      // minutes in JoinSelection stats). Every 8th hop the state is
-      // rebuilt from the checkpointed rows, which resets the estimate
-      // — digits stay ≤ ~2⁸·base (instant to multiply), the Row
-      // round-trip touches only |labels| rows and only on reset hops
-      // (typical merges converge well before hop 8 and never pay it),
-      // and AQE picks join strategies from RUNTIME sizes anyway.
-      def statsReset(df: DataFrame): DataFrame =
-        df.sparkSession.createDataFrame(df.rdd, df.schema)
+        .stage(s"boruvka:lg-r$r") // read by every hash-min hop
+      // lmap is read twice per hop (neighbor min, left side); each hop's
+      // staging stamps its measured size, so the plan's size estimate
+      // cannot compound across hops.
       var lmap = lbl.select(col("l")).distinct()
-        .select(col("l"), col("l").as("m")).localCheckpoint()
+        .select(col("l"), col("l").as("m")).stage(s"boruvka:lmap-r$r")
       var changed = 1L
       var hop = 0
       while (changed > 0 && hop < mergeCap) {
@@ -1242,16 +1230,15 @@ object Graph {
           .select(col("l"), col("m"),
             least(col("m"), coalesce(col("nm"), col("m"))).as("nm2"))
           .observe(obs, count(when(col("nm2") < col("m"), 1)).as("changed"))
-          .localCheckpoint() // materializes; the observation fires here
+          .stage(s"boruvka:hop-r${r}h$hop") // materializes; the observation fires here
         changed = obs.get("changed").asInstanceOf[Long]
-        val next = updated.select(col("l"), col("nm2").as("m"))
-        lmap = if (hop % 8 == 7) statsReset(next) else next
+        lmap = updated.select(col("l"), col("nm2").as("m"))
         hop += 1
       }
       require(changed == 0,
         s"boruvka merge did not converge within $mergeCap hops (round $r)")
       lbl = lbl.join(lmap, Seq("l")).select(col("node"), col("m").as("l"))
-        .localCheckpoint()
+        .stage(s"boruvka:r$r")
       // coalesce: an edgeless input aggregates an EMPTY union (one
       // all-NULL row) — a NULL long renders as pandas float64 in the
       // driver compare while the oracle's COUNT(*) stays 0.
@@ -1309,13 +1296,13 @@ object Graph {
     // trajectory to its brute fixpoint.
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     val minSup = k - 2
-    var cur = edgesIn.select(col("u"), col("v")).localCheckpoint()
+    var cur = edgesIn.select(col("u"), col("v")).stage("ktruss:r0")
     def tagged(df: DataFrame, tag: String): DataFrame =
       df.select(lit(tag).as("t"), lit(0L).as("sv"))
     val rows = (1 to rounds).map { r =>
       val adj = cur.select(col("u").as("a"), col("v").as("b"))
         .unionAll(cur.select(col("v").as("a"), col("u").as("b")))
-        .localCheckpoint() // read by degrees, wedges, closing probe
+        .stage(s"ktruss:adj-r$r") // read by degrees, wedges, closing probe
       val deg = adj.groupBy("a").agg(count(lit(1)).as("deg"))
       // pivot each edge on its lower-(degree, id) endpoint
       val piv = cur
@@ -1334,9 +1321,9 @@ object Graph {
         .groupBy("u", "v").agg(count(lit(1)).as("sup"))
       val scored = cur.join(sup, Seq("u", "v"), "left")
         .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("sup"))
-        .localCheckpoint() // read by the stats union AND the survivor cut
+        .stage(s"ktruss:scored-r$r") // read by the stats union AND the survivor cut
       val next = scored.filter(col("sup") >= minSup).select("u", "v")
-        .localCheckpoint()
+        .stage(s"ktruss:r$r")
       val stats = tagged(cur, "before")
         .unionAll(scored.select(lit("supsum").as("t"), col("sup").as("sv")))
         .unionAll(tagged(next, "after"))

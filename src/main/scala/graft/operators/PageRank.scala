@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Stage.StageOps
 
 /** Fixed-iteration damped PageRank over an edge list, in integer rank
   * units — the graph-centrality primitive behind dedup-cluster
@@ -56,7 +57,7 @@ object PageRank {
     // a single u-keyed join + a single v-keyed aggregation, not a
     // second degree join per round. (deg is also reused for the final
     // report and the shared shuffle output feeds both consumers.)
-    val ed = e.join(deg, Seq("u")).localCheckpoint()
+    val ed = e.join(deg, Seq("u")).stage("pageRank:edges")
     var r = deg.select(col("u"), lit(Scale).as("r"))
     for (_ <- 1 to iters) {
       // Sum contributions INTO each node, then left-join back onto the
@@ -97,12 +98,12 @@ object PageRank {
     val e = edges.select(col("u").cast("long").as("u"),
       col("v").cast("long").as("v")) // read 2×; callers pass staged edges
     val deg = e.groupBy("u").agg(count(lit(1)).as("deg"))
-    val ed = e.join(deg, Seq("u")).localCheckpoint()
+    val ed = e.join(deg, Seq("u")).stage("ppr:edges")
     val base = deg.select("u")
       .join(seeds.select(col("node").cast("long").as("u")).distinct()
         .withColumn("s", lit(1L)), Seq("u"), "left_outer")
       .select(col("u"), coalesce(col("s"), lit(0L)).as("is_seed"))
-      .localCheckpoint() // read every round for the teleport term
+      .stage("ppr:base") // read every round for the teleport term
     var r = base.select(col("u"), (col("is_seed") * Scale).as("r"))
     for (i <- 1 to iters) {
       val contrib = ed.join(r, Seq("u"))
@@ -118,7 +119,7 @@ object PageRank {
       // r's plan, so a high-iters caller would otherwise hit
       // plan-growth/analysis blowup even though each round's work is
       // constant. base/ed are already checkpointed once above.
-      if (i % 3 == 0 && i < iters) r = r.localCheckpoint()
+      if (i % 3 == 0 && i < iters) r = r.stage(s"ppr:r$i")
     }
     deg.join(base, Seq("u")).join(r, Seq("u"))
       .select(col("u").as("node"), col("deg").as("degree"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType, LongType,
   NumericType, StructField, StructType}
+import graft.operators.Stage.StageOps
 
 /** Distributed exclusive prefix sum — the two-pass scheme that replaces
   * the single unpartitioned window every running-total/packing/Pareto
@@ -95,7 +96,7 @@ object PrefixSum {
     // cuts lineage (blocks released by the ContextCleaner on GC, unlike
     // persist) — callers hand us a NARROW projection, so the
     // materialized footprint is (key, value)-sized, not corpus-sized.
-    val input = df.localCheckpoint()
+    val input = df.stage("prefixSum:input")
     val indexed = groupCol.fold(input) { gc =>
       val rawGroups = input.select(col(gc).cast("string").as("__g"))
         .distinct().collect().map(_.getString(0))

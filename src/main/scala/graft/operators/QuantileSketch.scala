@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -106,25 +106,29 @@ object QuantileSketch {
       "groupedLogQuantiles")
 
   /** A bucket grid: `assign` appends the bucket-key columns `keys` (the
-    * first orders the spine) to value rows, `lo`/`hi` read a spine row's
-    * bounds, reported as `<unit>_lo`/`<unit>_hi`/`<unit>_count`. */
-  private final case class Grid(unit: String, keys: Seq[String],
+    * first orders the spine) to value rows; `start(i)` is the smallest
+    * value of the bucket whose `index` column is i, so a spine row's
+    * bounds, reported as `<unit>_lo`/`<unit>_hi`/`<unit>_count`, are
+    * start(index) and start(index + 1) − 1. */
+  private final case class Grid(unit: String, keys: Seq[String], index: String,
                                 assign: DataFrame => DataFrame,
-                                lo: Column, hi: Column)
+                                start: String => String)
 
-  /** Equi-width cells over [vmin, vmax] (columns of the value row): cell
-    * id ((v−min)·B) div (range+1) in [0, B); the +1 keeps v = max inside
-    * the last cell without a special case. (v−min)·B must fit 64 bits —
-    * rescale wider-than-2⁵⁴ domains before sketching. */
-  private def widthGrid(buckets: Int): Grid = Grid("cell", Seq("cell"),
+  /** Equi-width cells over [vmin, vmax] (columns of the value row): with
+    * R = vmax − vmin + 1, cell id ((v−min)·B) div R in [0, B); the +1
+    * keeps v = max inside the last cell without a special case. Cell c
+    * holds exactly the offsets v − vmin in [⌈c·R/B⌉, ⌈(c+1)·R/B⌉ − 1],
+    * which are the reported bounds, so every occupied cell has hi ≥ lo
+    * even when R < B. (v−min)·B must fit 64 bits — rescale
+    * wider-than-2⁵⁴ domains before sketching. */
+  private def widthGrid(buckets: Int): Grid = Grid("cell", Seq("cell"), "cell",
     _.withColumn("cell", expr(s"((v - vmin) * $buckets) div (vmax - vmin + 1)")),
-    expr(s"vmin + (cell * (vmax - vmin + 1)) div $buckets"),
-    expr(s"vmin + ((cell + 1) * (vmax - vmin + 1)) div $buckets - 1"))
+    c => s"vmin + ($c * (vmax - vmin + 1) + ${buckets - 1}) div $buckets")
 
   /** Log buckets (see [[logQuantiles]]); a negative value raises
     * `negative`·value. */
   private def logGrid(subBits: Int, negative: String): Grid =
-    Grid("bucket", Seq("bucket", "shift", "q"),
+    Grid("bucket", Seq("bucket", "shift", "q"), "q",
       _.withColumn("v", when(col("v") >= 0L, col("v"))
           .otherwise(raise_error(concat(lit(negative), col("v").cast("string")))))
         .withColumn("e", (length(bin(col("v"))) - 1).cast("long"))
@@ -132,8 +136,7 @@ object QuantileSketch {
         .withColumn("q", expr("v div shiftleft(1L, cast(shift as int))"))
         .withColumn("bucket",
           (col("shift") * (1L << (subBits + 1)) + col("q")).cast("long")),
-      expr("q * shiftleft(1L, cast(shift as int))"),
-      expr("(q + 1) * shiftleft(1L, cast(shift as int)) - 1"))
+      q => s"$q * shiftleft(1L, cast(shift as int))")
 
   private def histogram(df: DataFrame, group: Option[String], valueCol: String,
                         buckets: Int, probsPpm: Seq[Long]): DataFrame = {
@@ -190,10 +193,7 @@ object QuantileSketch {
     }
   }
 
-  /** Step 3, the one readout. `greatest(hi − lo, 0)`: a degenerate
-    * equi-width range (vmax = vmin) gives cells with hi = lo − 1, and the
-    * estimate stays at lo instead of walking backwards; log buckets
-    * always have hi ≥ lo. */
+  /** Step 3, the one readout. */
   private def readout(spine: DataFrame, group: Option[String], grid: Grid,
                       probsPpm: Seq[Long]): DataFrame = {
     val (lo, hi) = (s"${grid.unit}_lo", s"${grid.unit}_hi")
@@ -204,10 +204,9 @@ object QuantileSketch {
       .withColumn("rank", expr("(prob_ppm * (n - 1)) div 1000000"))
       .filter(col("cum_excl") <= col("rank") &&
         col("rank") < col("cum_excl") + col("cnt"))
-      .withColumn(lo, grid.lo)
-      .withColumn(hi, grid.hi)
-      .withColumn("estimate", expr(s"$lo + ((rank - cum_excl) *" +
-        s" greatest($hi - $lo, 0L)) div cnt"))
+      .withColumn(lo, expr(grid.start(grid.index)))
+      .withColumn(hi, expr(s"${grid.start(s"(${grid.index} + 1)")} - 1"))
+      .withColumn("estimate", expr(s"$lo + ((rank - cum_excl) * ($hi - $lo)) div cnt"))
       .select(group.map(col("g").as(_)).toSeq ++ Seq(col("prob_ppm"),
         col(lo), col(hi), col("cnt").as(s"${grid.unit}_count"),
         col("n").cast("long").as("n"), col("estimate")): _*)

@@ -122,13 +122,13 @@ object OracleWarehouse {
          |      FROM cum CROSS JOIN st CROSS JOIN probs),
          |hit AS (SELECT * FROM j WHERE cum_excl <= rk AND rk < cum_excl + cnt),
          |o AS (SELECT prob_ppm,
-         |             vmin + (cell * (vmax - vmin + 1)) // 256 AS cell_lo,
-         |             vmin + ((cell + 1) * (vmax - vmin + 1)) // 256 - 1 AS cell_hi,
+         |             vmin + (cell * (vmax - vmin + 1) + 255) // 256 AS cell_lo,
+         |             vmin + ((cell + 1) * (vmax - vmin + 1) + 255) // 256 - 1 AS cell_hi,
          |             cnt AS cell_count, n, rk, cum_excl
          |      FROM hit)
          |SELECT prob_ppm, cell_lo, cell_hi,
          |       CAST(cell_count AS BIGINT) AS cell_count, n,
-         |       CAST(cell_lo + ((rk - cum_excl) * GREATEST(cell_hi - cell_lo, 0)) // cell_count
+         |       CAST(cell_lo + ((rk - cum_excl) * (cell_hi - cell_lo)) // cell_count
          |            AS BIGINT) AS estimate
          |FROM o ORDER BY prob_ppm""".stripMargin,
     // Grouped histogram sketch: shared global grid, per-group cumulative
@@ -151,13 +151,13 @@ object OracleWarehouse {
          |      FROM cum CROSS JOIN st CROSS JOIN probs),
          |hit AS (SELECT * FROM j WHERE cum_excl <= rk AND rk < cum_excl + cnt),
          |o AS (SELECT g, prob_ppm,
-         |             vmin + (cell * (vmax - vmin + 1)) // 256 AS cell_lo,
-         |             vmin + ((cell + 1) * (vmax - vmin + 1)) // 256 - 1 AS cell_hi,
+         |             vmin + (cell * (vmax - vmin + 1) + 255) // 256 AS cell_lo,
+         |             vmin + ((cell + 1) * (vmax - vmin + 1) + 255) // 256 - 1 AS cell_hi,
          |             cnt AS cell_count, CAST(n AS BIGINT) AS n, rk, cum_excl
          |      FROM hit)
          |SELECT g AS o_orderpriority, prob_ppm, cell_lo, cell_hi,
          |       CAST(cell_count AS BIGINT) AS cell_count, n,
-         |       CAST(cell_lo + ((rk - cum_excl) * GREATEST(cell_hi - cell_lo, 0)) // cell_count
+         |       CAST(cell_lo + ((rk - cum_excl) * (cell_hi - cell_lo)) // cell_count
          |            AS BIGINT) AS estimate
          |FROM o ORDER BY o_orderpriority, prob_ppm""".stripMargin,
     // Quantity-weighted lower median price per supplier: collapsed

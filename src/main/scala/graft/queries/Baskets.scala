@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
+import graft.operators.Stage.StageOps
 
 /** The RAW basket substrate of the market-basket/co-purchase family:
   * the distinct within-order item relation (oid, item). Before r15,
@@ -21,6 +22,6 @@ private[queries] object Baskets {
       .select(col("l_orderkey").as("oid"), col("l_partkey").as("item"))
       .distinct()
     val key = graft.ext.StageCache.keyFor(lazyIt, "basket-items")
-    graft.ext.StageCache.getOrStage(key)(lazyIt.localCheckpoint())
+    graft.ext.StageCache.getOrStage(key)(lazyIt.stage("baskets:items"))
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
+import graft.operators.Stage.StageOps
 
 /** TPC-H-class correlated-subquery shapes, decorrelated by hand into the
   * aggregate-then-join plans Catalyst cannot always derive on its own
@@ -150,7 +151,7 @@ object Correlated {
       .filter(col("l_shipdate") >= lit(from) && col("l_shipdate") < lit(until))
       .groupBy(col("l_suppkey"))
       .agg(sum(qcents("l_extendedprice")).as("rc"))
-      .localCheckpoint() // read twice: once for max, once for the probe
+      .stage("topSupplier:rev") // read twice: once for max, once for the probe
     val mx = rev.agg(max("rc").as("mx"))
     rev.crossJoin(broadcast(mx))
       .filter(col("rc") === col("mx"))
@@ -411,7 +412,7 @@ object Correlated {
     val perPart = Tables.lineitem(spark, dir)
       .groupBy(col("l_partkey"))
       .agg(sum(qcents("l_extendedprice")).as("c"))
-      .localCheckpoint() // read twice: global scalar + per-part probe
+      .stage("importantParts:perPart") // read twice: global scalar + per-part probe
     val total = perPart.agg(sum("c").as("tot"), count(lit(1)).as("n_parts"))
     perPart.crossJoin(broadcast(total))
       .withColumn("share_ppm",

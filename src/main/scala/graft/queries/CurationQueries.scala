@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{Bpe, Multimodal, Retrieval, Sampling, Similarity, TextAnalysis, TextClean, TextDedup, TextOps}
 import graft.model.Tables
+import graft.operators.Stage.StageOps
 
 /** Oracle-checked wrappers — curation tier (splits, sampling, packing,
   * token budgets, mixtures, drift, calibration, data cards) over the
@@ -131,7 +132,7 @@ object CurationQueries {
     val dd = q.join(repIds, Seq("doc_id"))
     val fin = Sampling.temperatureMixFilter(dd, "source", "doc_id",
         targetPct = 40)
-      .localCheckpoint() // funnel count, token mass and packing re-read it
+      .stage("curationPipeline:targetPct") // funnel count, token mass and packing re-read it
     val c0 = docs.groupBy("source").agg(count(lit(1)).as("n_input"))
     val c1 = q.groupBy("source").agg(count(lit(1)).as("n_quality"))
     val c2 = dd.groupBy("source").agg(count(lit(1)).as("n_dedup"))
@@ -223,7 +224,7 @@ object CurationQueries {
         .select(col("doc_id"), col("is_quality")), Seq("doc_id"))
       .join(TextAnalysis.languageId(docs, "doc_id", "text")
         .select(col("doc_id"), col("predicted_lang")), Seq("doc_id"))
-      .localCheckpoint() // read 2x: base rollup + language mix
+      .stage("sourceDataCard:perDoc") // read 2x: base rollup + language mix
     val base = perDoc.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
       sum(col("n_ws_tokens").cast("long")).as("total_tokens"),
@@ -447,7 +448,7 @@ object CurationQueries {
       .withColumn("bin", expr("score_ppm div 50000"))
     val bins = scored.groupBy("bin")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("tokens"))
-      .localCheckpoint() // <= 21 rows; read by cum join (both sides) + total
+      .stage("qualityThresholdSweep:bins") // <= 21 rows; read by cum join (both sides) + total
     val tot = bins.agg(sum("tokens").as("tt"))
     val cum = bins.select(col("bin"))
       .join(bins.select(col("bin").as("b2"), col("n_docs").as("nd2"),
@@ -565,7 +566,7 @@ object CurationQueries {
         round(sqrt(col("s2num").cast("double")) / col("nh") * 1e6, 0)
           .cast("long"))
       .withColumn("wh", col("nh") * col("sigma_e6"))
-      .localCheckpoint() // |sources| rows; read by totals + output
+      .stage("neymanAllocation:st") // |sources| rows; read by totals + output
     val tot = st.agg(sum("nh").as("ntot"), sum("wh").as("wtot"))
     st.crossJoin(broadcast(tot))
       .withColumn("budget", expr(s"ntot * $budgetPpm div 1000000"))
@@ -708,7 +709,7 @@ object CurationQueries {
         .agg(count(lit(1)).as("n_docs"),
           sum("n_bigrams").as("nb"),
           sum(col("n_bigrams") * col("nll_micro")).as("snl"))
-        .localCheckpoint()
+        .stage("mwPerSource:sc")
     }
   }
 
@@ -728,7 +729,7 @@ object CurationQueries {
       .withColumn("factor_micro",
         greatest(lit(1L), lit(1000000L) + col("excess_micro")))
       .withColumn("raw", col("share_ppm") * col("factor_micro"))
-      .localCheckpoint() // read by the normalizer + the final projection
+      .stage("domainReweighting:rep") // read by the normalizer + the final projection
     val rawTot = rep.agg(sum("raw").as("rt"))
     rep.crossJoin(broadcast(rawTot))
       .select(col("source"), col("n_docs").cast("long").as("n_docs"),
@@ -824,7 +825,7 @@ object CurationQueries {
       sum(col("x") * col("x")).as("sxx"),
       sum(col("x") * col("y")).as("sxy"),
       sum(col("y") * col("y")).as("syy"))
-      .localCheckpoint() // read by the global rollup AND the ablation
+      .stage("sourceAblationOls:per") // read by the global rollup AND the ablation
     val g = per.agg(sum("n").as("gn"), sum("sx").as("gsx"),
       sum("sy").as("gsy"), sum("sxx").as("gsxx"), sum("sxy").as("gsxy"),
       sum("syy").as("gsyy"))
@@ -857,7 +858,7 @@ object CurationQueries {
           round(col("num").cast("double") * col("num").cast("double") /
             (col("den").cast("double") * col("sst").cast("double")) * 1e6,
             0).cast("long")).as("r2_ppm"))
-      .localCheckpoint() // read by the report AND the __all__ scalar
+      .stage("sourceAblationOls:met") // read by the report AND the __all__ scalar
     val gBeta = met.filter(col("source") === "__all__")
       .select(col("beta_micro").as("gbeta"))
     met.crossJoin(broadcast(gBeta))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{Bpe, Multimodal, Retrieval, Sampling, Similarity, TextAnalysis, TextClean, TextDedup, TextOps}
 import graft.model.Tables
+import graft.operators.Stage.StageOps
 
 /** Oracle-checked wrappers — deduplication tier (exact, MinHash-LSH,
   * SimHash, n-gram Jaccard, semantic, incremental, span scrub, sweep
@@ -191,7 +192,7 @@ object DedupQueries {
         Similarity.bucketCol(col("embedding"), nPlanes = 4, dim = 64))
     val pairs = Similarity.nearDupPairs(emb, "vec_id", "embedding",
         "bucket", threshold)
-      .localCheckpoint() // read 2×: component edges + centrality rollup
+      .stage("semanticDedup:pairs") // read 2×: component edges + centrality rollup
     val cc = graft.operators.ConnectedComponents.labelPropagation(
       pairs, "id_a", "id_b")
     val cent = pairs
@@ -242,7 +243,7 @@ object DedupQueries {
       .withColumn("bucket",
         Similarity.bucketCol(col("embedding"), nPlanes = 4, dim = 64))
       .withColumn("nrm", Similarity.l2norm(col("embedding")))
-      .localCheckpoint() // read 3x: state leg, batch leg x2
+      .stage("semanticDedupIncremental:emb") // read 3x: state leg, batch leg x2
     val state = emb.filter(col("vec_id") % 2 === 0)
       .select(col("bucket"), col("vec_id").as("other"),
         col("embedding").as("o_emb"), col("nrm").as("o_nrm"))
@@ -263,7 +264,7 @@ object DedupQueries {
     val bb = verified(
       batch.join(batchEarlier, Seq("bucket"))
         .filter(col("other") < col("vid")), 0)
-    val matches = sb.unionAll(bb).localCheckpoint() // counts + best
+    val matches = sb.unionAll(bb).stage("semanticDedupIncremental:matches") // counts + best
     val agg = matches.groupBy("vid")
       .agg(sum(col("from_state")).as("n_dup_state"),
         sum(lit(1L) - col("from_state")).as("n_dup_batch"),
@@ -311,7 +312,7 @@ object DedupQueries {
         size(toks).cast("long").as("n_tokens"),
         graft.functions.TextKernelOps.wordNgramHashFull(
           TextOps.normText(col("text")), n).as("hs"))
-      .localCheckpoint() // read by the span leg + the per-doc rollup
+      .stage("repeatScrub:base") // read by the span leg + the per-doc rollup
     val occ = base.select(col("doc_id"),
       posexplode(col("hs")).as(Seq("pos", "h")))
     val rep = occ.withColumn("rn", row_number().over(
@@ -415,7 +416,7 @@ object DedupQueries {
         Seq("doc_b"))
       .select(least(col("sa"), col("sb")).as("split_lo"),
         greatest(col("sa"), col("sb")).as("split_hi"))
-      .localCheckpoint() // read by the cell counts AND the pair total
+      .stage("splitLeakageAudit:crossed") // read by the cell counts AND the pair total
     val total = crossed.agg(count(lit(1)).as("n_total"))
     val names = Seq("test", "train", "val").toDF("s")
     val spine = names.select(col("s").as("split_lo"))
@@ -473,7 +474,7 @@ object DedupQueries {
     // rollup AND the quota tier
     val winners = canon.groupBy("host", "curl")
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
-      .localCheckpoint()
+      .stage("urlHostDedup:winners")
     val capped = Sampling.perKeyQuotaSalted(winners, "host", "doc_id",
       cap = 6, salts = 8)
     val byHost = canon.groupBy("host").agg(count(lit(1)).as("n_docs"))

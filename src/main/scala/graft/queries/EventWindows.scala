@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.{Parity, Tables}
+import graft.operators.Stage.StageOps
 
 /** Batch equivalents of streaming time-window operators over the `events`
   * table (SURVEY.md §2.9): the reference is daily-batch with no streaming
@@ -168,7 +169,7 @@ object EventWindows {
     val ud = Tables.events(spark, dir)
       .select(col("user_id"), col("ts").cast("date").as("day"))
       .distinct()
-      .localCheckpoint() // feeds DAU, WAU fan-out, and the day bound
+      .stage("rollingActiveUsers:ud") // feeds DAU, WAU fan-out, and the day bound
     val bound = ud.agg(max(col("day")).as("dmax"))
     val dau = ud.groupBy("day").agg(countDistinct("user_id").as("dau"))
     val wau = ud
@@ -387,7 +388,7 @@ object EventWindows {
 
   def touchAttribution(spark: SparkSession, dir: String): DataFrame = {
     val base = touchJourneys(spark, dir)
-      .localCheckpoint() // journey-count rows; both model rollups read it
+      .stage("touchAttribution:base") // journey-count rows; both model rollups read it
     def model(touchCol: String): DataFrame =
       base.groupBy(col(touchCol).as("touch_type"))
         .agg(count(lit(1)).as("n_journeys"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.{Parity, Tables}
+import graft.operators.Stage.StageOps
 
 /** Graph analytics over the co-purchase projection of orders⋈lineitem
   * (PageRank/HITS/PPR, triangles, k-core, LPA communities + conductance,
@@ -35,7 +36,7 @@ object GraphAnalytics {
       val pairs = items.join(items.withColumnRenamed("p", "p2"), Seq("okey"))
         .filter(col("p") < col("p2"))
       graft.operators.Graph.undirectedEdges(pairs, "p", "p2")
-        .localCheckpoint()
+        .stage("partPairEdges:pairs")
     }
   }
 
@@ -62,7 +63,7 @@ object GraphAnalytics {
         .groupBy("item", "item2").agg(count(lit(1)).as("s"))
         .filter(col("s") >= minPairSupport)
         .select(col("item").as("u"), col("item2").as("v"), col("s"))
-        .localCheckpoint()
+        .stage("supportWeightedEdges:it")
     }
   }
 
@@ -101,7 +102,7 @@ object GraphAnalytics {
       .select((col("s") * 2).as("sn"), (col("c") * 2 + 1).as("cn"))
     val canon = graft.operators.Graph.undirectedEdges(lazyPairs, "sn", "cn")
     val key = graft.ext.StageCache.keyFor(canon, "suppcust-edges")
-    graft.ext.StageCache.getOrStage(key)(canon.localCheckpoint())
+    graft.ext.StageCache.getOrStage(key)(canon.stage("suppCustEdges:edges"))
   }
 
   def copurchaseRank(spark: SparkSession, dir: String): DataFrame = {
@@ -349,10 +350,10 @@ object GraphAnalytics {
       // Spark 4.1's localCheckpoint rewrites to a LogicalRDD with
       // UnknownPartitioning (verified in the physical plan), so the
       // extra exchange bought nothing.)
-      .localCheckpoint() // read by train pairs + test baskets
+      .stage("recommenderHoldout:it") // read by train pairs + test baskets
     val train = it.filter(col("is_test") === 0).select("oid", "item")
     val test = it.filter(col("is_test") === 1).select("oid", "item")
-      .localCheckpoint() // read by eval base + membership probe
+      .stage("recommenderHoldout:test") // read by eval base + membership probe
     val pairCnt = train
       .join(train.withColumnRenamed("item", "other"), Seq("oid"))
       .filter(col("item") =!= col("other"))
@@ -363,7 +364,7 @@ object GraphAnalytics {
     // with per-task state bounded at k·salts. The q63/q81 posture.
     val recs = graft.operators.Skew.saltedTopKPerGroup(pairCnt,
         Seq("item"), Seq(col("cnt").desc, col("other")), k = 3, salts = 8)
-      .localCheckpoint() // read by eval + seen-item set
+      .stage("recommenderHoldout:recs") // read by eval + seen-item set
     val seen = recs.select("item").distinct()
     val evalBase = test.join(seen, Seq("item"), "left_semi")
     val nEval = evalBase.agg(count(lit(1)).as("n_evals"))
@@ -426,7 +427,7 @@ object GraphAnalytics {
           col("l_quantity").cast("long").as("q")), Seq("oid"))
       .groupBy("u", "i").agg(sum("q").as("r"))
     val key = graft.ext.StageCache.keyFor(lazyR, "als-ratings")
-    graft.ext.StageCache.getOrStage(key)(lazyR.localCheckpoint())
+    graft.ext.StageCache.getOrStage(key)(lazyR.stage("quantityRatings:ratings"))
   }
 
   def alsTrainingReport(spark: SparkSession, dir: String): DataFrame = {

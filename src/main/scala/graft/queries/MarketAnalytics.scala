@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.{Catalog, Parity, Tables}
+import graft.operators.Stage.StageOps
 
 /** The market/time-series half of the reference analytics surface
   * (SURVEY.md §2.4–§2.7): the ClickHouse SQL query API of
@@ -155,7 +156,7 @@ object MarketAnalytics {
     // relation once (narrow: key, date, value), the same lineage-cut
     // idiom as PrefixSum/copurchaseRank. Cold q07 at sf0.1: 9.0s → the
     // fact agg once instead of thrice.
-    val daily = dailyIn.localCheckpoint()
+    val daily = dailyIn.stage("correlationPanel:daily")
     val active = daily.groupBy(col(keyCol))
       .agg(sum(abs(round(col(valCol) * 100, 0)).cast("long")).as("__activity"))
       .orderBy(col("__activity").desc, col(keyCol))

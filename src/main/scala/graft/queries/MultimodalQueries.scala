@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{Bpe, Multimodal, Retrieval, Sampling, Similarity, TextAnalysis, TextClean, TextDedup, TextOps}
 import graft.model.Tables
+import graft.operators.Stage.StageOps
 
 /** Oracle-checked wrappers — multimodal tier (typed binary decode
   * plumbing: GIF/WAV stats, frame sampling, multimodal retrieval).
@@ -183,7 +184,7 @@ object MultimodalQueries {
     val hashes = Multimodal.gifAHash(
         Multimodal.attachPayload(Tables.documents(spark, dir), "doc_id",
           "text"))
-      .localCheckpoint() // read by both band tables + the report spine
+      .stage("ahashNearDup:hashes") // read by both band tables + the report spine
     val bands = hashes
       .select(col("doc_id"), col("ahash"), lit(0).as("band"),
         (col("ahash") % 256).as("bv"))
@@ -224,7 +225,7 @@ object MultimodalQueries {
     val fps = Multimodal.gifTemporalFingerprint(
         Multimodal.attachPayload(Tables.documents(spark, dir), "doc_id",
           "text"))
-      .localCheckpoint() // read by all four band tables + the spine
+      .stage("videoNearDup:fps") // read by all four band tables + the spine
     val bands = (0 until 4).map { b =>
       fps.select(col("doc_id"), col("vfp"), lit(b).as("band"),
         expr(s"(vfp div ${1L << (8 * b)}) % 256").as("bv"))
@@ -265,7 +266,7 @@ object MultimodalQueries {
     val fps = Multimodal.wavEnergyFingerprint(
         Multimodal.attachPayload(Tables.documents(spark, dir), "doc_id",
           "text"))
-      .localCheckpoint() // read by both band tables + the report spine
+      .stage("audioNearDup:fps") // read by both band tables + the report spine
     val bands = fps
       .select(col("doc_id"), col("fp"), lit(0).as("band"),
         (col("fp") % 256).as("bv"))

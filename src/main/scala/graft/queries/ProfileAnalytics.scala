@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.{Parity, Tables}
+import graft.operators.Stage.StageOps
 
 /** Data-profiling, constraint-audit and privacy queries (k-anonymity,
   * l-diversity, t-closeness, table profiles exact/approx/sampled).
@@ -191,10 +192,10 @@ object ProfileAnalytics {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
         col("l_suppkey"))
-      .localCheckpoint()
+      .stage("constraintAudit:li")
     val ord = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"))
-      .localCheckpoint()
+      .stage("constraintAudit:ord")
     val liTotal = li.agg(count(lit(1)).as("n_rows"))
     val ordTotal = ord.agg(count(lit(1)).as("n_rows"))
     val legs = Seq(
@@ -266,7 +267,7 @@ object ProfileAnalytics {
           .otherwise("high").as("band"))
       .groupBy("c_mktsegment", "c_nationkey", "band")
       .agg(count(lit(1)).as("ns"))
-      .localCheckpoint() // |QI|·3 rows; read by totals + entropy legs
+      .stage("lDiversity:cells") // |QI|·3 rows; read by totals + entropy legs
     val totals = cells.groupBy("c_mktsegment", "c_nationkey")
       .agg(sum("ns").as("class_size"))
     cells.join(totals, Seq("c_mktsegment", "c_nationkey"))
@@ -316,7 +317,7 @@ object ProfileAnalytics {
           .otherwise(3).as("band"))
     val cells = banded.groupBy("c_mktsegment", "c_nationkey", "band")
       .agg(count(lit(1)).as("ns"))
-      .localCheckpoint() // |QI|·3 rows; spine + totals + global legs
+      .stage("tCloseness:cells") // |QI|·3 rows; spine + totals + global legs
     val totals = cells.groupBy("c_mktsegment", "c_nationkey")
       .agg(sum("ns").as("class_size"))
     // Global leg built ON the zero-filled band spine (not only the bands

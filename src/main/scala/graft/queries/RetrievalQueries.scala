@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{Bpe, Multimodal, Retrieval, Sampling, Similarity, TextAnalysis, TextClean, TextDedup, TextOps}
 import graft.model.Tables
+import graft.operators.Stage.StageOps
 
 /** Oracle-checked wrappers — lexical/hybrid retrieval tier (BM25,
   * Dirichlet QL, PRF, RRF fusion, rerank, chunk retrieval, ranker
@@ -104,7 +105,7 @@ object RetrievalQueries {
     val docs = Tables.documents(spark, dir)
     graft.ext.StageCache.getOrStage(
         graft.ext.StageCache.keyFor(docs, "hybridrrf", k)) {
-      hybridFusedPlan(spark, dir, k).localCheckpoint()
+      hybridFusedPlan(spark, dir, k).stage("hybridFused:docs")
     }
   }
 
@@ -209,7 +210,7 @@ object RetrievalQueries {
         "vec_id", "embedding", kCand)
       .select(col("query_id"), col("neighbor_id").as("cid"),
         round(col("score") * 10000, 0).cast("long").as("rel_e4"))
-      .localCheckpoint() // read every greedy round
+      .stage("mmr:cands") // read every greedy round
     val ce = cands.join(
       emb.select(col("vec_id").as("cid"), col("embedding").as("e"),
         Similarity.l2norm(col("embedding")).as("n")), Seq("cid"))
@@ -221,7 +222,7 @@ object RetrievalQueries {
       .select(col("query_id"), col("a"), col("b"),
         round(Similarity.dot(col("ea"), col("eb")) /
           (col("na") * col("nb")) * 10000, 0).cast("long").as("sim_e4"))
-      .localCheckpoint() // read every greedy round
+      .stage("mmr:sims") // read every greedy round
     var sel = cands.groupBy("query_id")
       .agg(max_by(col("cid"), struct(col("rel_e4"), -col("cid"))).as("cid"))
       .withColumn("mmr_rank", lit(1))
@@ -241,7 +242,7 @@ object RetrievalQueries {
         .groupBy("query_id")
         .agg(max_by(col("cid"), struct(col("obj_e4"), -col("cid"))).as("cid"))
         .withColumn("mmr_rank", lit(t))
-      sel = sel.unionByName(pick).localCheckpoint()
+      sel = sel.unionByName(pick).stage(s"mmr:r$t")
     }
     sel.join(cands, Seq("query_id", "cid"))
       .select(col("query_id"), col("mmr_rank").cast("int").as("mmr_rank"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{Bpe, Multimodal, Retrieval, Sampling, Similarity, TextAnalysis, TextClean, TextDedup, TextOps}
 import graft.model.Tables
+import graft.operators.Stage.StageOps
 
 /** Oracle-checked wrappers — similarity tier (ANN brute/LSH/IVF/PQ,
   * k-means, silhouette, spectral probes, k-NN graph, drift) over the
@@ -206,7 +207,7 @@ object SimilarityQueries {
         round(col("cos") * 10000, 0).cast("long").as("w"))
     val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"), col("w"))
       .unionAll(pairs.select(col("id_b").as("u"), col("id_a").as("v"), col("w")))
-      .localCheckpoint() // read every round
+      .stage("labelSpreading:edges") // read every round
     val all = emb.select(col("vec_id"), col("label"))
     // Each round checkpoints only its INCREMENT; `labeled` stays a lazy
     // union over the per-round checkpointed layers (the
@@ -217,7 +218,7 @@ object SimilarityQueries {
     // FASTER on 8 cores than 32 at bench scale (r16 verdict §3).
     var layers = Vector(all.filter(col("vec_id") % 5 === 0)
       .select(col("vec_id"), col("label"), lit(0).as("assigned_round"))
-      .localCheckpoint())
+      .stage("labelSpreading:r0"))
     def labeled: DataFrame = layers.reduce(_ unionAll _)
     for (r <- 1 to rounds) {
       val newly = edges
@@ -228,7 +229,7 @@ object SimilarityQueries {
         .agg(min_by(col("label"), struct(-col("s"), col("label"))).as("label"))
         .select(col("u").as("vec_id"), col("label"),
           lit(r).as("assigned_round"))
-        .localCheckpoint()
+        .stage(s"labelSpreading:r$r")
       layers = layers :+ newly
     }
     all.select("vec_id")
@@ -268,7 +269,7 @@ object SimilarityQueries {
     val brute = annBruteTopK(spark, dir)
     val truth = brute.filter(col("rank") === 1)
       .select(col("query_id"), col("neighbor_id").as("true_nn"))
-      .localCheckpoint() // read by the join + the query count
+      .stage("retrievalEval:truth") // read by the join + the query count
     val systems: Seq[(String, DataFrame)] = Seq(
       "brute"  -> brute,
       "lsh"    -> annLshTopK(spark, dir),
@@ -333,7 +334,7 @@ object SimilarityQueries {
     * metric, not a fifth rebuild of the PQ codebook. */
   def ndcgReport(spark: SparkSession, dir: String): DataFrame = {
     val brute = annBruteTopK(spark, dir)
-      .localCheckpoint() // read as the rel source + the brute system run
+      .stage("ndcgReport:brute") // read as the rel source + the brute system run
     val rel = brute.filter(col("rank") <= 3)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         (lit(4) - col("rank")).cast("long").as("gain"))
@@ -372,7 +373,7 @@ object SimilarityQueries {
     val queries = emb.filter(col("vec_id") < 10)
     val exact = Similarity.bruteTopK(emb, queries, "vec_id", "embedding", k)
       .select("query_id", "neighbor_id")
-      .localCheckpoint() // read per probe setting
+      .stage("ivfProbeSweep:exact") // read per probe setting
     val nQ = exact.select("query_id").distinct()
       .agg(count(lit(1)).as("n_queries"))
     probes.sorted.map { p =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{Bpe, Multimodal, Retrieval, Sampling, Similarity, TextAnalysis, TextClean, TextDedup, TextOps, UnigramLm}
 import graft.model.Tables
+import graft.operators.Stage.StageOps
 
 /** Oracle-checked wrappers — text-analysis tier (token stats, quality,
   * language id, LM scores, BPE tokenizer family, vocabulary/corpus
@@ -154,7 +155,7 @@ object TextQueries {
       graft.operators.GroupedPrefix.rankWithin(j, "source", "nll_micro",
           descending = false, ties = Seq(col("doc_id")), rankCol = "pos",
           nCol = Some("nsrc"))
-        .localCheckpoint()
+        .stage("nllRankBySource:nCol")
     }
   }
 
@@ -203,7 +204,7 @@ object TextQueries {
       sum(col("r1") * (lit(1L) - col("r2"))).as("n10"),
       sum((lit(1L) - col("r1")) * col("r2")).as("n01"),
       sum((lit(1L) - col("r1")) * (lit(1L) - col("r2"))).as("n00"))
-      .localCheckpoint() // read by the report AND the __all__ pool
+      .stage("filterAgreement:per") // read by the report AND the __all__ pool
     val pooled = per.groupBy().agg(sum("n").as("n"), sum("n11").as("n11"),
       sum("n10").as("n10"), sum("n01").as("n01"), sum("n00").as("n00"))
       .select(lit("__all__").as("source"), col("n"), col("n11"),

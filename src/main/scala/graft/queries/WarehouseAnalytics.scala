@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.{Parity, Tables}
+import graft.operators.Stage.StageOps
 
 /** Warehouse / TPC-H-shaped analytics over orders⋈lineitem⋈part⋈
   * supplier: revenue rollups, distribution reports, robust statistics,
@@ -359,7 +360,7 @@ object WarehouseAnalytics {
     val rev = Tables.lineitem(spark, dir)
       .groupBy("l_suppkey")
       .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long")).as("c"))
-      .localCheckpoint()
+      .stage("paretoAbc:rev")
     val tot = rev.agg(sum(col("c")).as("total"))
     // Inclusive running revenue via the distributed two-pass prefix sum
     // (PrefixSum.exclusive + the row's own cents) — no single task ever
@@ -467,7 +468,7 @@ object WarehouseAnalytics {
     val frequent = items.groupBy("item").agg(count(lit(1)).as("s1"))
       .filter(col("s1") >= minItemSupport)
     val pruned = items.join(frequent.select("item"), Seq("item"), "left_semi")
-      .localCheckpoint()
+      .stage("frequentTriples:pruned")
     pruned.select(col("oid"), col("item").as("i1"))
       .join(pruned.select(col("oid"), col("item").as("i2")), Seq("oid"))
       .filter(col("i1") < col("i2"))
@@ -606,7 +607,7 @@ object WarehouseAnalytics {
       .groupBy("okey", "skey")
       .agg(max(when(datediff(col("l_shipdate").cast("date"),
         col("o_orderdate").cast("date")) > 60, 1).otherwise(0)).as("late"))
-      .localCheckpoint() // three correlation branches read it
+      .stage("soleBlameSuppliers:pairs") // three correlation branches read it
     val late = pairs.filter(col("late") === 1)
     val others = pairs.select(col("okey"), col("skey").as("other_skey"),
       col("late").as("other_late"))
@@ -1208,7 +1209,7 @@ object WarehouseAnalytics {
     val pruned = firsts.join(freq, Seq("l_partkey"))
       .select(col("o_custkey"), col("l_partkey"), col("first_d"),
         col("n_cust_part"))
-      .localCheckpoint() // both sides of the pair join read it
+      .stage("sequentialRules:pruned") // both sides of the pair join read it
     val a = pruned.select(col("o_custkey"), col("l_partkey").as("part_a"),
       col("first_d").as("d_a"), col("n_cust_part").as("n_a"))
     val b = pruned.select(col("o_custkey"), col("l_partkey").as("part_b"),

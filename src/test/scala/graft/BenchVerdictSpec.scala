@@ -90,15 +90,19 @@ class BenchVerdictSpec extends AnyFunSuite {
     assert(v.retried.isEmpty)
   }
 
-  test("a floor-only flag on a query with history is also judged against history") {
-    // q2 clears its floor but not its history baseline; the retried
-    // query is listed as a refuted history flag, and so not as a
-    // refuted floor flag.
-    val v = adjudicate(minima("q2" -> 2.0), Map("q2" -> 1.9), history,
+  test("a floor-only flag on a query with history is judged only against its floor") {
+    // q2 clears its floor but not its history baseline, so only the
+    // floor side judges it: a surviving flag is a floor violation, a
+    // refuted one lands in floor_refuted, and neither is a suspect.
+    val kept = adjudicate(minima("q2" -> 2.0), Map("q2" -> 1.9), history,
       Map("q2" -> 0.6), 0)
-    assert(v.floorViolations == Seq("q2" -> 1.9 / 0.6))
-    assert(v.suspectRegressions == Seq("q2" -> 1.9 / 1.1))
-    assert(v.regressions.isEmpty && v.floorRefuted.isEmpty)
+    assert(kept.floorViolations == Seq("q2" -> 1.9 / 0.6))
+    assert(kept.suspectRegressions.isEmpty && kept.regressions.isEmpty &&
+      kept.floorRefuted.isEmpty)
+    val refuted = adjudicate(minima("q2" -> 2.0), Map("q2" -> 1.0), history,
+      Map("q2" -> 0.6), 0)
+    assert(refuted.floorRefuted == Seq("q2" -> 1.0 / 0.6))
+    assert(refuted.suspectRegressions.isEmpty && refuted.floorViolations.isEmpty)
   }
 
   // 60 shared queries at 1.0 s in two history runs; the current run is

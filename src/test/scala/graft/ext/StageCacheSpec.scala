@@ -1,16 +1,19 @@
 package graft.ext
 
 import graft.{Bench, SparkSpec}
+import graft.operators.Stage
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The staging memo's contract: one build per live key, keys scoped by
   * plan, parameters and session, invalidation, non-staged builds left
-  * uncached, and the builds + hits counter Bench reads to tell which
-  * queries touched the cache.
+  * uncached, the builds + hits counter Bench reads to tell which
+  * queries touched the cache, and the bytes of evicted entries whose
+  * blocks are still stored.
   */
 class StageCacheSpec extends SparkSpec {
   private var n = 0
   private def freshKey(): String = { n += 1; s"StageCacheSpec:$n:${System.nanoTime()}" }
-  private def staged(rows: Int) = spark.range(rows).toDF("x").localCheckpoint()
+  private def staged(rows: Int) = Stage.local(spark.range(rows).toDF("x"), "spec:staged")
   private def buildsHits: (Long, Long) = {
     val s = StageCache.stats
     (s._2, s._3)
@@ -75,5 +78,23 @@ class StageCacheSpec extends SparkSpec {
     StageCache.keyFor(spark.range(2).toDF("x"), "no-call")
     StageCache.pinnedRddIds
     assert(Bench.stageCalls == c0 + 3)
+  }
+
+  test("evicted entries count as forgotten bytes until their blocks are dropped") {
+    StageCache.invalidateAll()
+    assert(StageCache.forgottenBytes == 0)
+    val first = StageCache.getOrStage(freshKey())(staged(1))
+    val evictions0 = StageCache.stats._4
+    (1 to StageCache.MaxEntries).foreach(_ => StageCache.getOrStage(freshKey())(staged(1)))
+    assert(StageCache.stats._4 == evictions0 + 1)
+    assert(StageCache.forgottenBytes > 0)
+    assert(StageCache.peakForgotten >= StageCache.forgottenBytes)
+    assert(first.count() == 1) // the evicted relation still serves its holder
+    first.queryExecution.logical match {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = true)
+      case other => fail(s"not staged: $other")
+    }
+    assert(StageCache.forgottenBytes == 0)
+    StageCache.invalidateAll()
   }
 }

@@ -24,9 +24,32 @@ class QuantileSketchSpec extends SparkSpec {
     probes.foreach { p =>
       val exact = sorted(((p * (sorted.size - 1)) / 1000000L).toInt)
       val (est, lo, hi) = got(p)
-      assert(lo <= est && est <= hi.max(lo), s"estimate outside its cell at $p")
+      assert(lo <= est && est <= hi, s"estimate outside its cell at $p")
       assert(math.abs(est - exact) <= width,
         s"p=$p est=$est exact=$exact width=$width")
+    }
+  }
+
+  test("every value lies inside its own cell's bounds") {
+    // Ranges narrower than, equal to and not a multiple of the bucket
+    // count; one value per offset, probed at every rank, so each row
+    // reports the owning cell of exactly one known value.
+    for ((range, buckets, vmin) <- Seq((1, 4, 42L), (3, 8, 5L), (8, 8, 0L),
+                                      (10, 4, -20L), (7, 3, 100L), (100, 7, 1L))) {
+      val n = range.toLong
+      val probes = (0L until n).map(i =>
+        if (n == 1) 0L else (i * 1000000L + n - 2) / (n - 1))
+      val rows = QuantileSketch.histogramQuantiles(
+          (0L until n).map(vmin + _).toDF("v"), "v", buckets, probes)
+        .collect()
+      assert(rows.length == n)
+      rows.foreach { r =>
+        val v = vmin + r.getAs[Long]("prob_ppm") * (n - 1) / 1000000L
+        val (lo, hi) = (r.getAs[Long]("cell_lo"), r.getAs[Long]("cell_hi"))
+        assert(lo <= v && v <= hi, s"R=$range B=$buckets: $v outside [$lo, $hi]")
+        val est = r.getAs[Long]("estimate")
+        assert(lo <= est && est <= hi, s"R=$range B=$buckets: estimate $est")
+      }
     }
   }
 
@@ -193,10 +216,10 @@ class QuantileSketchSpec extends SparkSpec {
         Row("b", 500000L, 7L, 7L, 1L, 1L, 7L),
         Row("b", 1000000L, 7L, 7L, 1L, 1L, 7L))),
       ("flat", "histogram") -> (8, 8,
-        probes.map(p => Row(p, 42L, 41L, 3L, 3L, 42L))),
+        probes.map(p => Row(p, 42L, 42L, 3L, 3L, 42L))),
       ("flat", "groupedHistogram") -> (0, 8,
         Seq("a" -> 2L, "b" -> 1L).flatMap { case (g, n) =>
-          probes.map(p => Row(g, p, 42L, 41L, n, n, 42L)) }),
+          probes.map(p => Row(g, p, 42L, 42L, n, n, 42L)) }),
       ("flat", "log") -> (6, 8,
         probes.map(p => Row(p, 42L, 42L, 3L, 3L, 42L))),
       ("flat", "groupedLog") -> (0, 6,

@@ -1,6 +1,8 @@
 package org.apache.spark
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -9,17 +11,25 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * no earlier job leaks in and no job of the block is missed. */
 object JobCounter {
   def jobsIn[T](sc: SparkContext)(body: => T): (T, Int) = {
+    val (r, labels) = labelsIn(sc)(body)
+    (r, labels.size)
+  }
+
+  /** The `spark.job.description` of every job the block starts, in start
+    * order; null for a job started without one. */
+  def labelsIn[T](sc: SparkContext)(body: => T): (T, Seq[String]) = {
     sc.listenerBus.waitUntilEmpty()
-    val n = new AtomicInteger
+    val labels = new ConcurrentLinkedQueue[Option[String]]
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
+        labels.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty(SparkContext.SPARK_JOB_DESCRIPTION))))
     }
     sc.addSparkListener(l)
     try {
       val r = body
       sc.listenerBus.waitUntilEmpty()
-      (r, n.get)
+      (r, labels.asScala.toSeq.map(_.orNull))
     } finally sc.removeSparkListener(l)
   }
 }
