@@ -24,8 +24,8 @@ import graft.operators.Stage.StageOps
   * loop is driver-side but bounded by `maxHops` (a query parameter, not
   * data-dependent), with per-level `localCheckpoint` truncating the
   * lineage exactly like the components loop; the empty-frontier early
-  * exit reads `isEmpty` on the already-materialized checkpoint, so it
-  * schedules no extra scan of anything corpus-sized.
+  * exit reads each level's row count, observed on the level's own
+  * staging job ([[Stage.observed]]).
   */
 object Bfs {
 
@@ -50,22 +50,22 @@ object Bfs {
   def hopDistancesAdj(adj: DataFrame, seeds: DataFrame,
                       maxHops: Int): DataFrame = {
     require(maxHops >= 0 && maxHops <= 16, s"maxHops out of [0,16]: $maxHops")
-    val level0 = seeds.select(col("seed"), col("seed").as("node"),
-      lit(0).as("dist")).stage("bfs:r0")
+    val (level0, n0) = Stage.observed(seeds.select(col("seed"),
+      col("seed").as("node"), lit(0).as("dist")), "bfs:r0", count(lit(1)))
     val levels = scala.collection.mutable.ArrayBuffer(level0)
-    var frontier = level0
+    var reached = n0.getLong(0)
     var h = 0
-    while (h < maxHops && !frontier.isEmpty) {
+    while (h < maxHops && reached > 0) {
       h += 1
       val visited = levels.reduce(_ unionAll _)
-      val next = frontier.join(adj, col("node") === col("src"))
+      val (next, n) = Stage.observed(levels.last.join(adj, col("node") === col("src"))
         .select(col("seed"), col("dst").as("node"))
         .distinct()
         .join(visited.select("seed", "node"), Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(h).as("dist"))
-        .stage(s"bfs:r$h")
+        .select(col("seed"), col("node"), lit(h).as("dist")),
+        s"bfs:r$h", count(lit(1)))
       levels += next
-      frontier = next
+      reached = n.getLong(0)
     }
     levels.reduce(_ unionAll _)
       .select(col("seed"), col("node"), col("dist").cast("int").as("dist"))
@@ -95,41 +95,43 @@ object Bfs {
     // window is over the caller's limit-capped probe batches, bounded).
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("off"), col("seed"))
-    val tagged = seeds
+    val (tagged, nSeeds) = Stage.observed(seeds
       .withColumn("bit_idx", row_number().over(w) - 1)
       .withColumn("bit", expr("shiftleft(CAST(1 AS BIGINT), bit_idx)"))
-      .drop("bit_idx")
-      .stage("groupEcc:tagged")
-    require(tagged.count() <= 64, "groupEccentricity holds at most 64 seeds")
+      .drop("bit_idx"), "groupEcc:tagged", count(lit(1)))
+    require(nSeeds.getLong(0) <= 64, "groupEccentricity holds at most 64 seeds")
     val groupMasks = tagged.groupBy("off")
       .agg(expr("bit_or(bit)").as("gmask")).stage("groupEcc:groupMasks")
-    var state = tagged.select(col("seed").as("node"), col("bit").as("mask"))
-      .groupBy("node").agg(expr("bit_or(mask)").as("mask"))
-      .stage("groupEcc:r0")
+    val (state0, n0) = Stage.observed(
+      tagged.select(col("seed").as("node"), col("bit").as("mask"))
+        .groupBy("node").agg(expr("bit_or(mask)").as("mask")),
+      "groupEcc:r0", count(lit(1)))
+    var state = state0
     var frontier = state
+    var reached = n0.getLong(0)
     // (dist, gained-bit union) — 1 lazy row per level over the level's
     // already-checkpointed gains (nothing re-materializes).
     val gains = scala.collection.mutable.ArrayBuffer(
       state.agg(expr("bit_or(mask)").as("gained"))
         .select(lit(0).as("dist"), col("gained")))
     var h = 0
-    while (h < maxHops && !frontier.isEmpty) {
+    while (h < maxHops && reached > 0) {
       h += 1
       val pushed = frontier.join(adj, col("node") === col("src"))
         .groupBy(col("dst").as("node")).agg(expr("bit_or(mask)").as("pmask"))
-      val gained = pushed
+      val (gained, n) = Stage.observed(pushed
         .join(state.withColumnRenamed("mask", "seen"), Seq("node"), "left")
         .select(col("node"),
           col("pmask").bitwiseAND(bitwise_not(coalesce(col("seen"), lit(0L))))
             .as("mask"))
-        .filter(col("mask") =!= 0L)
-        .stage(s"groupEcc:gained-r$h")
+        .filter(col("mask") =!= 0L), s"groupEcc:gained-r$h", count(lit(1)))
       state = state.unionAll(gained)
         .groupBy("node").agg(expr("bit_or(mask)").as("mask"))
         .stage(s"groupEcc:r$h")
       gains += gained.agg(coalesce(expr("bit_or(mask)"), lit(0L)).as("gained"))
         .select(lit(h).as("dist"), col("gained"))
       frontier = gained
+      reached = n.getLong(0)
     }
     groupMasks.join(gains.reduce(_ unionAll _),
         col("gmask").bitwiseAND(col("gained")) =!= 0L, "left")

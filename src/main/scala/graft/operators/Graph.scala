@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Stage.StageOps
@@ -326,10 +326,10 @@ object Graph {
     // UNCHANGED Σc across a 3-round checkpoint block certifies that no
     // node changed (all deltas ≤ 0 summing to 0 ⇒ every delta 0) — every
     // remaining round is provably a no-op and c/prev/converged are
-    // exactly what running them would produce. The check is one 1-row
-    // scan of the just-checkpointed |V|-row relation per block —
-    // metadata-scale, outside the per-round join work it saves.
-    var lastSum: Option[java.math.BigDecimal] = None
+    // exactly what running them would produce. Σc is observed on the
+    // block's own staging job; every block observes it, since the t=3
+    // sum is the baseline that lets t=6 exit.
+    var lastSum = -1L
     var done = false
     for (t <- 1 to rounds if !done) {
       prev = c
@@ -340,16 +340,12 @@ object Graph {
       c = nbr.withColumn("rk", row_number().over(wr).cast("long"))
         .groupBy("node").agg(max(least(col("rk"), col("nc"))).as("c"))
       if (t % 3 == 0 || t == rounds) {
-        c = c.stage(s"corenessHIndex:r$t")
-        // (r17 note: deferring this probe to later blocks — the ADVICE
-        // suggestion — was tried and rejected on paper: the t=3 probe
-        // stores the baseline that lets t=6 exit, so skipping it can
-        // cost three full extra rounds to save one 1-row collect.)
-        val s = Option(c.agg(sum(col("c").cast("decimal(38,0)")).as("s"))
-          .collect()(0).getDecimal(0))
-          .getOrElse(java.math.BigDecimal.ZERO) // empty graph: Σ = 0
-        if (lastSum.exists(_.compareTo(s) == 0)) done = true
-        lastSum = Some(s)
+        // Σc ≤ Σ deg = 2|E|: exact in LONG; an empty graph sums to 0.
+        val (staged, obs) = Stage.observed(c, s"corenessHIndex:r$t",
+          coalesce(sum(col("c")), lit(0L)))
+        c = staged
+        done = obs.getLong(0) == lastSum
+        lastSum = obs.getLong(0)
       }
     }
     // One scalar certifies the fixpoint for the whole output (broadcast
@@ -723,36 +719,28 @@ object Graph {
       // pre-checkpoint plan — so each eager checkpoint re-evaluated
       // the other side's whole join+agg chain; 2 rounds of that
       // re-computation per round was most of the q264 floor.)
-      // The ∞-norm scalar rides each half-round's OWN materialization
-      // job as an Observation (the Borůvka merge-loop idiom) instead of
-      // a separate 1-row aggregate + broadcast per half-round — same
-      // integers (max over the identical checkpointed relation), two
-      // fewer scheduled jobs per round. The literal is rendered in
-      // plain digits (round 1's sums are DECIMAL(38,0) scale 0, later
-      // rounds LONG), so the `div` arithmetic is unchanged.
-      val obsH = org.apache.spark.sql.Observation(s"hits_h_$t")
-      val hr = e.join(a, Seq("p"))
-        .groupBy("c").agg(sum(col("a")).as("h"))
-        .observe(obsH, max(col("h")).as("mx"))
-        .stage(s"hits:h${2 * t - 1}") // read by the rescale + next half-round
-      // Empty-graph guard: max over zero rows observes null — any
-      // positive literal serves, the rescale projects zero rows anyway.
-      def mxLit(v: Any): java.math.BigInteger =
-        Option(v).map(x => new java.math.BigDecimal(x.toString).toBigInteger)
+      // The ∞-norm scalar is observed on each half-round's own staging
+      // job (`Stage.observed`), not a separate 1-row aggregate. The
+      // literal is rendered in plain digits (round 1's sums are
+      // DECIMAL(38,0) scale 0, later rounds LONG), so the `div`
+      // arithmetic is unchanged. Empty-graph guard: max over zero rows
+      // observes null — any positive literal serves, the rescale
+      // projects zero rows anyway.
+      def mxLit(obs: Row): java.math.BigInteger =
+        Option(obs.get(0)).map(x => new java.math.BigDecimal(x.toString).toBigInteger)
           .getOrElse(java.math.BigInteger.ONE)
-      val hmx = mxLit(obsH.get("mx"))
+      val (hr, hmx) = Stage.observed(e.join(a, Seq("p"))
+          .groupBy("c").agg(sum(col("a")).as("h")),
+        s"hits:h${2 * t - 1}", max(col("h"))) // read by the rescale + next half-round
       h = hr.select(col("c"),
         expr(s"CAST((CAST(h AS DECIMAL(38,0)) * 1000000) div " +
-          s"CAST($hmx AS DECIMAL(38,0)) AS BIGINT)").as("h"))
-      val obsA = org.apache.spark.sql.Observation(s"hits_a_$t")
-      val ar = e.join(h, Seq("c"))
-        .groupBy("p").agg(sum(col("h")).as("a"))
-        .observe(obsA, max(col("a")).as("mx"))
-        .stage(s"hits:h${2 * t}")
-      val amx = mxLit(obsA.get("mx"))
+          s"CAST(${mxLit(hmx)} AS DECIMAL(38,0)) AS BIGINT)").as("h"))
+      val (ar, amx) = Stage.observed(e.join(h, Seq("c"))
+          .groupBy("p").agg(sum(col("h")).as("a")),
+        s"hits:h${2 * t}", max(col("a")))
       a = ar.select(col("p"),
         expr(s"CAST((CAST(a AS DECIMAL(38,0)) * 1000000) div " +
-          s"CAST($amx AS DECIMAL(38,0)) AS BIGINT)").as("a"))
+          s"CAST(${mxLit(amx)} AS DECIMAL(38,0)) AS BIGINT)").as("a"))
     }
     val hubDeg = e.groupBy(col("c")).agg(count(lit(1)).as("deg"))
     val authDeg = e.groupBy(col("p")).agg(count(lit(1)).as("deg"))
@@ -828,17 +816,17 @@ object Graph {
     // frontier once empty stays empty, so every deeper layer is an
     // empty relation contributing zero rows to `all` below, and every
     // backward round over it is a no-op — skipping both computes the
-    // same integers. `isEmpty` reads the just-checkpointed blocks.
+    // same integers. The layer's row count is observed on its staging.
     var exhausted = false
     for (t <- 1 to maxDepth if !exhausted) {
-      val expand = layers.last
+      val (expand, n) = Stage.observed(layers.last
         .join(sym.select(col("u").as("node"), col("v").as("nxt")),
           Seq("node"))
         .groupBy(col("src"), col("nxt").as("node"))
         .agg(sum("sigma").as("sigma"))
-        .join(visited, Seq("src", "node"), "left_anti")
-        .stage(s"betweenness:r$t")
-      if (expand.isEmpty) exhausted = true
+        .join(visited, Seq("src", "node"), "left_anti"),
+        s"betweenness:r$t", count(lit(1)))
+      if (n.getLong(0) == 0) exhausted = true
       else layers = layers :+ expand
     }
     val depth = layers.size - 1
@@ -1139,14 +1127,13 @@ object Graph {
     * Fixed-round + certificate contract (the q223/q236/q285 house
     * posture): `rounds` Borůvka rounds run; within each round the
     * selected edges' component graph is collapsed EXACTLY — min-label
-    * propagation to fixpoint with the [[ConnectedComponents]]
-    * Observation idiom (the convergence check rides the round's own
-    * materialization job; a silent partial merge is NOT acceptable
-    * here, because a split label could re-select an edge INSIDE its
-    * true component next round and the "forest" would quietly gain a
-    * cycle — the classic bounded-pointer-jumping bug). Selection
-    * graphs are pseudo-forests of components, so the fixpoint arrives
-    * in O(chain length) cheap label-graph-sized hops. The output is
+    * propagation to fixpoint by [[ConnectedComponents.hashMin]] (a
+    * silent partial merge is NOT acceptable here, because a split
+    * label could re-select an edge INSIDE its true component next round
+    * and the "forest" would quietly gain a cycle — the classic
+    * bounded-pointer-jumping bug). Selection graphs are pseudo-forests
+    * of components, so the fixpoint arrives in O(chain length) cheap
+    * label-graph-sized hops. The output is
     * the per-round trajectory — components before, cross-component
     * edges, edges added, support volume added, components after,
     * cumulative forest size — so convergence (`n_cross_edges` → 0,
@@ -1205,39 +1192,17 @@ object Graph {
         .join(lbl.select(col("node").as("u"), col("l").as("lu")), Seq("u"))
         .join(lbl.select(col("node").as("v"), col("l").as("lv")), Seq("v"))
         .select(col("lu"), col("lv"))
-      val lg = selLab.select(col("lu").as("a"), col("lv").as("b"))
-        .unionAll(selLab.select(col("lv").as("a"), col("lu").as("b")))
+      val lg = selLab.select(col("lu").as("src"), col("lv").as("dst"))
+        .unionAll(selLab.select(col("lv").as("src"), col("lu").as("dst")))
         .stage(s"boruvka:lg-r$r") // read by every hash-min hop
-      // lmap is read twice per hop (neighbor min, left side); each hop's
-      // staging stamps its measured size, so the plan's size estimate
-      // cannot compound across hops.
-      var lmap = lbl.select(col("l")).distinct()
-        .select(col("l"), col("l").as("m")).stage(s"boruvka:lmap-r$r")
-      var changed = 1L
-      var hop = 0
-      while (changed > 0 && hop < mergeCap) {
-        val nbrMin = lg
-          .join(lmap.select(col("l").as("b"), col("m").as("mb")), Seq("b"))
-          .groupBy("a").agg(min("mb").as("nm"))
-        // (A pointer-doubling m[m[l]] term was tried in r16 and
-        // REVERTED: on these star/chain-shaped component graphs the
-        // hash-min converges in a handful of hops, so the extra
-        // per-hop self-join cost more than the hops it saved —
-        // measured +1.8s in-suite at sf0.1.)
-        val obs = org.apache.spark.sql.Observation(s"boruvka_r${r}_h$hop")
-        val updated = lmap
-          .join(nbrMin.select(col("a").as("l"), col("nm")), Seq("l"), "left")
-          .select(col("l"), col("m"),
-            least(col("m"), coalesce(col("nm"), col("m"))).as("nm2"))
-          .observe(obs, count(when(col("nm2") < col("m"), 1)).as("changed"))
-          .stage(s"boruvka:hop-r${r}h$hop") // materializes; the observation fires here
-        changed = obs.get("changed").asInstanceOf[Long]
-        lmap = updated.select(col("l"), col("nm2").as("m"))
-        hop += 1
-      }
+      val lmap = lbl.select(col("l")).distinct()
+        .select(col("l").as("node"), col("l").as("label")).stage(s"boruvka:lmap-r$r")
+      val (merged, changed) =
+        ConnectedComponents.hashMin(lg, lmap, mergeCap, s"boruvka:hop-r${r}h")
       require(changed == 0,
         s"boruvka merge did not converge within $mergeCap hops (round $r)")
-      lbl = lbl.join(lmap, Seq("l")).select(col("node"), col("m").as("l"))
+      lbl = lbl.join(merged.select(col("node").as("l"), col("label").as("m")), Seq("l"))
+        .select(col("node"), col("m").as("l"))
         .stage(s"boruvka:r$r")
       // coalesce: an edgeless input aggregates an EMPTY union (one
       // all-NULL row) — a NULL long renders as pandas float64 in the

@@ -3,7 +3,7 @@ package graft.operators
 import scala.util.control.NonFatal
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftExpressionBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge, Observation, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -32,6 +32,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    staging cost by operator and round. Labels read `operator:part`
   *    for a one-off staging and `operator:r<round>` inside a loop
   *    (`kcore:r7`, `hits:h3`, `lpa:r2`).
+  *
+  * A loop that needs a scalar of its round (a changed count, a norm, a
+  * frontier size) stages that round with [[observed]], which reads the
+  * scalar from the staging job itself. It pays the +6–14% above, so it
+  * is used only where it replaces a separate action on the relation.
   */
 private[graft] object Stage {
   private val DescriptionKey = "spark.job.description"
@@ -59,6 +64,17 @@ private[graft] object Stage {
   def storedBytes(rdd: RDD[_]): Long =
     try GraftExpressionBridge.storageInfo(rdd).map(i => i.memSize + i.diskSize).sum
     catch { case NonFatal(_) => 0L }
+
+  /** [[local]] that also returns `metrics`, aggregates over `df`'s rows,
+    * as one `Row` in their order, observed by the job that materializes
+    * the staging. The unnamed `Observation` takes a fresh UUID name, so
+    * repeated calls in one query (q285/q291's BFS passes) never share
+    * one. */
+  def observed(df: DataFrame, label: String, metrics: Column*): (DataFrame, Row) = {
+    val o = Observation()
+    val staged = local(df.observe(o, metrics.head, metrics.tail: _*), label)
+    (staged, GraftExpressionBridge.observedRow(o))
+  }
 
   implicit final class StageOps(private val df: DataFrame) extends AnyVal {
     def stage(label: String): DataFrame = local(df, label)

@@ -14,7 +14,9 @@ import org.apache.spark.storage.RDDInfo
   * partition-key distinct count, and for `graft.operators.Stage`, which
   * wraps a staged relation re-stamped with its measured size.
   * `storageInfo` re-exports the one-RDD `getRDDStorageInfo` lookup
-  * (`private[spark]`) that `Stage` measures those sizes with. No Spark
+  * (`private[spark]`) that `Stage` measures those sizes with, and
+  * `observedRow` the `private[sql]` `Observation.getRow` that
+  * `Stage.observed` reads its metrics with, in declaration order. No Spark
   * behavior is modified.
   */
 object GraftExpressionBridge {
@@ -27,4 +29,5 @@ object GraftExpressionBridge {
     classic.Dataset.ofRows(classicSession(spark), plan)
   def storageInfo(rdd: RDD[_]): Seq[RDDInfo] =
     rdd.context.getRDDStorageInfo(_.id == rdd.id).toSeq
+  def observedRow(o: Observation): Row = o.getRow
 }
