@@ -65,14 +65,15 @@ private[graft] object Stage {
     try GraftExpressionBridge.storageInfo(rdd).map(i => i.memSize + i.diskSize).sum
     catch { case NonFatal(_) => 0L }
 
-  /** [[local]] that also returns `metrics`, aggregates over `df`'s rows,
-    * as one `Row` in their order, observed by the job that materializes
-    * the staging. The unnamed `Observation` takes a fresh UUID name, so
-    * repeated calls in one query (q285/q291's BFS passes) never share
-    * one. */
-  def observed(df: DataFrame, label: String, metrics: Column*): (DataFrame, Row) = {
+  /** [[local]] that also returns `first` and `rest`, aggregates over
+    * `df`'s rows, as one `Row` in their order, observed by the job that
+    * materializes the staging. The unnamed `Observation` takes a fresh
+    * UUID name, so repeated calls in one query (q285/q291's BFS passes)
+    * never share one. */
+  def observed(df: DataFrame, label: String, first: Column, rest: Column*)
+      : (DataFrame, Row) = {
     val o = Observation()
-    val staged = local(df.observe(o, metrics.head, metrics.tail: _*), label)
+    val staged = local(df.observe(o, first, rest: _*), label)
     (staged, GraftExpressionBridge.observedRow(o))
   }
 

@@ -201,187 +201,24 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  // ---- suite-wide audits: each reads RegistryWalk's one build of every
+  // ---- registered query at sf0.001 ----------------------------------------
+
   test("suite-wide: every window in every registered query is keyed or limit-bounded") {
     // The one scale-killer Spark hands out silently is the unpartitioned
     // window (one task owns the whole relation). Audit EVERY registered
     // query's optimized plan: a Window must either be keyed or sit above
     // a GlobalLimit (the contractual ≤k-row rank idiom). This subsumes
     // the per-query pins and gates every future registration.
-    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, q) =>
-        q(spark, sf001).queryExecution.optimizedPlan.collect {
-          case w: org.apache.spark.sql.catalyst.plans.logical.Window
-            if w.partitionSpec.isEmpty && w.child.collectFirst {
-              case g: org.apache.spark.sql.catalyst.plans.logical.GlobalLimit => g
-            }.isEmpty => name
-        }
-    }.distinct
+    val offenders = RegistryWalk.offenders(RegistryWalk.all)((_, f) =>
+      Option.when(f.unkeyedWindows > 0)(s"${f.unkeyedWindows} unpartitioned"))
     assert(offenders.isEmpty,
       s"unbounded unpartitioned windows in: ${offenders.mkString(", ")}")
   }
 
-  // ---- low-cardinality window audit machinery (shared by the suite-
-  // ---- wide test and its negative specs) --------------------------------
-
-  /** A partition key with ≤ this many distinct values at sf0.001 is a
-    * low-cardinality CANDIDATE (the fixed-domain columns — side, market
-    * segment, ship mode, language, source — all measure 2–20 there);
-    * whether it is an OFFENDER is decided by the growth probe below. */
-  private val LowCardWindowThreshold = 24L
-
-  /** A candidate whose distinct count grows by at least this factor
-    * from sf0.001 to sf0.01 is an ENTITY key merely small at the tiny
-    * fixture (users 15→150, suppliers 10→100) — per-group rows stay
-    * bounded as data grows, so it is exempt. A fixed-domain key stays
-    * flat (source 20→20, priority 5→5) and is flagged. */
-  private val GrowthExemptRatio = 1.5
-
-  /** Partition keys whose group count is fixed by CONTRACT and whose
-    * per-group child rows are bounded by construction, not corpus-
-    * scale: the retrieval/ANN probe set — every query_id's child is
-    * its own ≤ k·cells candidate sliver (the q37 contract), so the
-    * window state per group is k-bounded at any corpus size. The one
-    * documented exception class; anything else fixed-domain must use
-    * GroupedPrefix / saltedTopKPerGroup. */
-  private val BoundedChildKeys = Set("query_id")
-
-  /** Measured distinct-count probes are memoized on the child plan's
-    * semantic hash — machinery shared across queries (staged tiers)
-    * probes once per suite run. */
-  private val probeCache =
-    scala.collection.mutable.Map.empty[(Int, Seq[String]), Long]
-
-  private def attrName(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Option[String] = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
-      Alias, Literal}
-    e match {
-      case a: AttributeReference => Some(a.name)
-      case a: Alias => Some(a.name)
-      case _: Literal => Some("__lit__")
-      case _ => None
-    }
-  }
-
-  /** Distinct count of `w`'s partition tuple over its OWN child plan,
-    * executed through the bridge. */
-  private def probeDistinct(
-      w: org.apache.spark.sql.catalyst.plans.logical.Window): Long = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Project, Distinct}
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
-      Alias, NamedExpression}
-    val key = (w.child.semanticHash(), w.partitionSpec.map(_.sql))
-    probeCache.getOrElseUpdate(key, {
-      val aliased: Seq[NamedExpression] =
-        w.partitionSpec.zipWithIndex.map {
-          case (a: AttributeReference, _) => a
-          case (e, i) => Alias(e, s"__p$i")()
-        }
-      org.apache.spark.sql.GraftExpressionBridge
-        .dataFrame(spark, Distinct(Project(aliased, w.child))).count()
-    })
-  }
-
-  /** Windows surviving the STRUCTURAL exemptions — each one bounds the
-    * per-group task state by construction:
-    * (a) a GlobalLimit below (the contractual ≤k-row rank idiom);
-    * (b) phase 2 of the salted grouped top-k — an inner window keyed by
-    *     strictly MORE columns has already cut the child to ≤ k·salts
-    *     rows per group;
-    * (c) a collapsed value spine — an Aggregate below whose grouping
-    *     keys strictly contain the partition keys (matched by OUTPUT
-    *     name or exprId, so `groupBy(col("x").as("p"))` spines are
-    *     seen), i.e. the child is a distinct-value domain, not the
-    *     corpus;
-    * (d) an engineered `__`-prefixed partition column (`__rng`,
-    *     `__salt`, …): the scale operators' OWN machinery, whose range
-    *     ids / salt cells are constructed to bound per-task rows — the
-    *     very mechanism this audit pushes queries toward. */
-  private def unboundedWindows(df: org.apache.spark.sql.DataFrame)
-      : Seq[org.apache.spark.sql.catalyst.plans.logical.Window] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow,
-      GlobalLimit, Aggregate}
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
-      Alias, NamedExpression, Expression}
-    def isGroupingOutput(ag: Aggregate, ne: NamedExpression): Boolean =
-      ne match {
-        case ar: AttributeReference =>
-          ag.groupingExpressions.exists(_.semanticEquals(ar))
-        case al: Alias =>
-          ag.groupingExpressions.exists(g =>
-            g.semanticEquals(al.child) || g.semanticEquals(al))
-        case _ => false
-      }
-    def spineCovers(ag: Aggregate, p: Expression): Boolean = p match {
-      case a: AttributeReference =>
-        ag.aggregateExpressions.exists(ne =>
-          isGroupingOutput(ag, ne) &&
-            (ne.exprId == a.exprId || ne.name == a.name))
-      case _ => false
-    }
-    df.queryExecution.optimizedPlan.collect {
-      // An EMPTY spec covers the planted partitionBy(lit(1)) case: the
-      // optimizer folds a constant partition key away, so the
-      // degenerate single-group window arrives with no keys at all
-      // (cardinality 1 — the limiting case of low).
-      case w: LWindow
-        if w.child.collectFirst { case g: GlobalLimit => g }.isEmpty &&
-          w.child.collectFirst { case w2: LWindow
-            if w2.partitionSpec.size > w.partitionSpec.size => w2
-          }.isEmpty &&
-          w.child.collectFirst { case ag: Aggregate
-            if ag.groupingExpressions.size > w.partitionSpec.size &&
-              w.partitionSpec.nonEmpty &&
-              w.partitionSpec.forall(p => spineCovers(ag, p)) => ag
-          }.isEmpty &&
-          !w.partitionSpec.exists(p =>
-            attrName(p).exists(_.startsWith("__"))) &&
-          !(w.partitionSpec.nonEmpty && w.partitionSpec.forall(p =>
-            attrName(p).exists(BoundedChildKeys))) => w
-    }
-  }
-
-  /** The audit proper: MEASURED low cardinality with a growth probe.
-    * `build` constructs the query at a given sf dir; sf0.01 is built
-    * lazily, only when some window measures ≤ threshold at sf0.001.
-    * Offender = a structurally-unbounded window whose partition keys
-    * measure ≤ LowCardWindowThreshold distinct at sf0.001 AND do not
-    * grow ≥ GrowthExemptRatio× at sf0.01 (fixed domain, not an entity
-    * key). Both planted shapes — partitionBy(lit(1)) and a fresh
-    * 3-value column under any name — are caught; entity keys and the
-    * documented exemption classes are not. */
-  private def lowCardWindowOffenders(
-      build: String => org.apache.spark.sql.DataFrame): Seq[String] = {
-    val cands = unboundedWindows(build(sf001))
-    if (cands.isEmpty) return Nil
-    lazy val at01: Map[String, Long] = {
-      try {
-        unboundedWindows(build(sf01))
-          .groupBy(w => w.partitionSpec.flatMap(attrName).mkString(","))
-          .view.mapValues(_.map(probeDistinct).max).toMap
-      } catch { case _: Throwable => Map.empty }
-    }
-    cands.flatMap { w =>
-      val label = w.partitionSpec.flatMap(attrName).mkString(",")
-      if (w.partitionSpec.isEmpty) Some(s"[<folded-constant> single-group]")
-      else {
-        val n001 = probeDistinct(w)
-        if (n001 > LowCardWindowThreshold) None
-        else {
-          val n01 = at01.getOrElse(label, 0L)
-          if (n01.toDouble >= GrowthExemptRatio * n001) None
-          else Some(s"[$label measured $n001@sf0.001, $n01@sf0.01 — " +
-            "fixed-domain]")
-        }
-      }
-    }
-  }
-
   test("suite-wide: no window keyed at measured-low-cardinality over an unbounded child") {
-    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, q) => lowCardWindowOffenders(dir => q(spark, dir))
-        .map(d => s"$name $d")
-    }.distinct
+    val offenders = RegistryWalk.offenders(RegistryWalk.all)((v, f) =>
+      RegistryWalk.lowCardOffenders(f.windowCands, dir => v.query(spark, dir))).distinct
     assert(offenders.isEmpty,
       s"low-cardinality-key windows over unbounded children (use " +
         s"GroupedPrefix or Skew.saltedTopKPerGroup): " +
@@ -391,6 +228,7 @@ class PlanSpec extends SparkSpec {
   test("the low-cardinality window audit catches planted offenders") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, lit, row_number, pmod}
+    import RegistryWalk.lowCardWindowOffenders
     def docs(dir: String) = graft.model.Tables.documents(spark, dir)
     // a constant partition key — the degenerate single-group window
     assert(lowCardWindowOffenders(dir => docs(dir).withColumn("rk",
@@ -425,14 +263,10 @@ class PlanSpec extends SparkSpec {
     // scalar crosses and contract-bounded spines — stay under the
     // observed ceiling of 8 per query, so a new data-sized BNLJ can't
     // slip in as "just one more cross".
-    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, q) =>
-        val p = q(spark, sf001).queryExecution.executedPlan.toString
-        val cart = "CartesianProduct".r.findAllIn(p).size
-        val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(p).size
-        if (cart > 0) Some(s"$name: $cart cartesian")
-        else if (bnlj > 8) Some(s"$name: $bnlj nested-loop crosses")
-        else None
+    val offenders = RegistryWalk.offenders(RegistryWalk.all) { (_, f) =>
+      if (f.cartesians > 0) Some(s"${f.cartesians} cartesian")
+      else if (f.nestedLoops > 8) Some(s"${f.nestedLoops} nested-loop crosses")
+      else None
     }
     assert(offenders.isEmpty,
       s"quadratic join strategies in: ${offenders.mkString(", ")}")

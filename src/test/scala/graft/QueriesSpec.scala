@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** End-to-end sanity over the sf0.001 test tables: every registered query
-  * executes, returns rows with the declared (oracle-matching) column set,
-  * and the flagship entry behaves. The value-level gate is the DuckDB
-  * oracle (graft.Verify + tools/oracle_check.py); this spec catches
-  * schema/registration regressions fast.
+  * has an oracle and returns rows (read from [[RegistryWalk]]'s one
+  * full-plan run of the registry), and the flagship entry behaves. The
+  * value-level gate is the DuckDB oracle (graft.Verify +
+  * tools/oracle_check.py); this spec catches schema/registration
+  * regressions fast.
   */
 class QueriesSpec extends SparkSpec {
 
@@ -33,11 +34,23 @@ class QueriesSpec extends SparkSpec {
     // oracle entry whose query was renamed/removed would silently rot.
     val orphanOracle = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphanOracle.isEmpty, s"oracle entries without query: $orphanOracle")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val df = fn(spark, sf001)
-      val n = df.count()
-      assert(n > 0, s"$name returned no rows on sf0.001")
+    // Jobs each query starts while it is built (eager stagings and any
+    // action of its own), in the walk's name order, so StageCache hits
+    // depend on which query built a shared tier first. Reported only.
+    val buildJobs = RegistryWalk.all.collect {
+      case RegistryWalk.Visit(name, _, Right(f)) => name -> f.buildJobs
     }
+    buildJobs.sortBy { case (name, jobs) => (-jobs.size, name) }.take(10)
+      .foreach { case (name, jobs) => info(s"$name: ${jobs.size} jobs at build") }
+    buildJobs.flatMap { case (name, jobs) =>
+      jobs.filter(_.label == null).map(j => j.site -> name)
+    }.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (site, hits) =>
+      val names = hits.map(_._2).distinct
+      info(s"unlabelled at build, $site: ${hits.size} jobs in ${names.size} " +
+        s"queries: ${names.mkString(" ")}")
+    }
+    val empty = RegistryWalk.emptyResults(RegistryWalk.all)
+    assert(empty.isEmpty, empty.mkString(", "))
   }
 
   test("moving average and Bollinger bands are internally consistent") {

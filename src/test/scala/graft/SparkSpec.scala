@@ -10,12 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
-  lazy val sf001 = "/root/testdata/sf0.001"
-  lazy val sf01 = "/root/testdata/sf0.01"
+  lazy val sf001 = SparkSpec.Sf001
+  lazy val sf01 = SparkSpec.Sf01
 }
 
 object SparkSpec {
   val Cores = 4
+  val Sf001 = "/root/testdata/sf0.001"
+  val Sf01 = "/root/testdata/sf0.01"
 
   lazy val session: SparkSession = {
     // Keep catalog artifacts (derby metastore, warehouse) out of the repo.

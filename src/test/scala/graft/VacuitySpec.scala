@@ -6,7 +6,8 @@ package graft
   * still hash-matches; q155 passed vacuously for a round this way).
   * `tools/oracle_check.py` enforces the same invariant at sf0.01 on the
   * actual oracle dump; this spec catches the regression in-suite, before
-  * a verify round.
+  * a verify round, from the row counts of [[RegistryWalk]]'s one
+  * full-plan run of the registry.
   *
   * A query that is legitimately empty at this scale must be whitelisted
   * here AND in oracle_check.py's EMPTY_BY_DESIGN, with a comment saying
@@ -18,14 +19,7 @@ class VacuitySpec extends SparkSpec {
   private val emptyByDesign: Set[String] = Set.empty
 
   test("every registered query returns >= 1 row at sf0.001") {
-    val vacuous = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if emptyByDesign(name) => None
-      case (name, fn) =>
-        val empty =
-          try fn(spark, sf001).isEmpty
-          catch { case e: Throwable => fail(s"$name threw: ${e.getMessage}") }
-        if (empty) Some(name) else None
-    }
+    val vacuous = RegistryWalk.vacuous(RegistryWalk.all, emptyByDesign)
     assert(vacuous.isEmpty,
       s"queries with 0 rows at sf0.001 (vacuous oracle match): $vacuous")
   }
